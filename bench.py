@@ -263,6 +263,9 @@ def main() -> None:
     _sweep_checkpoints()  # warmups leave blocks too
     for qi, name in enumerate(names + tier2):
         best = float("inf")
+        # back-to-back reps of one query find its generated classes still
+        # in the codegen cache, so min-of-reps cannot show cache thrash
+        # across a mixed query sequence (janino_compiles below can)
         for rep in range(reps_headline if name in set(names) else reps):
             t0 = time.perf_counter()
             fns[name](spark, sf_dir).count()
@@ -287,6 +290,13 @@ def main() -> None:
     # bench silently clobbered the builder's uncommitted BENCH_LOCAL —
     # same code, but the provenance was gone)
     run_id = "%d-%d" % (int(time.time()), os.getpid())
+    # Janino compiles (= codegen cache misses) and their total time over
+    # the whole session, warm-ups included.  The time comes from
+    # CodeGenerator's nanosecond total: CodegenMetrics' histogram
+    # truncates each compile to whole milliseconds.
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    compile_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     summary = {
         "metric": "headline_queries_total",
         "value": total,
@@ -296,6 +306,8 @@ def main() -> None:
         "n_queries": len(names) + len(tier2),
         "sf": float(sf),
         "run_id": run_id,
+        "janino_compiles": compiles,
+        "janino_compile_s": round(compile_ns / 1e9, 3),
     }
     # value = headline min-of-reps subtotal (methodology since r4, list
     # pinned for cross-round comparability); tier2_total covers every

@@ -64,12 +64,21 @@ def copurchase_pairs(
     sorted item set.  Higher-order functions are interpreted, but the
     per-element work here is one struct per pair over ≤ k_i-sized
     arrays (TPC-H: ≤ 7) — measured at sf0.1 the HOF expansion matches
-    the basket self-join's cost while saving its exchange.  The
-    hot-basket risk profile is unchanged from the join shape: a basket
-    of k frequent items produces k²/2 pair rows either way, and the
-    apriori prune is what bounds k (its conservative raw-count variant
-    keeps a superset of the exactly-pruned items; any extra survivor's
-    pairs die at the final support filter, so output is identical).
+    the basket self-join's cost while saving its exchange.
+
+    Hot baskets cost more per row than in the join shape.  A basket of
+    k frequent items still yields k(k-1)/2 pair rows, but the join
+    streamed them one row at a time, while ``_exploded_pairs`` first
+    builds all k(k-1)/2 pair structs inside ONE array value of ONE row
+    before the explode.  That value takes about 32 bytes per pair for
+    fixed-width keys (an 8-byte slot plus a 24-byte two-field struct;
+    string keys add their bytes), and ``flatten`` briefly holds a
+    second copy.  It cannot spill and must fit one task's memory: k =
+    2,000 gives ~64 MB, and k ≈ 11,500 reaches Spark's 2 GiB limit on a
+    single array.  The apriori prune is what bounds k (its conservative
+    raw-count variant keeps a superset of the exactly-pruned items; any
+    extra survivor's pairs die at the final support filter, so output
+    is identical).
     """
     counts = (
         items.groupBy(item_col)

@@ -60,17 +60,6 @@ DEFAULT_TYPES: tuple[CollectionType, ...] = (
 )
 
 
-def probes_df(spark: SparkSession, types: tuple[CollectionType, ...]) -> DataFrame:
-    rows = [
-        (t.name, float(t.priority), p, len(t.probes))
-        for t in types
-        for p in t.probes
-    ]
-    return spark.createDataFrame(
-        rows, "type_name string, priority double, probe string, n_probes int"
-    )
-
-
 def infer_collection_types(
     listing: DataFrame,
     spark: SparkSession,

@@ -37,12 +37,6 @@ ALLOWED_TRANSITIONS: list[tuple[str, str]] = [
 ]
 
 
-def transitions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ALLOWED_TRANSITIONS, "from_status string, to_status string"
-    )
-
-
 def apply_status_updates(
     entities: DataFrame,
     updates: DataFrame,

@@ -13,19 +13,34 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULTS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+# Runtime-settable: get_spark sets these, pin_session_conf re-pins them.
+_PINNED = {
+    "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # size shuffles to cores (the 200 default over-parallelizes local runs)
+    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     # Harmless for current timestamp[us] testdata (only applies to NANOS
     # columns); kept so older TIMESTAMP(NANOS) testdata still loads — see
     # tables.load_table, which normalizes both shapes.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+_DEFAULTS = {  # builder-only keys on top
+    **_PINNED,
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.ui.enabled": "false",
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # LRU bound on compiled whole-stage/projection classes (default 100).
+    # A mixed query sequence cycles through more distinct classes than
+    # that, so each class is evicted before its query runs again and
+    # re-pays its Janino compile and JIT warm-up.  Measured 2026-10-17
+    # (local[4]): one sf0.01 sweep of all 334 queries in one session
+    # compiles 5,395 distinct classes.  Memory follows the classes actually
+    # cached, not the bound: Metaspace after that sweep is 226 MB, against
+    # 186 MB at the default.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 
@@ -42,19 +57,12 @@ def get_spark(app_name: str = "ingest_pipeline_spark", master: str | None = None
 
 
 def pin_session_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to an externally-provided session.
+    """Apply the runtime-settable defaults to an externally-provided session.
 
-    The correctness driver hands us its own SparkSession; timezone and
-    AQE flags are runtime-settable, so pin them here for oracle parity.
+    The correctness driver hands us its own SparkSession; pin _PINNED here
+    for oracle parity.  Static keys, the codegen cache bound included,
+    cannot be pinned on a session built elsewhere: it keeps its own.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # back-compat for TIMESTAMP(NANOS) testdata; no-op on timestamp[us] —
-    # see tables.load_table, which normalizes both shapes
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # size shuffles to cores (the 200 default over-parallelizes local runs)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    for k, v in _PINNED.items():
+        spark.conf.set(k, v)
     return spark

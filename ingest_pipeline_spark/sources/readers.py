@@ -475,12 +475,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def read_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Plain parquet directory scan (non-table data; the canonical
-    tables go through tables.load_table for NTZ normalization)."""
-    return spark.read.parquet(path)
-
-
 def read_json_with_deadletter(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:
