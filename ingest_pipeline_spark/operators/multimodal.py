@@ -38,10 +38,11 @@ CASE on magic bytes, not N passes.
 
 from __future__ import annotations
 
+import math
 import struct
 
 from collections import Counter
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -416,50 +417,13 @@ def _image_decode_dispatch(b: bytes) -> tuple[int, int, int, int, bytes]:
     return png_decode(b)
 
 
-def decode_image_features(assets: DataFrame) -> DataFrame:
-    """REAL image decode over the mapInPandas harness: PNG media is
-    fully decoded (inflate + unfilter + palette expansion), TIFF media
-    is strip-decoded (IFD walk + Deflate/LZW strips + Predictor 2,
-    both byte orders — ``tiff_decode`` below), baseline JPEG is
-    huffman+IDCT-decoded (``jpeg_decode``), and all reduce to exact
-    integer pixel statistics; undecodable/unsupported media flows to
-    (decode_ok=false, error) rows instead of failing the job — the
-    corrupt-input-tolerant extractor discipline of
-    operators/extractors.py.  Format dispatch is by magic bytes, one
-    pass.  All stats are integers (px_sum exact bigint), so downstream
-    oracles never touch float hazards.
-    """
-    out_schema = (
-        "asset_id long, width int, height int, channels int, "
-        "bit_depth int, px_sum long, px_min int, px_max int, "
-        "decode_ok boolean, error string"
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, ch, bd, px = _image_decode_dispatch(b)
-                    rows.append(
-                        (aid, w, h, ch, bd, sum(px), min(px), max(px),
-                         True, None)
-                    )
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, None, None, None, None, None,
-                         False, str(e)[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "channels", "bit_depth",
-                    "px_sum", "px_min", "px_max", "decode_ok", "error",
-                ],
-            )
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
+# ---------------------------------------------------------------------------
+# The one Arrow harness every codec stage runs through.  A decoder is a
+# kernel ``fn(media bytes) -> list of feature tuples`` handed to
+# _per_asset; an encoder is a kernel ``fn(id, vector) -> media bytes``
+# handed to _encode_each.  A new codec feature is a new kernel, never a
+# new mapInPandas loop (tests/test_query_corpus_decode_ok.py pins this).
+# ---------------------------------------------------------------------------
 
 
 def _spread(df: DataFrame, id_col: str, heavy: bool = False) -> DataFrame:
@@ -489,6 +453,113 @@ def _spread(df: DataFrame, id_col: str, heavy: bool = False) -> DataFrame:
     return df.repartition(width, F.col(id_col))
 
 
+def _per_asset(
+    assets: DataFrame, features: str, fn: Callable[[bytes], list]
+) -> DataFrame:
+    """Run a decode kernel over (asset_id, media) in one mapInPandas.
+
+    ``features`` is the DDL of the kernel's columns (flat: no comma
+    inside a type); the stage emits ``asset_id long, <features>,
+    decode_ok boolean, error string``.  ``fn(media bytes)`` returns one
+    feature tuple per output row (zero rows is allowed); NULL media
+    decodes as b"".  A kernel ValueError degrades to ONE row
+    (asset_id, NULL per feature, false, message[:200]) instead of
+    failing the job — the corrupt-input-tolerant extractor discipline
+    of operators/extractors.py.  Column names and the error-row width
+    come from ``features`` alone, so they cannot drift apart."""
+    feats = [c.split()[0] for c in features.split(",")]
+    cols = ["asset_id", *feats, "decode_ok", "error"]
+    nulls = (None,) * len(feats)
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
+                try:
+                    out = fn(bytes(buf) if buf is not None else b"")
+                except ValueError as e:
+                    rows.append((aid, *nulls, False, str(e)[:200]))
+                    continue
+                rows.extend((aid, *t, True, None) for t in out)
+            yield pd.DataFrame(rows, columns=cols)
+
+    return assets.select("asset_id", "media").mapInPandas(
+        extract, f"asset_id long, {features}, decode_ok boolean, error string"
+    )
+
+
+def _encode_each(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    fn: Callable[[int, object], bytes],
+    heavy: bool = False,
+) -> DataFrame:
+    """Run an encode kernel ``fn(id, vector) -> media bytes`` over
+    (id_col, vec_col) after ``_spread``, emitting (asset_id, media)."""
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = list(pdf[id_col])
+            blobs = [fn(aid, vec) for aid, vec in zip(ids, pdf[vec_col])]
+            yield pd.DataFrame({"asset_id": ids, "media": blobs})
+
+    return _spread(emb.select(id_col, vec_col), id_col, heavy).mapInPandas(
+        encode, "asset_id long, media binary"
+    )
+
+
+def _u8(vec) -> bytes:
+    """Embedding samples -> 8-bit pixels, clamp(floor((v + 1) * 127.5),
+    0, 255): floor, not round, so the oracles' ``_u8_sql`` reproduces
+    the quantization exactly."""
+    return bytes(
+        min(255, max(0, math.floor((float(v) + 1.0) * 127.5))) for v in vec
+    )
+
+
+def _tiles8(vals: bytes, tiles_per_row: int) -> tuple[int, int, bytes]:
+    """Lay u8 samples out row-major as CONSTANT 8x8 tiles, ``tiles_per_row``
+    wide -> (width, height, pixels); a ragged last row stays 0.  The
+    JPEG/MJPEG/H.264 corpus shape: the DCT of a constant block is
+    DC-only and DC survives q=1, so even the lossy codec is exact."""
+    th = (len(vals) + tiles_per_row - 1) // tiles_per_row
+    w = tiles_per_row * 8
+    img = bytearray(w * th * 8)
+    for t, v in enumerate(vals):
+        ty, tx = divmod(t, tiles_per_row)
+        for r in range(8):
+            row = (ty * 8 + r) * w + tx * 8
+            img[row : row + 8] = bytes([v]) * 8
+    return w, th * 8, bytes(img)
+
+
+def decode_image_features(assets: DataFrame) -> DataFrame:
+    """REAL image decode over the mapInPandas harness: PNG media is
+    fully decoded (inflate + unfilter + palette expansion), TIFF media
+    is strip-decoded (IFD walk + Deflate/LZW strips + Predictor 2,
+    both byte orders — ``tiff_decode`` below), baseline JPEG is
+    huffman+IDCT-decoded (``jpeg_decode``), and all reduce to exact
+    integer pixel statistics; undecodable/unsupported media flows to
+    (decode_ok=false, error) rows instead of failing the job — the
+    corrupt-input-tolerant extractor discipline of
+    operators/extractors.py.  Format dispatch is by magic bytes, one
+    pass.  All stats are integers (px_sum exact bigint), so downstream
+    oracles never touch float hazards.
+    """
+
+    def kernel(b):
+        w, h, ch, bd, px = _image_decode_dispatch(b)
+        return [(w, h, ch, bd, sum(px), min(px), max(px))]
+
+    return _per_asset(
+        assets,
+        "width int, height int, channels int, bit_depth int, px_sum long, "
+        "px_min int, px_max int",
+        kernel,
+    )
+
+
 def embeddings_to_png(
     emb: DataFrame,
     width: int = 8,
@@ -496,31 +567,18 @@ def embeddings_to_png(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Render each embedding as a grayscale PNG (asset_id, media):
-    samples quantized px = clamp(floor((v + 1) * 127.5), 0, 255) —
-    floor, not round, so DuckDB reproduces the quantization exactly —
-    laid out row-major at the given width.  The preview-thumbnail
-    writer shape: mapInPandas, row-local, scan-bound at any scale.
+    samples quantized by ``_u8`` (clamp(floor((v + 1) * 127.5), 0,
+    255)), laid out row-major at the given width.  The
+    preview-thumbnail writer shape: mapInPandas, row-local, scan-bound
+    at any scale.
     """
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def kernel(aid, vec):
+        px = _u8(vec)
+        h = len(px) // width
+        return png_encode(width, h, 1, px[: width * h])
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                vals = [float(v) for v in vec]
-                px = bytes(
-                    min(255, max(0, math.floor((v + 1.0) * 127.5)))
-                    for v in vals
-                )
-                h = len(px) // width
-                ids.append(aid)
-                blobs.append(png_encode(width, h, 1, px[: width * h]))
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 def wav_encode(samples: "list[int]", rate: int = 16000) -> bytes:
@@ -603,23 +661,13 @@ def embeddings_to_wav(
     row-local, scan-bound at any scale (embeddings_to_png's audio twin).
     """
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def kernel(aid, vec):
+        return wav_encode(
+            [min(32767, max(-32768, math.floor(float(v) * 32767.0))) for v in vec],
+            rate,
+        )
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                samples = [
-                    min(32767, max(-32768, math.floor(float(v) * 32767.0)))
-                    for v in vec
-                ]
-                ids.append(aid)
-                blobs.append(wav_encode(samples, rate))
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 def decode_audio_features(assets: DataFrame) -> DataFrame:
@@ -629,44 +677,22 @@ def decode_audio_features(assets: DataFrame) -> DataFrame:
     min/max); undecodable media degrades to (decode_ok=false, error)
     rows — decode_image_features' audio twin.
     """
-    out_schema = (
-        "asset_id long, channels int, sample_rate int, bit_depth int, "
-        "n_samples long, duration_ms long, amp_sum long, amp_sumsq long, "
-        "amp_min int, amp_max int, decode_ok boolean, error string"
+
+    def kernel(b):
+        ch, rate, bits, sm = wav_decode(b)
+        return [(
+            ch, rate, bits, len(sm), len(sm) * 1000 // (rate * ch),
+            sum(sm), sum(s * s for s in sm),
+            min(sm) if sm else None, max(sm) if sm else None,
+        )]
+
+    return _per_asset(
+        assets,
+        "channels int, sample_rate int, bit_depth int, n_samples long, "
+        "duration_ms long, amp_sum long, amp_sumsq long, amp_min int, "
+        "amp_max int",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    ch, rate, bits, sm = wav_decode(b)
-                    rows.append(
-                        (
-                            aid, ch, rate, bits, len(sm),
-                            len(sm) * 1000 // (rate * ch),
-                            sum(sm), sum(s * s for s in sm),
-                            min(sm) if sm else None,
-                            max(sm) if sm else None,
-                            True, None,
-                        )
-                    )
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, None, None, None, None, None,
-                         None, None, False, str(e)[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "channels", "sample_rate", "bit_depth",
-                    "n_samples", "duration_ms", "amp_sum", "amp_sumsq",
-                    "amp_min", "amp_max", "decode_ok", "error",
-                ],
-            )
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1033,44 +1059,21 @@ def embeddings_to_tiff(
     id%3==2 → LZW strips + Predictor 2 + big-endian.  rows_per_strip=3
     forces multi-strip layout on the 8-row images.
     """
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                px = bytes(
-                    min(255, max(0, math.floor((float(v) + 1.0) * 127.5)))
-                    for v in vec
-                )
-                h = len(px) // width
-                residue = int(aid) % 3
-                if residue == 0:
-                    blob = tiff_encode(
-                        width, h, px[: width * h],
-                        compression="deflate", rows_per_strip=3,
-                        predictor=2, byte_order="<",
-                    )
-                elif residue == 1:
-                    blob = tiff_encode(
-                        width, h, px[: width * h],
-                        compression="none", rows_per_strip=3,
-                        predictor=1, byte_order=">",
-                    )
-                else:
-                    blob = tiff_encode(
-                        width, h, px[: width * h],
-                        compression="lzw", rows_per_strip=3,
-                        predictor=2, byte_order=">",
-                    )
-                ids.append(aid)
-                blobs.append(blob)
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
+    variants = (
+        {"compression": "deflate", "predictor": 2, "byte_order": "<"},
+        {"compression": "none", "predictor": 1, "byte_order": ">"},
+        {"compression": "lzw", "predictor": 2, "byte_order": ">"},
     )
+
+    def kernel(aid, vec):
+        px = _u8(vec)
+        h = len(px) // width
+        return tiff_encode(
+            width, h, px[: width * h], rows_per_strip=3,
+            **variants[int(aid) % 3],
+        )
+
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -1318,30 +1321,16 @@ def embeddings_to_czi(
     odd ids → two LZW-compressed bands (exercising both the
     decompression and the mosaic-assembly paths)."""
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def kernel(aid, vec):
+        px = _u8(vec)
+        h = len(px) // width
+        if int(aid) % 2 == 0:
+            return czi_encode(width, h, px[: width * h],
+                              compression="none", n_bands=1)
+        return czi_encode(width, h, px[: width * h],
+                          compression="lzw", n_bands=2)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                px = bytes(
-                    min(255, max(0, math.floor((float(v) + 1.0) * 127.5)))
-                    for v in vec
-                )
-                h = len(px) // width
-                if int(aid) % 2 == 0:
-                    blob = czi_encode(width, h, px[: width * h],
-                                      compression="none", n_bands=1)
-                else:
-                    blob = czi_encode(width, h, px[: width * h],
-                                      compression="lzw", n_bands=2)
-                ids.append(aid)
-                blobs.append(blob)
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 def audio_autocorr_features(
@@ -1354,40 +1343,20 @@ def audio_autocorr_features(
     DuckDB oracle reproduces every value exactly (no FFT floats).
     Same mapInPandas/error-row discipline as decode_audio_features.
     """
-    cols = ", ".join(f"ac{L} long" for L in lags)
-    out_schema = (
-        "asset_id long, n_samples long, energy long, "
-        + cols
-        + ", decode_ok boolean, error string"
+
+    def kernel(b):
+        _ch, _rate, _bits, sm = wav_decode(b)
+        acs = [
+            sum(sm[i] * sm[i + L] for i in range(len(sm) - L)) for L in lags
+        ]
+        return [(len(sm), sum(s * s for s in sm), *acs)]
+
+    return _per_asset(
+        assets,
+        ", ".join(["n_samples long", "energy long",
+                   *(f"ac{L} long" for L in lags)]),
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = (
-            ["asset_id", "n_samples", "energy"]
-            + [f"ac{L}" for L in lags]
-            + ["decode_ok", "error"]
-        )
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    _ch, _rate, _bits, sm = wav_decode(b)
-                    acs = [
-                        sum(sm[i] * sm[i + L] for i in range(len(sm) - L))
-                        for L in lags
-                    ]
-                    rows.append(
-                        (aid, len(sm), sum(s * s for s in sm), *acs, True, None)
-                    )
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, *([None] * len(lags)), False,
-                         str(e)[:200])
-                    )
-            yield pd.DataFrame(rows, columns=names)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def audio_zero_crossing_features(assets: DataFrame) -> DataFrame:
@@ -1400,38 +1369,21 @@ def audio_zero_crossing_features(assets: DataFrame) -> DataFrame:
     sample ORDER is pinned (like the autocorr lag products).  Same
     mapInPandas/error-row discipline as decode_audio_features.
     """
-    out_schema = (
-        "asset_id long, n_samples long, n_zero_crossings long, "
-        "longest_run long, decode_ok boolean, error string"
+
+    def kernel(b):
+        _ch, _rate, _bits, sm = wav_decode(b)
+        signs = [s >= 0 for s in sm]
+        zc = sum(1 for i in range(len(signs) - 1) if signs[i] != signs[i + 1])
+        longest = run = 0
+        for i, sg in enumerate(signs):
+            run = run + 1 if i > 0 and sg == signs[i - 1] else 1
+            longest = max(longest, run)
+        return [(len(sm), zc, longest)]
+
+    return _per_asset(
+        assets, "n_samples long, n_zero_crossings long, longest_run long",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [
-            "asset_id", "n_samples", "n_zero_crossings", "longest_run",
-            "decode_ok", "error",
-        ]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    _ch, _rate, _bits, sm = wav_decode(b)
-                    signs = [s >= 0 for s in sm]
-                    zc = sum(
-                        1
-                        for i in range(len(signs) - 1)
-                        if signs[i] != signs[i + 1]
-                    )
-                    longest = run = 0
-                    for i, sg in enumerate(signs):
-                        run = run + 1 if i > 0 and sg == signs[i - 1] else 1
-                        longest = max(longest, run)
-                    rows.append((aid, len(sm), zc, longest, True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, False, str(e)[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def tile_pixel_stats(assets: DataFrame, tile: int = 4) -> DataFrame:
@@ -1444,41 +1396,28 @@ def tile_pixel_stats(assets: DataFrame, tile: int = 4) -> DataFrame:
     Emits (asset_id, tile_x, tile_y, n_px, px_sum, px_min, px_max,
     decode_ok, error); edge tiles are clamped to image bounds.
     """
-    out_schema = (
-        "asset_id long, tile_x int, tile_y int, n_px int, px_sum long, "
-        "px_min int, px_max int, decode_ok boolean, error string"
+
+    def kernel(b):
+        w, h, ch, _bd, px = _image_decode_dispatch(b)
+        if ch != 1:
+            raise ValueError(f"tile stats need grayscale, got {ch}ch")
+        out = []
+        for ty in range((h + tile - 1) // tile):
+            for tx in range((w + tile - 1) // tile):
+                vals = [
+                    px[y * w + x]
+                    for y in range(ty * tile, min((ty + 1) * tile, h))
+                    for x in range(tx * tile, min((tx + 1) * tile, w))
+                ]
+                out.append((tx, ty, len(vals), sum(vals), min(vals), max(vals)))
+        return out
+
+    return _per_asset(
+        assets,
+        "tile_x int, tile_y int, n_px int, px_sum long, px_min int, "
+        "px_max int",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "tile_x", "tile_y", "n_px", "px_sum",
-                "px_min", "px_max", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, ch, _bd, px = _image_decode_dispatch(b)
-                    if ch != 1:
-                        raise ValueError(f"tile stats need grayscale, got {ch}ch")
-                    for ty in range((h + tile - 1) // tile):
-                        for tx in range((w + tile - 1) // tile):
-                            vals = [
-                                px[y * w + x]
-                                for y in range(ty * tile, min((ty + 1) * tile, h))
-                                for x in range(tx * tile, min((tx + 1) * tile, w))
-                            ]
-                            rows.append(
-                                (aid, tx, ty, len(vals), sum(vals),
-                                 min(vals), max(vals), True, None)
-                            )
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, None, None, None, None, False,
-                         str(e)[:200])
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def image_dhash_features(assets: DataFrame) -> DataFrame:
@@ -1492,47 +1431,28 @@ def image_dhash_features(assets: DataFrame) -> DataFrame:
     TIFF via magic dispatch; grayscale only; error-row degradation.
     Emits (asset_id, width, height, n_bits, dhash).
     """
-    out_schema = (
-        "asset_id long, width int, height int, n_bits int, dhash long, "
-        "decode_ok boolean, error string"
+
+    def kernel(b):
+        w, h, ch, _bd, px = _image_decode_dispatch(b)
+        if ch != 1:
+            raise ValueError(f"dhash needs grayscale, got {ch}ch")
+        if w < 2:
+            raise ValueError("dhash needs width >= 2")
+        if (w - 1) * h > 63:
+            # int64 guard (r9 ADVICE): a 9x8 grayscale image packs 64
+            # bits and overflows the Arrow long — degrade to an error
+            # row instead of failing the whole distributed scan on one
+            # oversized image.
+            raise ValueError(f"dhash needs (w-1)*h <= 63 bits, got {(w - 1) * h}")
+        hv = 0
+        for r in range(h):
+            for c in range(w - 1):
+                hv = (hv << 1) | (1 if px[r * w + c] > px[r * w + c + 1] else 0)
+        return [(w, h, (w - 1) * h, hv)]
+
+    return _per_asset(
+        assets, "width int, height int, n_bits int, dhash long", kernel
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "width", "height", "n_bits", "dhash",
-                "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, ch, _bd, px = _image_decode_dispatch(b)
-                    if ch != 1:
-                        raise ValueError(f"dhash needs grayscale, got {ch}ch")
-                    if w < 2:
-                        raise ValueError("dhash needs width >= 2")
-                    if (w - 1) * h > 63:
-                        # int64 guard (r9 ADVICE): a 9x8 grayscale image
-                        # packs 64 bits and overflows the Arrow long —
-                        # degrade to an error row instead of failing the
-                        # whole distributed scan on one oversized image.
-                        raise ValueError(
-                            f"dhash needs (w-1)*h <= 63 bits, got "
-                            f"{(w - 1) * h}"
-                        )
-                    hv = 0
-                    for r in range(h):
-                        for c in range(w - 1):
-                            hv = (hv << 1) | (
-                                1 if px[r * w + c] > px[r * w + c + 1] else 0
-                            )
-                    rows.append((aid, w, h, (w - 1) * h, hv, True, None))
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, None, None, False, str(e)[:200])
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1613,27 +1533,14 @@ def embeddings_to_y4m(
     consecutive width x height frames — a 64-dim embedding becomes a
     4-frame 4x4 clip.  mapInPandas, row-local, scan-bound.
     """
+    fsize = width * height
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def kernel(aid, vec):
+        px = _u8(vec)
+        frames = [px[k * fsize : (k + 1) * fsize] for k in range(len(px) // fsize)]
+        return y4m_encode(width, height, frames)
 
-        fsize = width * height
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                px = bytes(
-                    min(255, max(0, math.floor((float(v) + 1.0) * 127.5)))
-                    for v in vec
-                )
-                n = len(px) // fsize
-                frames = [px[k * fsize : (k + 1) * fsize] for k in range(n)]
-                ids.append(aid)
-                blobs.append(y4m_encode(width, height, frames))
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 def video_shot_cuts(assets: DataFrame, threshold: int = 1400) -> DataFrame:
@@ -1646,41 +1553,21 @@ def video_shot_cuts(assets: DataFrame, threshold: int = 1400) -> DataFrame:
     (asset_id, n_frames, max_sad, n_cuts, first_cut — frame index of
     the first cut, -1 when the clip has none).
     """
-    out_schema = (
-        "asset_id long, n_frames int, max_sad long, n_cuts int, "
-        "first_cut int, decode_ok boolean, error string"
+
+    def kernel(b):
+        _w, _h, _rate, frames = y4m_decode(b)
+        sads = [
+            sum(abs(a - c) for a, c in zip(frames[k - 1], frames[k]))
+            for k in range(1, len(frames))
+        ]
+        cuts = [k + 1 for k, sad in enumerate(sads) if sad >= threshold]
+        return [(len(frames), max(sads) if sads else 0, len(cuts),
+                 cuts[0] if cuts else -1)]
+
+    return _per_asset(
+        assets, "n_frames int, max_sad long, n_cuts int, first_cut int",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "n_frames", "max_sad", "n_cuts", "first_cut",
-                "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    _w, _h, _rate, frames = y4m_decode(b)
-                    sads = [
-                        sum(
-                            abs(a - c)
-                            for a, c in zip(frames[k - 1], frames[k])
-                        )
-                        for k in range(1, len(frames))
-                    ]
-                    cuts = [
-                        k + 1 for k, sad in enumerate(sads) if sad >= threshold
-                    ]
-                    rows.append(
-                        (aid, len(frames), max(sads) if sads else 0,
-                         len(cuts), cuts[0] if cuts else -1, True, None)
-                    )
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, None, None, False, str(e)[:200])
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def video_frame_stats(assets: DataFrame, every_n: int = 1) -> DataFrame:
@@ -1691,34 +1578,20 @@ def video_frame_stats(assets: DataFrame, every_n: int = 1) -> DataFrame:
     Emits (asset_id, frame_idx, n_px, luma_sum, luma_min, luma_max,
     decode_ok, error); corrupt media degrades to error rows.
     """
-    out_schema = (
-        "asset_id long, frame_idx int, n_px int, luma_sum long, "
-        "luma_min int, luma_max int, decode_ok boolean, error string"
+
+    def kernel(b):
+        _w, _h, _rate, frames = y4m_decode(b)
+        out = []
+        for k in range(0, len(frames), every_n):
+            f = frames[k]
+            out.append((k, len(f), sum(f), min(f), max(f)))
+        return out
+
+    return _per_asset(
+        assets,
+        "frame_idx int, n_px int, luma_sum long, luma_min int, luma_max int",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "frame_idx", "n_px", "luma_sum", "luma_min",
-                "luma_max", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    _w, _h, _rate, frames = y4m_decode(b)
-                    for k in range(0, len(frames), every_n):
-                        f = frames[k]
-                        rows.append(
-                            (aid, k, len(f), sum(f), min(f), max(f),
-                             True, None)
-                        )
-                except ValueError as e:
-                    rows.append(
-                        (aid, None, None, None, None, None, False,
-                         str(e)[:200])
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2314,44 +2187,22 @@ def embeddings_to_jpeg(
     what lets a roundtrip query hash an exact-stats oracle.  Shape:
     mapInPandas, row-local, scan-bound at any scale."""
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                vals = [
-                    min(255, max(0, math.floor((float(v) + 1.0) * 127.5)))
-                    for v in vec
-                ]
-                n = len(vals)
-                tw = tiles_per_row
-                th = (n + tw - 1) // tw
-                w, h = tw * 8, th * 8
-                img = bytearray(w * h)
-                for t, v in enumerate(vals):
-                    ty, tx = divmod(t, tw)
-                    for r in range(8):
-                        row = (ty * 8 + r) * w + tx * 8
-                        img[row : row + 8] = bytes([v]) * 8
-                # tail tiles of a ragged last row stay 0 (excluded from
-                # stats by construction: every sf's dim is a multiple
-                # of tiles_per_row, asserted here so a corpus change
-                # fails loudly instead of silently skewing stats)
-                if n % tw:
-                    raise ValueError(
-                        f"embedding dim {n} not a multiple of "
-                        f"tiles_per_row {tw}"
-                    )
-                ids.append(aid)
-                blobs.append(jpeg_encode(w, h, 1, bytes(img)))
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
+    def kernel(aid, vec):
+        vals = _u8(vec)
+        # a ragged last tile row would stay 0 and skew stats: every sf's
+        # dim is a multiple of tiles_per_row, asserted here so a corpus
+        # change fails loudly
+        if len(vals) % tiles_per_row:
+            raise ValueError(
+                f"embedding dim {len(vals)} not a multiple of "
+                f"tiles_per_row {tiles_per_row}"
+            )
+        w, h, img = _tiles8(vals, tiles_per_row)
+        return jpeg_encode(w, h, 1, img)
 
     # heavy: the per-block DCT encode + IDCT decode dominate; full-width
     # spread measured 1.9 s vs 4.2 s at width 4 (sf0.1, local[32])
-    return _spread(emb.select(id_col, vec_col), id_col, heavy=True).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel, heavy=True)
 
 
 def image_downsample_area(assets: DataFrame, factor: int = 2) -> DataFrame:
@@ -2369,38 +2220,25 @@ def image_downsample_area(assets: DataFrame, factor: int = 2) -> DataFrame:
     """
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
-    out_schema = (
-        "asset_id long, out_w int, out_h int, pixels array<int>, "
-        "decode_ok boolean, error string"
-    )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "out_w", "out_h", "pixels", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, ch, _bd, px = _image_decode_dispatch(b)
-                    if ch != 1:
-                        raise ValueError(f"downsample needs grayscale, got {ch}ch")
-                    ow = (w + factor - 1) // factor
-                    oh = (h + factor - 1) // factor
-                    out = []
-                    for by in range(oh):
-                        for bx in range(ow):
-                            vals = [
-                                px[y * w + x]
-                                for y in range(by * factor, min((by + 1) * factor, h))
-                                for x in range(bx * factor, min((bx + 1) * factor, w))
-                            ]
-                            out.append((sum(vals) + len(vals) // 2) // len(vals))
-                    rows.append((aid, ow, oh, out, True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, False, str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
+    def kernel(b):
+        w, h, ch, _bd, px = _image_decode_dispatch(b)
+        if ch != 1:
+            raise ValueError(f"downsample needs grayscale, got {ch}ch")
+        ow = (w + factor - 1) // factor
+        oh = (h + factor - 1) // factor
+        out = []
+        for by in range(oh):
+            for bx in range(ow):
+                vals = [
+                    px[y * w + x]
+                    for y in range(by * factor, min((by + 1) * factor, h))
+                    for x in range(bx * factor, min((bx + 1) * factor, w))
+                ]
+                out.append((sum(vals) + len(vals) // 2) // len(vals))
+        return [(ow, oh, out)]
 
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
+    return _per_asset(assets, "out_w int, out_h int, pixels array<int>", kernel)
 
 
 def audio_silence_features(
@@ -2419,43 +2257,30 @@ def audio_silence_features(
     """
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    out_schema = (
-        "asset_id long, n_windows int, n_silent int, "
-        "longest_silent_run int, energy_sum long, decode_ok boolean, "
-        "error string"
+
+    def kernel(b):
+        _rate, _ch, _bits, samples = wav_decode(b)
+        if not samples:
+            raise ValueError("empty clip")
+        n_w = (len(samples) + window - 1) // window
+        n_silent = longest = run = total = 0
+        for wi in range(n_w):
+            e = sum(s * s for s in samples[wi * window : (wi + 1) * window])
+            total += e
+            if e < threshold:
+                n_silent += 1
+                run += 1
+                longest = max(longest, run)
+            else:
+                run = 0
+        return [(n_w, n_silent, longest, total)]
+
+    return _per_asset(
+        assets,
+        "n_windows int, n_silent int, longest_silent_run int, "
+        "energy_sum long",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "n_windows", "n_silent", "longest_silent_run",
-                "energy_sum", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    _rate, _ch, _bits, samples = wav_decode(b)
-                    if not samples:
-                        raise ValueError("empty clip")
-                    n_w = (len(samples) + window - 1) // window
-                    n_silent = longest = run = 0
-                    total = 0
-                    for wi in range(n_w):
-                        frame = samples[wi * window:(wi + 1) * window]
-                        e = sum(s * s for s in frame)
-                        total += e
-                        if e < threshold:
-                            n_silent += 1
-                            run += 1
-                            longest = max(longest, run)
-                        else:
-                            run = 0
-                    rows.append((aid, n_w, n_silent, longest, total, True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, None, False,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def image_sobel_features(assets: DataFrame, edge_threshold: int = 0) -> DataFrame:
@@ -2471,43 +2296,32 @@ def image_sobel_features(assets: DataFrame, edge_threshold: int = 0) -> DataFram
     Images smaller than 3x3 have no interior and report zeros.
     Grayscale only; corrupt media degrades to error rows.
     """
-    out_schema = (
-        "asset_id long, n_interior int, grad_energy long, max_grad2 long, "
-        "n_edge_px int, decode_ok boolean, error string"
+
+    def kernel(b):
+        w, h, ch, _bd, px = _image_decode_dispatch(b)
+        if ch != 1:
+            raise ValueError(f"sobel needs grayscale, got {ch}ch")
+        n_int = energy = mx = n_edge = 0
+        for r in range(1, h - 1):
+            for c in range(1, w - 1):
+                p = lambda dr, dc: px[(r + dr) * w + (c + dc)]
+                gx = (p(-1, 1) + 2 * p(0, 1) + p(1, 1)
+                      - p(-1, -1) - 2 * p(0, -1) - p(1, -1))
+                gy = (p(1, -1) + 2 * p(1, 0) + p(1, 1)
+                      - p(-1, -1) - 2 * p(-1, 0) - p(-1, 1))
+                g2 = gx * gx + gy * gy
+                n_int += 1
+                energy += g2
+                mx = max(mx, g2)
+                if g2 > edge_threshold:
+                    n_edge += 1
+        return [(n_int, energy, mx, n_edge)]
+
+    return _per_asset(
+        assets,
+        "n_interior int, grad_energy long, max_grad2 long, n_edge_px int",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "n_interior", "grad_energy", "max_grad2",
-                "n_edge_px", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, ch, _bd, px = _image_decode_dispatch(b)
-                    if ch != 1:
-                        raise ValueError(f"sobel needs grayscale, got {ch}ch")
-                    n_int = energy = mx = n_edge = 0
-                    for r in range(1, h - 1):
-                        for c in range(1, w - 1):
-                            p = lambda dr, dc: px[(r + dr) * w + (c + dc)]
-                            gx = (p(-1, 1) + 2 * p(0, 1) + p(1, 1)
-                                  - p(-1, -1) - 2 * p(0, -1) - p(1, -1))
-                            gy = (p(1, -1) + 2 * p(1, 0) + p(1, 1)
-                                  - p(-1, -1) - 2 * p(-1, 0) - p(-1, 1))
-                            g2 = gx * gx + gy * gy
-                            n_int += 1
-                            energy += g2
-                            mx = max(mx, g2)
-                            if g2 > edge_threshold:
-                                n_edge += 1
-                    rows.append((aid, n_int, energy, mx, n_edge, True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, None, False,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def image_otsu_features(assets: DataFrame) -> DataFrame:
@@ -2524,53 +2338,41 @@ def image_otsu_features(assets: DataFrame) -> DataFrame:
     Emits (asset_id, otsu_t, bg_count, fg_count, num2, den,
     decode_ok, error) — mapInPandas row-local, one pass.
     """
-    out_schema = (
-        "asset_id long, otsu_t int, bg_count int, fg_count int, "
-        "num2 long, den long, decode_ok boolean, error string"
+
+    def kernel(b):
+        w, h, ch, _bd, px = _image_decode_dispatch(b)
+        if ch != 1:
+            raise ValueError(f"otsu needs grayscale, got {ch}ch")
+        n, total = len(px), sum(px)
+        if n < 2:
+            raise ValueError("otsu needs >= 2 pixels")
+        best = None  # (score, t, c0, c1, num2, den)
+        c0 = m0 = 0
+        # histogram once — px.count(t) per distinct value is
+        # O(n * distinct) (r10 ADVICE)
+        hist = Counter(px)
+        for t in sorted(hist):
+            cnt = hist[t]
+            c0 += cnt
+            m0 += t * cnt
+            c1 = n - c0
+            if c1 == 0:
+                break
+            m1 = total - m0
+            num2 = (m0 * c1 - m1 * c0) ** 2
+            den = c0 * c1
+            score = num2 / den  # IEEE double, engine-identical
+            if best is None or score > best[0]:
+                best = (score, t, c0, c1, num2, den)
+        if best is None:
+            raise ValueError("constant image has no otsu cut")
+        return [best[1:]]
+
+    return _per_asset(
+        assets,
+        "otsu_t int, bg_count int, fg_count int, num2 long, den long",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "otsu_t", "bg_count", "fg_count", "num2", "den",
-                "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, ch, _bd, px = _image_decode_dispatch(b)
-                    if ch != 1:
-                        raise ValueError(f"otsu needs grayscale, got {ch}ch")
-                    n, total = len(px), sum(px)
-                    if n < 2:
-                        raise ValueError("otsu needs >= 2 pixels")
-                    best = None  # (score, t, c0, c1, num2, den)
-                    c0 = m0 = 0
-                    # histogram once — px.count(t) per distinct value
-                    # is O(n * distinct) (r10 ADVICE)
-                    hist = Counter(px)
-                    for t in sorted(hist):
-                        cnt = hist[t]
-                        c0 += cnt
-                        m0 += t * cnt
-                        c1 = n - c0
-                        if c1 == 0:
-                            break
-                        m1 = total - m0
-                        num2 = (m0 * c1 - m1 * c0) ** 2
-                        den = c0 * c1
-                        score = num2 / den  # IEEE double, engine-identical
-                        if best is None or score > best[0]:
-                            best = (score, t, c0, c1, num2, den)
-                    if best is None:
-                        raise ValueError("constant image has no otsu cut")
-                    _, t, c0, c1, num2, den = best
-                    rows.append((aid, t, c0, c1, num2, den, True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, None, None, False,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 def video_keyframes(assets: DataFrame, threshold: int = 1400) -> DataFrame:
@@ -2585,49 +2387,37 @@ def video_keyframes(assets: DataFrame, threshold: int = 1400) -> DataFrame:
     (asset_id, shot_id, start_frame, n_frames, keyframe_idx,
     key_vnum, decode_ok, error) — mapInPandas row-local, one pass.
     """
-    out_schema = (
-        "asset_id long, shot_id int, start_frame int, n_frames int, "
-        "keyframe_idx int, key_vnum long, decode_ok boolean, error string"
+
+    def kernel(b):
+        _w, _h, _rate, frames = y4m_decode(b)
+        if not frames:
+            raise ValueError("empty clip")
+        n = len(frames[0])
+        # shot id per frame: cuts open a new shot
+        shot_of = [0] * len(frames)
+        sid = 0
+        for k in range(1, len(frames)):
+            sad = sum(abs(a - c) for a, c in zip(frames[k - 1], frames[k]))
+            if sad > threshold:
+                sid += 1
+            shot_of[k] = sid
+        # per shot: argmax integer variance numerator
+        shots: dict[int, list] = {}
+        for k, fr in enumerate(frames):
+            s1, s2 = sum(fr), sum(v * v for v in fr)
+            vnum = n * s2 - s1 * s1
+            st = shots.setdefault(shot_of[k], [k, 0, -1, -1])
+            st[1] += 1
+            if vnum > st[3]:
+                st[2], st[3] = k, vnum
+        return [(sid, *shots[sid]) for sid in sorted(shots)]
+
+    return _per_asset(
+        assets,
+        "shot_id int, start_frame int, n_frames int, keyframe_idx int, "
+        "key_vnum long",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "shot_id", "start_frame", "n_frames",
-                "keyframe_idx", "key_vnum", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    _w, _h, _rate, frames = y4m_decode(b)
-                    if not frames:
-                        raise ValueError("empty clip")
-                    n = len(frames[0])
-                    # shot id per frame: cuts open a new shot
-                    shot_of = [0] * len(frames)
-                    sid = 0
-                    for k in range(1, len(frames)):
-                        sad = sum(abs(a - c) for a, c in zip(frames[k - 1], frames[k]))
-                        if sad > threshold:
-                            sid += 1
-                        shot_of[k] = sid
-                    # per shot: argmax integer variance numerator
-                    shots: dict[int, list] = {}
-                    for k, fr in enumerate(frames):
-                        s1, s2 = sum(fr), sum(v * v for v in fr)
-                        vnum = n * s2 - s1 * s1
-                        st = shots.setdefault(shot_of[k], [k, 0, -1, -1])
-                        st[1] += 1
-                        if vnum > st[3]:
-                            st[2], st[3] = k, vnum
-                    for sid in sorted(shots):
-                        start, cnt, kf, vnum = shots[sid]
-                        rows.append((aid, sid, start, cnt, kf, vnum, True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, None, None, False,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2746,43 +2536,23 @@ def embeddings_to_avi(
     embeddings_to_jpeg quantization and layout), packed in a real
     RIFF/AVI container — a compressed VIDEO whose decode is
     bit-exact on this corpus."""
+    vpf, tw = values_per_frame, tiles_per_row
+    if vpf % tw:
+        raise ValueError("values_per_frame must divide by tiles_per_row")
+    w, h = tw * 8, vpf // tw * 8
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def kernel(aid, vec):
+        vals = _u8(vec)
+        if len(vals) % vpf:
+            raise ValueError(
+                f"embedding dim {len(vals)} not a multiple of "
+                f"values_per_frame {vpf}"
+            )
+        frames = [_tiles8(vals[f0 : f0 + vpf], tw)[2]
+                  for f0 in range(0, len(vals), vpf)]
+        return avi_mjpeg_encode(w, h, frames)
 
-        vpf, tw = values_per_frame, tiles_per_row
-        if vpf % tw:
-            raise ValueError("values_per_frame must divide by tiles_per_row")
-        th = vpf // tw
-        w, h = tw * 8, th * 8
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                vals = [
-                    min(255, max(0, math.floor((float(v) + 1.0) * 127.5)))
-                    for v in vec
-                ]
-                if len(vals) % vpf:
-                    raise ValueError(
-                        f"embedding dim {len(vals)} not a multiple of "
-                        f"values_per_frame {vpf}"
-                    )
-                frames = []
-                for f0 in range(0, len(vals), vpf):
-                    img = bytearray(w * h)
-                    for t, v in enumerate(vals[f0 : f0 + vpf]):
-                        ty, tx = divmod(t, tw)
-                        for r in range(8):
-                            row = (ty * 8 + r) * w + tx * 8
-                            img[row : row + 8] = bytes([v]) * 8
-                    frames.append(bytes(img))
-                ids.append(aid)
-                blobs.append(avi_mjpeg_encode(w, h, frames))
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 def video_mjpeg_frame_stats(assets: DataFrame) -> DataFrame:
@@ -2790,30 +2560,24 @@ def video_mjpeg_frame_stats(assets: DataFrame) -> DataFrame:
     (container walk + per-frame baseline-JPEG decode): one row per
     frame — the video sibling of decode_image_features, same
     corrupt-tolerant error-row contract."""
-    out_schema = (
-        "asset_id long, frame_idx int, width int, height int, "
-        "px_sum long, px_min int, px_max int, decode_ok boolean, "
-        "error string"
+    return _frame_stats(assets, avi_mjpeg_decode)
+
+
+def _frame_stats(assets: DataFrame, decode: Callable) -> DataFrame:
+    """(frame_idx, width, height, px_sum, px_min, px_max) per frame of a
+    ``decode(bytes) -> (width, height, frames)`` video codec."""
+
+    def kernel(b):
+        w, h, frames = decode(b)
+        return [(i, w, h, sum(px), min(px), max(px))
+                for i, px in enumerate(frames)]
+
+    return _per_asset(
+        assets,
+        "frame_idx int, width int, height int, px_sum long, px_min int, "
+        "px_max int",
+        kernel,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "frame_idx", "width", "height", "px_sum",
-                "px_min", "px_max", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, frames = avi_mjpeg_decode(b)
-                    for i, px in enumerate(frames):
-                        rows.append((aid, i, w, h, sum(px), min(px),
-                                     max(px), True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, None, None, None,
-                                 False, str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3136,60 +2900,18 @@ def embeddings_to_h264(
     if values_per_frame != 4:
         raise ValueError("16x16 I_PCM frames carry exactly 4 tiles")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def kernel(aid, vec):
+        vals = _u8(vec)
+        if len(vals) % 4:
+            raise ValueError("embedding dim must be a multiple of 4")
+        frames = [_tiles8(vals[f0 : f0 + 4], 2)[2]
+                  for f0 in range(0, len(vals), 4)]
+        return h264_ipcm_encode(16, 16, frames)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for aid, vec in zip(pdf[id_col], pdf[vec_col]):
-                vals = [
-                    min(255, max(0, math.floor((float(v) + 1.0) * 127.5)))
-                    for v in vec
-                ]
-                if len(vals) % 4:
-                    raise ValueError("embedding dim must be a multiple of 4")
-                frames = []
-                for f0 in range(0, len(vals), 4):
-                    img = bytearray(256)
-                    for t, v in enumerate(vals[f0 : f0 + 4]):
-                        ty, tx = divmod(t, 2)
-                        for r in range(8):
-                            row = (ty * 8 + r) * 16 + tx * 8
-                            img[row : row + 8] = bytes([v]) * 8
-                    frames.append(bytes(img))
-                ids.append(aid)
-                blobs.append(h264_ipcm_encode(16, 16, frames))
-            yield pd.DataFrame({"asset_id": ids, "media": blobs})
-
-    return _spread(emb.select(id_col, vec_col), id_col).mapInPandas(
-        encode, "asset_id long, media binary"
-    )
+    return _encode_each(emb, id_col, vec_col, kernel)
 
 
 def video_h264_frame_stats(assets: DataFrame) -> DataFrame:
     """Per-frame integer pixel stats over REAL-decoded I_PCM H.264
     media — same contract as video_mjpeg_frame_stats."""
-    out_schema = (
-        "asset_id long, frame_idx int, width int, height int, "
-        "px_sum long, px_min int, px_max int, decode_ok boolean, "
-        "error string"
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "frame_idx", "width", "height", "px_sum",
-                "px_min", "px_max", "decode_ok", "error"]
-        for pdf in batches:
-            rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                try:
-                    w, h, frames = h264_ipcm_decode(b)
-                    for i, px in enumerate(frames):
-                        rows.append((aid, i, w, h, sum(px), min(px),
-                                     max(px), True, None))
-                except ValueError as e:
-                    rows.append((aid, None, None, None, None, None, None,
-                                 False, str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "media").mapInPandas(extract, out_schema)
+    return _frame_stats(assets, h264_ipcm_decode)

@@ -68,20 +68,19 @@ def register(name: str, oracle: str | None):
 # rotated out keeps its green row from the round it was graded in, and
 # the full-registry oracle sweep in tests/test_queries_oracle.py remains
 # the mandatory local gate for ALL queries regardless of window).
-# Round-15 window (r14-verdict ask #7 — continue the freshness
-# rotation): ALL 33 remaining queries whose newest driver grade dates
-# to r7 (verified against CORRECTNESS_r01..r14: the per-query latest
-# grade histogram is r7:33, r8:50, r9:49, r10:50, r11:50, r12:49,
-# r14:50), topped up with the 17 alphabetically-first queries of the
-# 50-strong r8 cohort.  r16 rotation input: the remaining 33 r8-graded
-# queries (dedup_exact_docs onward alphabetically), then the r9
-# cohort; any new registration takes a slot from the tail of the
-# current stale block.  Permanently OUT of the window: the
+# Round-15 window (freshness rotation): the queries whose newest CORRECTNESS
+# grade is the oldest (the r7 cohort), topped up with the
+# alphabetically-first queries of the r8 cohort; recompute the stale
+# cohorts from CORRECTNESS_r*.json rather than keeping counts here.
+# r16 rotation input: the remaining r8-graded queries
+# (graph_lpa_communities onward alphabetically), then the r9 cohort;
+# any new registration takes a slot from the tail of the current
+# stale block.  Permanently OUT of the window: the
 # rows-only-by-design entries (source_listing, text_bpe_learn_merges,
 # corpus_pack_ffd) — each would burn a slot as an eternal `no_oracle`.
 # List EXACTLY 50 names (sized by test_driver_contract).
 _DRIVER_FIRST = [
-    # all 33 remaining r7-stale greens (newest driver grade = r7)
+    # the remaining r7-stale greens (newest CORRECTNESS grade = r7)
     "graph_adamic_adar",
     "graph_degree_assortativity",
     "graph_triangle_count",
@@ -161,6 +160,15 @@ def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def dsum(col: Column, scale: int = 2) -> Column:
     """Accumulation-order-proof sum: exact decimal internally, double out."""
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
+
+
+def _u8_sql(x: str) -> str:
+    """DuckDB mirror of operators.multimodal._u8, the embedding-to-pixel
+    quantization clamp(floor((x + 1) * 127.5), 0, 255) in IEEE doubles."""
+    return (
+        f"LEAST(255, GREATEST(0, CAST(FLOOR((CAST({x} AS DOUBLE) "
+        f"+ CAST(1.0 AS DOUBLE)) * CAST(127.5 AS DOUBLE)) AS INT)))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2888,12 +2896,10 @@ def report_log_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_czi_roundtrip",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(e AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("e")} AS p
       FROM embeddings, UNNEST(embedding) t(e))
     SELECT vec_id AS asset_id,
            CAST(8 AS INT) AS width,
@@ -13538,12 +13544,10 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_png_roundtrip",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(e AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("e")} AS p
       FROM embeddings, UNNEST(embedding) t(e))
     SELECT vec_id AS asset_id,
            CAST(8 AS INT) AS width,
@@ -16841,12 +16845,10 @@ def corpus_source_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_tiff_roundtrip",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(e AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("e")} AS p
       FROM embeddings, UNNEST(embedding) t(e))
     SELECT vec_id AS asset_id,
            CAST(8 AS INT) AS width,
@@ -17673,12 +17675,10 @@ def multimodal_audio_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_tile_stats",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) AS i0,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     g AS (
       SELECT vec_id,
@@ -18923,12 +18923,10 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "multimodal_video_frame_stats",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) AS i0,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     f AS (
       SELECT vec_id, CAST(i0 // 16 AS INT) AS frame_idx, p
@@ -19925,7 +19923,7 @@ def multimodal_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "dedup_image_dhash",
-    """
+    f"""
     WITH aug AS (
       SELECT vec_id, embedding FROM embeddings
       UNION ALL
@@ -19940,9 +19938,7 @@ def multimodal_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFra
       FROM embeddings WHERE vec_id % 7 = 0),
     px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) AS i0,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-               (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-               * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM aug, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     bits AS (
       SELECT a.vec_id, a.i0 // 8 AS r, a.i0 % 8 AS c,
@@ -20217,12 +20213,10 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_video_shot_cuts",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) AS i0,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     f AS (
       SELECT vec_id, CAST(i0 // 16 AS INT) AS fi, CAST(i0 % 16 AS INT) AS pos, p
@@ -20365,12 +20359,10 @@ def corpus_pack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_jpeg_roundtrip",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(e AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("e")} AS p
       FROM embeddings, UNNEST(embedding) t(e))
     SELECT vec_id AS asset_id,
            CAST(64 AS INT) AS width,
@@ -20849,12 +20841,10 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_image_downsample",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) AS i0,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     dp AS (
       SELECT vec_id,
@@ -21553,13 +21543,11 @@ def text_mojibake_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_image_sobel_energy",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) // 8 AS r,
              CAST(i - 1 AS BIGINT) % 8 AS c,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-               (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-               * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     g AS (
       SELECT a.vec_id, a.r, a.c,
@@ -22096,12 +22084,10 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_image_otsu",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-               (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-               * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     hist AS (
       SELECT vec_id, p, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -22165,12 +22151,10 @@ def multimodal_image_otsu(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_video_keyframes",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST(i - 1 AS BIGINT) AS i0,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)),
     f AS (
       SELECT vec_id, CAST(i0 // 16 AS INT) AS fi,
@@ -22830,12 +22814,10 @@ def fastq_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_mjpeg_frames",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST((i - 1) // 4 AS INT) AS frame_idx,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i)
       WHERE vec_id % 8 = 0)
     SELECT vec_id AS asset_id, frame_idx,
@@ -22875,12 +22857,10 @@ def multimodal_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_h264_frames",
-    """
+    f"""
     WITH px AS (
       SELECT vec_id, CAST((i - 1) // 4 AS INT) AS frame_idx,
-             LEAST(255, GREATEST(0, CAST(FLOOR(
-                 (CAST(embedding[i] AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 * CAST(127.5 AS DOUBLE)) AS INT))) AS p
+             {_u8_sql("embedding[i]")} AS p
       FROM embeddings, UNNEST(GENERATE_SERIES(1, LEN(embedding))) t(i))
     SELECT vec_id AS asset_id, frame_idx,
            CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,

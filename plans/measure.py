@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Round-14 measurement harness: time named queries at sf0.1 the way
+"""A/B measurement harness: time named queries at sf0.1 the way
 bench.py does (count() after warmup, min-of-N, checkpoint sweep + GC
 between reps) and optionally dump .explain("formatted") to
-plans/r15/<q>_<tag>.txt.
+<out>/<q>_<tag>.txt.  The output directory's name (e.g. ``r14``) labels
+the Spark app and every timed job.
 
-Usage: python plans/r15/measure.py [--reps N] [--explain TAG] q1 q2 ...
-       python plans/r15/measure.py --explain before dedup_lsh_quality_audit
+Usage: python plans/measure.py --out plans/r16 [--reps N] [--explain TAG] q1 q2 ...
+       python plans/measure.py --out plans/r14 --explain before dedup_lsh_quality_audit
 """
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ import os
 import sys
 import time
 
-REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
+REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, REPO)
 
 from ingest_pipeline_spark.queries import queries  # noqa: E402
@@ -24,6 +25,8 @@ from ingest_pipeline_spark.session import get_spark  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--out", required=True,
+                    help="plan-dump directory; its name tags the run")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--explain", default=None, help="dump plan with tag")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -31,7 +34,8 @@ def main() -> None:
                     help="time the noop sink instead of count()")
     args = ap.parse_args()
 
-    spark = get_spark("r15-measure")
+    tag = os.path.basename(os.path.normpath(args.out))
+    spark = get_spark(f"{tag}-measure")
     fns = queries()
     # session warmup mirroring bench.py
     fns["q1_pricing_summary"](spark, args.sf).count()
@@ -55,8 +59,8 @@ def main() -> None:
             df = fns[name](spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
-            out = os.path.join(REPO, "plans", "r15",
-                               f"{name}_{args.explain}.txt")
+            os.makedirs(args.out, exist_ok=True)
+            out = os.path.join(args.out, f"{name}_{args.explain}.txt")
             with open(out, "w") as f:
                 f.write(plan)
             print(f"plan -> {out} ({len(plan)} chars)")
@@ -65,7 +69,7 @@ def main() -> None:
         if args.reps <= 0:
             continue
         for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"r15:{name}")
+            spark.sparkContext.setJobDescription(f"{tag}:{name}")
             t0 = time.perf_counter()
             df = fns[name](spark, args.sf)
             if args.noop:
