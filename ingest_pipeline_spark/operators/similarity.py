@@ -334,108 +334,6 @@ def lsh_bucket_candidates(
     )
 
 
-def ivf_index(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_clusters: int = 16,
-    seed: int = 42,
-):
-    """IVF coarse quantizer: KMeans centroids + per-vector cluster id.
-
-    The inverted-file ANN scale path: search only the probe clusters
-    instead of the corpus.  Returns (assignments DF with `cluster`,
-    fitted KMeans model).  Deterministic under a fixed seed.
-    """
-    if n_clusters < 2:
-        raise ValueError(
-            f"ivf_index needs n_clusters >= 2 (got {n_clusters}); "
-            "for a single cell use cosine_topk (exact) instead"
-        )
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(feat)
-    assigned = model.transform(feat).select(
-        "id", "vec", F.col("prediction").alias("cluster")
-    )
-    return assigned, model
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probe: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: search only the n_probe nearest clusters.
-
-    Plan: assign corpus to clusters once (the index build, amortized
-    across queries at scale); per query pick the n_probe closest
-    centroids (driver-side tiny loop over k centroids), then the
-    scoring join carries an equi-condition on cluster — a bucketed
-    join instead of a full cross product.  Recall tested vs the exact
-    brute force in tests/.
-    """
-    from pyspark.ml.functions import array_to_vector
-
-    assigned, model = ivf_index(corpus, vec_col, id_col, n_clusters, seed)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_nrm"),
-    )
-    # probe-cluster selection as a column expression: cosine to each
-    # centroid (literal arrays), take top n_probe cluster ids
-    def centroid_cos(c: list[float]) -> Column:
-        arr = F.array(*[F.lit(x) for x in c])
-        return _dot(F.col("q_vec"), arr) / (F.col("q_nrm") * F.lit(sum(x * x for x in c) ** 0.5))
-
-    scored_centroids = F.array(
-        *[
-            F.struct(centroid_cos(c).alias("s"), F.lit(i).alias("c"))
-            for i, c in enumerate(centers)
-        ]
-    )
-    probes = F.slice(F.array_sort(scored_centroids, lambda a, b: F.when(a["s"] > b["s"], -1).when(a["s"] < b["s"], 1).otherwise(0)), 1, n_probe)
-    q_probed = q.withColumn(
-        "cluster", F.explode(F.transform(probes, lambda p: p["c"]))
-    )
-
-    c = assigned.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("c_vec"),
-        _norm(F.col("vec")).alias("c_nrm"),
-        "cluster",
-    )
-    pairs = (
-        F.broadcast(q_probed)
-        .join(c, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_sim",
-            _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
-
-
 def ivf_topk_det(
     corpus: DataFrame,
     queries: DataFrame,
@@ -445,53 +343,33 @@ def ivf_topk_det(
     n_cells: int = 8,
     n_probe: int = 2,
 ) -> DataFrame:
-    """Deterministic IVF ANN — the oracle-checkable sibling of
-    ``ivf_topk`` (which quantizes with KMeans and therefore has no SQL
-    oracle), same plan shape end to end.
+    """Deterministic IVF ANN: oracle-checkable end to end.
 
     The coarse quantizer is the ``n_cells`` lowest-id corpus vectors
     used as fixed anchors (any deterministic tiny sample works; ids
-    make the oracle trivial).  Cell assignment = argmax 6-dp-rounded
-    cosine to the broadcast anchor ROWS with an anchor-id tiebreak —
-    anchors travel as a broadcast DataFrame, never as Column literals
-    (the PQ codebook lesson: literal arrays blow up analysis/codegen).
-    Queries probe their ``n_probe`` best cells; candidates meet through
-    the cell equi-join (the IVF point: never a corpus cross product);
-    exact cosine top-k with full tiebreak inside the probed cells.
+    make the oracle trivial); cells come from ``ivf_assign`` (argmax
+    6-dp-rounded cosine, anchor-id tiebreak).  Queries probe their
+    ``n_probe`` best cells; candidates meet through the cell equi-join
+    (the IVF point: never a corpus cross product); exact cosine top-k
+    with full tiebreak inside the probed cells.
     Returns (query_id, neighbor_id, cosine_sim, rank).
     """
-    anchors = (
-        corpus.orderBy(id_col)
-        .limit(n_cells)
-        .select(F.col(id_col).alias("anchor_id"), F.col(vec_col).alias("a_vec"))
-    )
-
-    def best_cells(side: DataFrame, sid: str, svec: str, n: int) -> DataFrame:
-        scored = side.crossJoin(F.broadcast(anchors)).select(
-            sid,
-            svec,
-            "anchor_id",
-            F.round(cosine(F.col(svec), F.col("a_vec")), 6).alias("a_sim"),
-        )
-        w = Window.partitionBy(sid).orderBy(F.desc("a_sim"), F.asc("anchor_id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= n)
-            .select(sid, svec, F.col("anchor_id").alias("cell"))
-        )
-
-    cells = best_cells(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
-        "neighbor_id",
+    anchors = _ivf_anchors(corpus, n_cells, vec_col, id_col)
+    cells = ivf_assign(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        ),
+        anchors,
         "c_vec",
-        1,
-    )
-    probes = best_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "query_id",
+    ).select("neighbor_id", "c_vec", "cell")
+    probes = ivf_assign(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        ),
+        anchors,
         "q_vec",
         n_probe,
-    )
+    ).select("query_id", "q_vec", "cell")
     pairs = (
         F.broadcast(probes)
         .join(cells, "cell")
@@ -533,11 +411,9 @@ def semantic_dedup(
     the UNROUNDED cosine (identical IEEE fold both engines — the
     dedup_prefix_jaccard lesson); 6-dp rounding is output-only.
 
-    Cells come from the deterministic coarse quantizer of
-    ``ivf_topk_det`` (n_cells lowest-id vectors as anchors, argmax
-    6-dp-rounded cosine, anchor-id tiebreak) so the whole operator is
-    oracle-checkable; the KMeans quantizer of ``ivf_index`` slots in
-    unchanged when determinism vs an external oracle isn't needed.
+    Cells come from the deterministic coarse quantizer ``ivf_assign``
+    (n_cells lowest-id vectors as anchors, argmax 6-dp-rounded cosine,
+    anchor-id tiebreak) so the whole operator is oracle-checkable.
 
     Scale: candidates meet ONLY through the cell equi-join — never a
     corpus cross product.  Intra-cell pairwise cost is the SemDeDup
@@ -547,24 +423,17 @@ def semantic_dedup(
     localCheckpointed once (three consumers: both join sides + the
     final left join).
     """
-    anchors = (
-        corpus.orderBy(id_col)
-        .limit(n_cells)
-        .select(F.col(id_col).alias("anchor_id"), F.col(vec_col).alias("a_vec"))
-    )
-    scored = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
-    ).crossJoin(F.broadcast(anchors))
-    w = Window.partitionBy("id").orderBy(
-        F.desc(F.round(cosine(F.col("vec"), F.col("a_vec")), 6)),
-        F.asc("anchor_id"),
-    )
     assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "vec", "nrm", F.col("anchor_id").alias("cell"))
+        ivf_assign(
+            corpus.select(
+                F.col(id_col).alias("id"),
+                F.col(vec_col).alias("vec"),
+                _norm(F.col(vec_col)).alias("nrm"),
+            ),
+            _ivf_anchors(corpus, n_cells, vec_col, id_col),
+            "vec",
+        )
+        .select("id", "vec", "nrm", "cell")
         .localCheckpoint(eager=True)
     )
     pairs = (
@@ -629,88 +498,6 @@ def embedding_near_dup_pairs(
     return pairs
 
 
-def pq_index(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-):
-    """Product-quantization index: m subspace KMeans codebooks + codes.
-
-    Each vector is split into m contiguous subvectors; each subspace is
-    KMeans-quantized to n_codes centroids; a vector is stored as m small
-    codes (m bytes at n_codes<=256) instead of dim floats — the
-    compressed-domain representation ANN systems scan when the corpus
-    no longer fits memory.  Index build is m KMeans fits (one pass each,
-    amortized across queries).  Returns (codes DF: id, vec, codes
-    array<int>, codebooks: m x n_codes x d_sub python lists).
-    Deterministic under the fixed per-subspace seeds.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    first = df.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError(
-            "pq_index needs a non-empty corpus with non-null vectors "
-            "(pq_topk handles the empty case by returning an empty result)"
-        )
-    dim = len(first[0])
-    if dim % m != 0:
-        raise ValueError(f"vector dim {dim} not divisible by m={m} subspaces")
-    d_sub = dim // m
-    # materialize ALL m subspace feature vectors in ONE pass, then fit
-    # every codebook off the same checkpointed relation.  Fitting and
-    # transforming sequentially on a growing lineage makes fit j re-run
-    # the slices AND the model applications of subspaces 0..j-1 against
-    # the source scan — O(m²) model applications and m parquet scans;
-    # the checkpoint makes it m fits over an in-memory relation plus
-    # one final m-transform pass for the codes (26 s → ~8 s at sf0.1).
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    base = base.select(
-        "id",
-        "vec",
-        *[
-            array_to_vector(
-                F.slice(F.col("vec"), j * d_sub + 1, d_sub)
-            ).alias(f"__f{j}")
-            for j in range(m)
-        ],
-    ).localCheckpoint(eager=True)
-    # the m subspace fits are independent — run them as CONCURRENT
-    # Spark jobs (thread pool; the scheduler interleaves their stages
-    # across executor slots), so index-build wall time is the slowest
-    # fit, not the sum of m sequential fits.  maxIter=10: ANN codebooks
-    # converge long before MLlib's default 20 rounds, and each round is
-    # a full job against the corpus.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _fit(j: int):
-        return KMeans(
-            k=n_codes,
-            seed=seed + j,
-            maxIter=10,
-            featuresCol=f"__f{j}",
-            predictionCol=f"__c{j}",
-        ).fit(base)
-
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        models = list(pool.map(_fit, range(m)))
-    codebooks: list[list[list[float]]] = []
-    assigned = base
-    for j, model in enumerate(models):
-        assigned = model.transform(assigned)
-        codebooks.append([list(map(float, c)) for c in model.clusterCenters()])
-    codes = assigned.select(
-        "id", "vec", F.array(*[F.col(f"__c{j}") for j in range(m)]).alias("codes")
-    )
-    return codes, codebooks
-
-
 def _empty_topk(queries: DataFrame, id_col: str) -> DataFrame:
     """Zero-row (query_id, neighbor_id, dot, rank) result with the id
     column's real type — the empty-corpus contract of the PQ scans."""
@@ -720,108 +507,6 @@ def _empty_topk(queries: DataFrame, id_col: str) -> DataFrame:
         .withColumn("neighbor_id", F.col("query_id"))
         .withColumn("dot", F.lit(0.0))
         .withColumn("rank", F.lit(1).cast("int"))
-    )
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    m: int = 16,
-    n_codes: int = 16,
-    seed: int = 42,
-    refine: int = 10,
-) -> DataFrame:
-    """Approximate inner-product top-k: ADC candidate scan + exact re-rank.
-
-    Stage 1 (asymmetric distance): the classic lookup-table
-    formulation — partial dots of every (query subvector, centroid)
-    pair are ONE tiny cross of the broadcast query set with the
-    codebook DATAFRAME (queries × m × n_codes rows), broadcast back;
-    corpus codes join it on the (subspace, code) key and a map-side
-    partial sum over m rows yields the approximate dot.  The codebook
-    travels as rows, never as Column literals — at n_codes=256 and
-    dim=768 the literal form is ~100k+ expressions and blows up
-    analysis/codegen time, while the relational form is a 200k-row
-    broadcast.  The compressed-domain scan touches m small codes per
-    vector instead of dim floats; compose with ivf_index cluster
-    pruning (IVF-PQ) when even the code scan is too large.
-
-    Stage 2 (refine): the top refine*k ADC candidates per query are
-    re-scored EXACTLY against the stored vectors — the standard PQ
-    re-rank that recovers the recall the quantization loses (measured
-    in tests/test_storage_ivf.py).  Both ranking stages round scores to
-    6 dp BEFORE ranking with an id tiebreak (determinism rule).
-    """
-    first = corpus.select(vec_col).first()
-    if first is None or first[0] is None:
-        # empty corpus OR a leading NULL vector (same guard as
-        # pq_topk_det, so both scans share one empty-case contract):
-        # nothing to index — empty result, same schema, no crash
-        return _empty_topk(queries, id_col)
-    codes, codebooks = pq_index(corpus, vec_col, id_col, m, n_codes, seed)
-    d_sub = len(codebooks[0][0])
-    spark = corpus.sparkSession
-    cbdf = spark.createDataFrame(
-        [(j, c, cent) for j, cb in enumerate(codebooks) for c, cent in enumerate(cb)],
-        "j int, c int, cent array<double>",
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    )
-    lut = (
-        F.broadcast(q)
-        .crossJoin(cbdf)
-        .select(
-            "query_id",
-            "j",
-            "c",
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("q_vec"), F.col("j") * d_sub + 1, F.lit(d_sub)),
-                    F.col("cent"),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("pdot"),
-        )
-    )
-    codes_x = codes.select(
-        "id", F.posexplode("codes").alias("j", "code")
-    )
-    adc = (
-        codes_x.join(
-            F.broadcast(lut),
-            (codes_x["j"] == lut["j"]) & (codes_x["code"] == lut["c"]),
-        )
-        .filter(F.col("query_id") != F.col("id"))
-        .groupBy("query_id", "id")
-        .agg(F.round(F.sum("pdot"), 6).alias("approx_dot"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("approx_dot"), F.asc("id"))
-    candidates = (
-        adc.withColumn("__r", F.row_number().over(w_adc))
-        .filter(F.col("__r") <= refine * k)
-        .select("query_id", "id")
-    )
-    exact = (
-        candidates.join(codes.select("id", "vec"), "id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(dot_seq(F.col("q_vec"), F.col("vec")), 6).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
     )
 
 
@@ -879,21 +564,6 @@ def _det_cb_rows(spark, m: int, n_codes: int, d_sub: int, tag: str = "pqdet"):
     return _DET_CB_ROWS_CACHE[key]
 
 
-def pq_codebook_rows(spark, codebooks: "list[list[list[float]]]") -> DataFrame:
-    """Freeze LEARNED PQ codebooks (pq_index's m x n_codes x d_sub
-    python lists — the persisted index artifact) as the same (j, c, ps,
-    cb_val) relational frame pq_codebook_det produces, so delta encodes
-    run through pq_assign against the stored codebooks instead of
-    refitting KMeans.  Bounded: m*n_codes*d_sub rows (8*16*8 = 1024)."""
-    rows = [
-        (j, c, ps, float(v))
-        for j, book in enumerate(codebooks)
-        for c, cent in enumerate(book)
-        for ps, v in enumerate(cent)
-    ]
-    return spark.createDataFrame(rows, "j int, c int, ps int, cb_val double")
-
-
 def pq_assign(
     vectors: DataFrame,
     cb: DataFrame,
@@ -934,11 +604,10 @@ def pq_index_upsert(
 ) -> DataFrame:
     """Incremental PQ code-table maintenance (the r8 verdict's #6 ask):
     the codebook is FROZEN at base-build time — here pq_codebook_det,
-    which is corpus-independent by construction; the KMeans path
-    freezes by persisting pq_index's codebooks and encoding deltas via
-    pq_codebook_rows + pq_assign — so growing the corpus never re-fits
-    or re-encodes.  The invariant (proven in tests/test_index_upsert.py,
-    mirroring the IVF theorem): under a frozen codebook,
+    which is corpus-independent by construction — so growing the
+    corpus never re-fits or re-encodes.  The invariant (proven in
+    tests/test_index_upsert.py, mirroring the IVF theorem): under a
+    frozen codebook,
     encode(base UNION delta) == encode(base) UNION encode(delta), so
     upsert(index(base), delta) is EXACTLY the code table a full rebuild
     would produce.  Per upsert, work is |delta| x m x n_codes against a
@@ -998,9 +667,9 @@ def pq_topk_det(
     """Oracle-checkable PQ top-k: deterministic codebook, LUT-join ADC
     scan, decimal-exact sums, exact re-rank of the top refine·k.
 
-    The KMeans variant (``pq_topk``) keeps the learned codebooks; this
-    sibling swaps them for ``pq_codebook_det`` anchors so every stage
-    is SQL-expressible and hash-matches the DuckDB oracle:
+    The codebook is ``pq_codebook_det``'s md5 grid (``pq_topk_lloyd``
+    is the learned-codebook sibling), so every stage is
+    SQL-expressible and hash-matches the DuckDB oracle:
 
     1. **Encode** — explode vectors to (id, dim) rows, join the
        broadcast codebook on the (subspace, sub-dim) key, one keyed agg
@@ -1140,10 +809,12 @@ def ivfpq_topk_det(
 
     The max(n_cells, n_codes) lowest-id sample vectors are collected
     ONCE driver-side (report-sized by contract — 16 rows here, one
-    TakeOrdered over the corpus) and re-emitted as literal broadcast
-    relations; collected doubles are exact IEEE values, and all
-    rounding stays Spark-side, so results are bit-identical to the
-    join-built codebook while skipping four corpus-scan jobs.
+    TakeOrdered over the corpus): the first n_cells are ivf_assign's
+    frozen anchors, the first n_codes are re-emitted as a literal
+    broadcast codebook relation.  Collected doubles are exact IEEE
+    values, and all rounding stays Spark-side, so results are
+    bit-identical to the join-built codebook while skipping four
+    corpus-scan jobs.
     """
     spark = corpus.sparkSession
     sample = (
@@ -1158,34 +829,16 @@ def ivfpq_topk_det(
     if dim % m != 0:
         raise ValueError(f"vector dim {dim} not divisible by m={m}")
     d_sub = dim // m
-    def _assign(df: DataFrame, key: str, keep: int) -> DataFrame:
-        # Arrow multi-anchor cosine + struct-sort top-keep — no
-        # crossJoin expansion, no per-vector window (see ivf_assign)
-        cos = anchor_cosines_seq([r[1] for r in sample[:n_cells]])
-        scored = df.select(
-            F.col(id_col).alias(key), cos(F.col(vec_col)).alias("__cs")
-        )
-        def _key(r):
-            return F.when(F.isnan(r), F.lit(float("-inf"))).otherwise(
-                -(r + F.lit(0.0))
-            )
-
-        cands = [
-            F.struct(
-                _key(F.round(F.col("__cs")[i], 6)).alias("ns"),
-                F.lit(aid).alias("aid"),
-            )
-            for i, (aid, _v) in enumerate(
-                (r[0], r[1]) for r in sample[:n_cells]
-            )
-        ]
-        top = F.slice(F.sort_array(F.array(*cands)), 1, keep)
-        return scored.select(
-            key, F.explode(top).alias("__t")
-        ).select(key, F.col("__t.aid").alias("cell"))
-
-    cells = _assign(corpus, "id", 1)
-    probes = _assign(queries, "query_id", n_probe)
+    anchors = [(r[0], r[1]) for r in sample[:n_cells]]
+    cells = ivf_assign(
+        corpus.select(F.col(id_col).alias("id"), vec_col), anchors, vec_col
+    ).select("id", "cell")
+    probes = ivf_assign(
+        queries.select(F.col(id_col).alias("query_id"), vec_col),
+        anchors,
+        vec_col,
+        n_probe,
+    ).select("query_id", "cell")
     x = corpus.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val0"),
@@ -1443,67 +1096,86 @@ def anchor_cosines_seq(anchor_vecs: "list[list[float]]"):
     return pandas_udf(fn, "array<double>").asNondeterministic()
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    anchors: DataFrame,
+def _ivf_anchors(
+    corpus: DataFrame,
+    n_cells: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+) -> "list[tuple]":
+    """Freeze the deterministic IVF quantizer: the ``n_cells`` lowest-id
+    rows of ``corpus`` as (anchor_id, vec) pairs, collected once
+    (bounded: n_cells rows).  The list is the persisted index artifact
+    ``ivf_assign`` takes; a NULL vector keeps its slot but never scores
+    (see ivf_assign)."""
+    return [
+        (r[0], None if r[1] is None else list(r[1]))
+        for r in corpus.select(id_col, vec_col)
+        .orderBy(id_col)
+        .limit(n_cells)
+        .collect()
+    ]
+
+
+def ivf_assign(
+    vectors: DataFrame,
+    anchors: "list[tuple]",
+    vec_col: str = "embedding",
+    n_probe: int = 1,
 ) -> DataFrame:
-    """Assign each vector to its IVF cell against a FROZEN anchor set:
-    argmax 6-dp-rounded cosine with anchor-id tiebreak (the
-    ivf_topk_det quantizer, factored out so index build and index
-    upsert share one assignment definition).  anchors: (anchor_id,
-    a_vec) — collected once (bounded by contract: n_cells rows, 8
-    here) and carried in the scoring UDF's closure; cost is
-    |vectors| x n_cells inside one Arrow projection, touching nothing
-    but the input frame.  Returns (vec_id, cell, a_sim).
+    """Assign each vector to its ``n_probe`` best IVF cells against a
+    FROZEN anchor set (``_ivf_anchors``): cells ranked by 6-dp-rounded
+    cosine DESC with anchor-id tiebreak.  The one definition of the
+    quantizer behind ivf_topk_det, semantic_dedup, ivfpq_topk_det,
+    ivf_knn_indegree and ivf_index_upsert; the corpus takes 1 cell,
+    queries take n_probe.  Returns ``vectors``' columns plus (cell,
+    a_sim, rank), one row per (vector, cell), rank 1..n_probe.
+
+    Cost is |vectors| x n_cells inside one Arrow projection
+    (anchor_cosines_seq, bit-identical to the cosine() fold, anchors in
+    its closure), touching nothing but the input frame.  The 6-dp round
+    stays Spark-side (HALF_UP parity) and the ranking is an
+    n_cells-element struct sort: no crossJoin row expansion and no
+    per-vector window shuffle.  The sort key reproduces the window
+    ORDER BY a_sim DESC NULLS LAST, anchor_id exactly (pinned in
+    tests/test_hubness_assign.py): SortExec ranks NaN greatest, and a
+    NULL cosine sorts last — so a NULL anchor never wins a vector and
+    a NULL vector falls back to anchor-id order.  Signed zeros need no
+    care: round() goes through BigDecimal and never returns -0.0.
     """
-    # one Arrow projection computes every anchor cosine per row
-    # (bit-identical to the cosine() fold — anchor_cosines_seq), the
-    # 6-dp round stays SPARK-side (HALF_UP parity), and the argmax
-    # with anchor-id tiebreak is an n_cells-element struct sort — no
-    # crossJoin row expansion and no per-vector window shuffle (the
-    # r10 shape cost a corpus x n_cells window per assignment)
-    a_rows = sorted(
-        (r["anchor_id"], list(r["a_vec"])) for r in anchors.collect()
-    )  # bounded: n_cells rows
-    if not a_rows:
-        # empty anchor set (empty base corpus): zero assignments, same
-        # schema the crossJoin shape produced
-        cell_t = anchors.schema["anchor_id"].dataType.simpleString()
-        return (
-            vectors.select(F.col(id_col).alias("vec_id"))
-            .limit(0)
-            .withColumn("cell", F.lit(None).cast(cell_t))
-            .withColumn("a_sim", F.lit(None).cast("double"))
+    if not anchors:
+        # empty base corpus: zero assignments, same columns
+        return vectors.limit(0).select(
+            "*",
+            F.lit(None).cast("int").alias("cell"),
+            F.lit(None).cast("double").alias("a_sim"),
+            F.lit(None).cast("int").alias("rank"),
         )
-    cos = anchor_cosines_seq([v for (_aid, v) in a_rows])
-    scored = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        cos(F.col(vec_col)).alias("__cs"),
+    live = [(aid, v) for aid, v in anchors if v is not None]
+    cos = (
+        anchor_cosines_seq([v for _aid, v in live])(F.col(vec_col))
+        if live
+        else F.lit(None).cast("array<double>")
     )
-    def _key(r):
-        # SortExec normalizes -0.0 to 0.0 and ranks NaN greatest
-        # (DESC -> first); sort_array's struct ordering does neither,
-        # so normalize explicitly to preserve the exact window
-        # semantics: +0.0 == -0.0 ties break on anchor id, NaN wins
-        return F.when(F.isnan(r), F.lit(float("-inf"))).otherwise(
-            -(r + F.lit(0.0))
+    scored = vectors.select("*", cos.alias("__cs"))
+
+    def _cand(aid, sim: Column) -> Column:
+        key = F.when(F.isnan(sim), F.lit(float("-inf"))).otherwise(-sim)
+        return F.struct(
+            F.coalesce(key, F.lit(float("inf"))).alias("ns"),
+            F.lit(aid).alias("aid"),
+            sim.alias("sim"),
         )
 
     cands = [
-        F.struct(
-            _key(F.round(F.col("__cs")[i], 6)).alias("ns"),
-            F.lit(aid).alias("aid"),
-            F.round(F.col("__cs")[i], 6).alias("sim"),
-        )
-        for i, (aid, _v) in enumerate(a_rows)
-    ]
-    best = F.element_at(F.sort_array(F.array(*cands)), 1)
-    return scored.select(
-        "vec_id",
-        best["aid"].alias("cell"),
-        best["sim"].alias("a_sim"),
+        _cand(aid, F.round(F.col("__cs")[i], 6))
+        for i, (aid, _v) in enumerate(live)
+    ] + [_cand(aid, F.lit(None).cast("double")) for aid, v in anchors if v is None]
+    top = F.slice(F.sort_array(F.array(*cands)), 1, n_probe)
+    return scored.select("*", F.posexplode(top).alias("__r", "__t")).select(
+        *vectors.columns,
+        F.col("__t.aid").alias("cell"),
+        F.col("__t.sim").alias("a_sim"),
+        (F.col("__r") + 1).alias("rank"),
     )
 
 
@@ -1524,20 +1196,19 @@ def ivf_index_upsert(
     over base+delta would produce, so snapshots can alternate between
     incremental and full builds freely.  Per upsert, work is
     |delta| x n_cells: the base corpus is touched only through the
-    n_cells-row anchor frame.  Returns (vec_id, cell, a_sim, origin).
+    n_cells-row anchor collect.  Returns (vec_id, cell, a_sim, origin).
     """
-    anchors = (
-        base.orderBy(id_col)
-        .limit(n_cells)
-        .select(F.col(id_col).alias("anchor_id"), F.col(vec_col).alias("a_vec"))
-    )
-    b = ivf_assign(base, anchors, vec_col, id_col).withColumn(
-        "origin", F.lit("base")
-    )
-    d = ivf_assign(delta, anchors, vec_col, id_col).withColumn(
-        "origin", F.lit("delta")
-    )
-    return b.unionByName(d)
+    anchors = _ivf_anchors(base, n_cells, vec_col, id_col)
+
+    def _tagged(df: DataFrame, origin: str) -> DataFrame:
+        return ivf_assign(df, anchors, vec_col).select(
+            F.col(id_col).alias("vec_id"),
+            "cell",
+            "a_sim",
+            F.lit(origin).alias("origin"),
+        )
+
+    return _tagged(base, "base").unionByName(_tagged(delta, "delta"))
 
 
 def ivf_knn_indegree(
@@ -1556,59 +1227,18 @@ def ivf_knn_indegree(
     Candidates meet only through the cell equi-join (|cell|² work per
     cell, the semantic_dedup shape); vectors never retrieved appear as
     in_degree 0 via the left join.  Returns (in_degree, n_vectors).
+    Zero-norm and NULL vectors are outside the operator's domain
+    (dot_seq in the pair stage is not null-tolerant).
     """
-    # assignment on the one-pass multi-anchor Arrow path (r14): the r13
-    # shape crossJoined corpus x n_cells (each vec shipped through the
-    # Python boundary n_cells times) and ran a corpus-wide row_number
-    # window whose exchange carried the vec payload 8-fold; the
-    # ivf_assign pattern computes every anchor cosine in ONE Arrow
-    # projection (anchor_cosines_seq — bit-identical to the
-    # dot_seq/_norm folds, norms inside the UDF use the same
-    # index-order accumulation) and takes the argmax with an n_cells
-    # struct sort, so assignment is shuffle-free.  Window-equivalence
-    # of the struct sort (NaN greatest, -0.0 == +0.0, anchor-id
-    # tiebreak) follows ivf_assign's normalization, pinned in
-    # tests/test_hubness_assign.py.  Zero-norm and NULL vectors are
-    # outside the operator's domain either way (ANSI divide-by-zero /
-    # dot_seq null-intolerance in the replaced shape and in the pair
-    # stage below); null vecs among the lowest ids are skipped when
-    # freezing the anchor set.
-    a_rows = sorted(
-        (r[0], list(r[1]))
-        for r in corpus.select(id_col, vec_col).orderBy(id_col)
-        .limit(n_cells).collect()
-        if r[1] is not None
-    )  # bounded: n_cells rows
-    if not a_rows:
-        scored0 = corpus.select(F.col(id_col).alias("id")).limit(0)
-        return scored0.groupBy(
-            F.lit(0).cast("bigint").alias("in_degree")
-        ).agg(F.count("*").cast("bigint").alias("n_vectors"))
-    cos = anchor_cosines_seq([v for (_aid, v) in a_rows])
-    scored = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
-        cos(F.col(vec_col)).alias("__cs"),
-    )
-
-    def _key(r):
-        # SortExec normalizes -0.0 to 0.0 and ranks NaN greatest
-        # (DESC -> first); sort_array's struct ordering does neither
-        # (the ivf_assign normalization)
-        return F.when(F.isnan(r), F.lit(float("-inf"))).otherwise(
-            -(r + F.lit(0.0))
-        )
-
-    cands = [
-        F.struct(
-            _key(F.round(F.col("__cs")[i], 6)).alias("ns"),
-            F.lit(aid).alias("aid"),
-        )
-        for i, (aid, _v) in enumerate(a_rows)
-    ]
-    best = F.element_at(F.sort_array(F.array(*cands)), 1)
-    cells = scored.select("id", "vec", "nrm", best["aid"].alias("cell"))
+    cells = ivf_assign(
+        corpus.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            _norm(F.col(vec_col)).alias("nrm"),
+        ),
+        _ivf_anchors(corpus, n_cells, vec_col, id_col),
+        "vec",
+    ).select("id", "vec", "nrm", "cell")
     cells = cells.localCheckpoint(eager=True)  # both join sides share it
     a = cells.select(
         F.col("id").alias("qid"), F.col("vec").alias("qv"),
@@ -1739,8 +1369,7 @@ def kcenter_coreset(
 # recomputes centroids as half-up integer means — so the codebook, the
 # codes, and the ADC scan are bit-reproducible in any engine and under any
 # partitioning, while still being genuinely DATA-LEARNED (unlike
-# pq_codebook_det's corpus-independent grid).  MLlib KMeans (pq_index /
-# pq_topk) stays as the float path, covered by recall/determinism units.
+# pq_codebook_det's corpus-independent grid).
 # ---------------------------------------------------------------------------
 
 

@@ -2273,16 +2273,13 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     #3): 3 exact integer Lloyd rounds from the md5 grid init, then the
     classic encode → ADC lookup-table scan → exact re-rank.
 
-    Until r10 this query rode MLlib KMeans codebooks and was rows-only
-    (its sole evidence recall floors — the r9 verdict's ask #4); the
-    integer Lloyd trainer (operators/similarity.py pq_codebook_lloyd)
-    keeps the learned-codebook character while making every stage —
-    training included — hash-match the unrolled DuckDB oracle.  The
-    float MLlib path (pq_index / pq_topk) remains as an operator under
-    recall/determinism/upsert units (tests/test_storage_ivf.py,
-    tests/test_index_upsert.py).  A pure-Python integer Lloyd
-    reference (tests/test_estimator_references.py) pins the trainer
-    against a third implementation.  Scale: per round, the corpus
+    The integer Lloyd trainer (operators/similarity.py
+    pq_codebook_lloyd) keeps the learned-codebook character while
+    making every stage — training included — hash-match the unrolled
+    DuckDB oracle; its recall floor is tests/test_storage_ivf.py.  A
+    pure-Python integer Lloyd reference
+    (tests/test_estimator_references.py) pins the trainer against a
+    third implementation.  Scale: per round, the corpus
     meets only the broadcast 1024-row codebook and reduces to a
     <=1024-row census (bounded driver merge); the ADC scan shuffles
     the corpus once, on the (query, doc) agg key.
@@ -2357,10 +2354,10 @@ def similarity_pq_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable sibling of similarity_pq_topk.
 
     Same three stages (encode → ADC lookup-table scan → exact refine),
-    but codebook anchors come from pq_codebook_det instead of KMeans,
-    so DuckDB regenerates the identical index and the full pipeline
-    hash-matches.  The KMeans variant keeps learned recall (unit
-    tests); this one proves the ADC + re-rank math end-to-end.
+    but codebook anchors come from pq_codebook_det instead of Lloyd
+    training, so DuckDB regenerates the identical index from md5
+    arithmetic alone; this one proves the ADC + re-rank math
+    end-to-end.
     """
     from .operators.similarity import pq_topk_det
 
@@ -9175,10 +9172,9 @@ _COS6 = "ROUND(" + _COS_RAW + ", 6)"
     """,
 )
 def similarity_ivf_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic IVF ANN (the oracle-checkable sibling of the
-    KMeans ivf_topk, exactly as similarity_pq_topk_det is to PQ):
-    coarse cells from the 8 lowest-id vectors as fixed anchors, corpus
-    assigned to its best cell, queries probing their 2 best cells,
+    """Deterministic IVF ANN: coarse cells from the 8 lowest-id
+    vectors as fixed anchors, corpus assigned to its best cell (one
+    ivf_assign definition), queries probing their 2 best cells,
     exact cosine top-5 inside the probed cells.  Candidates meet ONLY
     through the cell equi-join — the inverted-file property that makes
     ANN a bucketed join instead of a corpus cross product at 100 TB.
@@ -14514,8 +14510,8 @@ def similarity_ivfpq_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook; unpruned it reaches 0.84 — see
     tests/test_ivfpq_recall.py).  Every stage is an equi-join; the
     raw vectors are touched data-proportionally only by the index
-    build.  operators/similarity.py:ivfpq_topk_det; BNLJ_BY_DESIGN:
-    the broadcast 8-row anchor set + 16-row code sample.
+    build.  operators/similarity.py:ivfpq_topk_det (cells via
+    ivf_assign against the 8 lowest-id sample rows).
     """
     from .operators.similarity import ivfpq_topk_det
 
@@ -17195,8 +17191,9 @@ def similarity_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (upsert(index(base), delta) == index(base UNION delta) under a
     frozen quantizer) is proven separately in
     tests/test_index_upsert.py.  Scale: per-upsert work is
-    |delta| x n_cells rows against an n_cells-row broadcast — base is
-    never rescanned (operators/similarity.py:ivf_index_upsert).
+    |delta| x n_cells inside one Arrow projection against the
+    collected n_cells-row anchor set — base is never rescanned
+    (operators/similarity.py:ivf_index_upsert).
     """
     from .operators.similarity import ivf_index_upsert
 
@@ -17249,8 +17246,8 @@ def similarity_pq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerates the md5-derived codebook and every code assignment
     from scratch — one hash certifies both halves of
     encode(base) UNION encode(delta) == encode(base UNION delta)
-    (the rebuild-equivalence theorem, proven with the learned-KMeans
-    codebook variant too in tests/test_index_upsert.py).  Scale:
+    (the rebuild-equivalence theorem, proven in
+    tests/test_index_upsert.py).  Scale:
     per-upsert work is |delta| x m x n_codes rows against a 1024-row
     broadcast codebook; exact decimal distances, min-struct argmin
     hash agg (operators/similarity.py:pq_index_upsert / pq_assign).
@@ -18133,7 +18130,9 @@ def similarity_recall_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     every join and every cosine; one (level, query) rank window, one
     hit equi-join, one agg.  The 15-query set bounds every relation.
     """
-    from .operators.similarity import _norm, cosine, cosine_topk, dot_seq
+    from .operators.similarity import (
+        _ivf_anchors, _norm, cosine_topk, dot_seq, ivf_assign,
+    )
 
     emb = _t(spark, sf_dir)["embeddings"].localCheckpoint(eager=True)
     queries_df = emb.filter(F.col("vec_id") < 15)
@@ -18141,42 +18140,25 @@ def similarity_recall_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
         emb, queries_df, "embedding", "vec_id", k=5, round_decimals=6
     ).select("query_id", "neighbor_id").localCheckpoint(eager=True)
 
-    anchors = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("a_vec"))
-    )
-
-    def ranked_cells(side, sid, svec, keep):
-        scored = side.crossJoin(F.broadcast(anchors)).select(
-            sid, svec, "anchor_id",
-            F.round(cosine(F.col(svec), F.col("a_vec")), 6).alias("a_sim"),
-        )
-        w = Window.partitionBy(sid).orderBy(F.desc("a_sim"), F.asc("anchor_id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= keep)
-            .select(
-                sid, svec, _norm(F.col(svec)).alias("nrm"),
-                F.col("anchor_id").alias("cell"), "rn",
-            )
-        )
-
-    cs = ranked_cells(
+    anchors = _ivf_anchors(emb, 8)
+    cs = ivf_assign(
         emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
-        "id", "vec", 1,
+        anchors,
+        "vec",
     )
-    qa = ranked_cells(
+    qa = ivf_assign(
         queries_df.select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         ),
-        "qid", "qvec", 4,
+        anchors,
+        "qvec",
+        4,
     )
     qa2 = qa.select(
         "qid", "qvec", "cell",
-        F.col("nrm").alias("qnrm"), F.col("rn").alias("prn"),
+        _norm(F.col("qvec")).alias("qnrm"), F.col("rank").alias("prn"),
     )
-    cs2 = cs.select("id", "vec", "cell", F.col("nrm").alias("cnrm"))
+    cs2 = cs.select("id", "vec", "cell", _norm(F.col("vec")).alias("cnrm"))
     cand = (
         F.broadcast(qa2)
         .join(cs2, "cell")
@@ -18850,27 +18832,20 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     |corpus|-row best table.  Shape: cell equi-join pairs with Arrow
     dot_seq over precomputed norms — never all-pairs.
     """
-    from .operators.similarity import _norm, cosine, dot_seq
+    from .operators.similarity import _ivf_anchors, _norm, dot_seq, ivf_assign
 
     emb = _t(spark, sf_dir)["embeddings"]
-    anchors = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("a_vec"))
-    )
-    scored = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("vec"),
-        _norm(F.col("embedding")).alias("nrm"),
-    ).crossJoin(F.broadcast(anchors))
-    w = Window.partitionBy("id").orderBy(
-        F.desc(F.round(cosine(F.col("vec"), F.col("a_vec")), 6)),
-        F.asc("anchor_id"),
-    )
     cells = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "vec", "nrm", F.col("anchor_id").alias("cell"))
+        ivf_assign(
+            emb.select(
+                F.col("vec_id").alias("id"),
+                F.col("embedding").alias("vec"),
+                _norm(F.col("embedding")).alias("nrm"),
+            ),
+            _ivf_anchors(emb, 8),
+            "vec",
+        )
+        .select("id", "vec", "nrm", "cell")
         .localCheckpoint(eager=True)  # both pair sides + the left join
     )
     pairs = (
@@ -19808,9 +19783,9 @@ def embedding_pq_distortion_by_cell(spark: SparkSession, sf_dir: str) -> DataFra
     two frozen-index primitives end to end — a drift in either
     assignment breaks the hash.  Scale: encode is |corpus| x m x
     n_codes vs a broadcast codebook; cell assign is |corpus| x
-    n_cells vs a broadcast anchor row set; one keyed agg.
+    n_cells in one Arrow projection; one keyed agg.
     """
-    from .operators.similarity import ivf_assign, pq_codebook_det
+    from .operators.similarity import _ivf_anchors, ivf_assign, pq_codebook_det
 
     emb = _t(spark, sf_dir)["embeddings"]
     dim = 64
@@ -19846,15 +19821,7 @@ def embedding_pq_distortion_by_cell(spark: SparkSession, sf_dir: str) -> DataFra
         .select("id", F.col("mn.dist2").alias("best2"))
     )
     sse = best.groupBy("id").agg(F.sum("best2").alias("sse"))
-    anchors = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("anchor_id"),
-            F.col("embedding").alias("a_vec"),
-        )
-    )
-    cells = ivf_assign(emb, anchors).select(
+    cells = ivf_assign(emb, _ivf_anchors(emb, 8)).select(
         F.col("vec_id").alias("id"), "cell"
     )
     return (
@@ -20083,23 +20050,15 @@ def similarity_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFra
     Deleted ids are the deterministic vec_id % 9 == 4 shard (the
     GDPR-erasure batch of compliance_delete_cascade, applied to the
     vector index).  Shape:
-    one frozen-anchor assignment (broadcast 8-row anchor set) + one
+    one frozen-anchor assignment (ivf_assign, 8-row anchor set) + one
     cell-keyed agg; integer counts, one identical-integer ratio
     rounded 6 dp, and the compaction decision cross-multiplied to
     exact integers (10*dead >= total), never a float threshold.
     """
-    from .operators.similarity import ivf_assign
+    from .operators.similarity import _ivf_anchors, ivf_assign
 
     emb = _t(spark, sf_dir)["embeddings"]
-    anchors = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("anchor_id"),
-            F.col("embedding").alias("a_vec"),
-        )
-    )
-    cells = ivf_assign(emb, anchors)
+    cells = ivf_assign(emb, _ivf_anchors(emb, 8))
     marked = cells.select(
         "cell", (F.col("vec_id") % 9 == 4).alias("dead")
     )
@@ -21837,15 +21796,10 @@ def similarity_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before every rank (tiebreak on ids); k-NN means are decimal sums
     of 6-dp values; the margin division is one IEEE op both engines.
     """
-    from .operators.similarity import _norm, dot_seq, ivf_assign
+    from .operators.similarity import _ivf_anchors, _norm, dot_seq, ivf_assign
 
     emb = _t(spark, sf_dir)["embeddings"]
-    anchors = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("a_vec"))
-    )
-    cells = ivf_assign(emb, anchors).select("vec_id", "cell")
+    cells = ivf_assign(emb, _ivf_anchors(emb, 8)).select("vec_id", "cell")
     base = emb.join(cells, "vec_id").select(
         F.col("vec_id").alias("id"),
         "label",
@@ -22954,15 +22908,12 @@ def embedding_drift_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row totals join (BNLJ_BY_DESIGN).  Integer counts;
     shares rounded 6 dp per row.
     """
-    from .operators.similarity import ivf_assign
+    from .operators.similarity import _ivf_anchors, ivf_assign
 
     emb = _t(spark, sf_dir)["embeddings"]
     base = emb.filter(F.col("vec_id") % 2 == 0)
     delta = emb.filter(F.col("vec_id") % 2 == 1)
-    anchors = base.orderBy("vec_id").limit(8).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("embedding").cast("array<double>").alias("a_vec"),
-    )
+    anchors = _ivf_anchors(base, 8)
     tagged = (
         ivf_assign(base, anchors).select("cell").withColumn(
             "snap", F.lit("base"))

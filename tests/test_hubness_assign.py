@@ -1,16 +1,20 @@
-"""ivf_knn_indegree cell assignment: the r14 one-pass Arrow
-struct-sort argmax must be row-identical to the r13 crossJoin+window
-shape it replaced — including the normalization corners the struct
-sort does not share with SortExec (-0.0 == +0.0, anchor-id tiebreak
-on exact 6-dp ties); zero-norm and NULL vectors are outside the
-operator's domain (see notes in _mk_corpus)."""
+"""IVF cell assignment: ivf_assign's one-pass Arrow struct-sort
+ranking must be row-identical to the crossJoin+window shape it
+replaced — including the normalization corners the struct sort does
+not share with SortExec (-0.0 == +0.0, anchor-id tiebreak on exact
+6-dp ties) — for the corpus (1 cell) and for queries (n_probe cells,
+rank order).  Zero-norm and NULL vectors are outside
+ivf_knn_indegree's domain (see notes in _mk_corpus); ivf_assign's NULL
+handling is pinned in tests/test_index_upsert.py."""
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ingest_pipeline_spark.operators.similarity import (
+    _ivf_anchors,
     _norm,
     dot_seq,
+    ivf_assign,
     ivf_knn_indegree,
 )
 
@@ -34,8 +38,7 @@ def _mk_corpus(spark):
         # NOTE: no zero vector — under ANSI (Spark 4 default) the
         # replaced Catalyst-side division crashed on zero norms, so
         # zero-norm vectors are outside the operator's domain; the
-        # Arrow path's NaN normalization in _key is inherited from
-        # ivf_assign and covered there.
+        # Arrow path's NaN normalization is ivf_assign's sort key.
         # NOTE: no NULL embedding either — dot_seq (used by both
         # the replaced shape's scoring and the operator's pair stage)
         # is not null-tolerant, so null vecs are likewise outside the
@@ -49,7 +52,7 @@ def _mk_corpus(spark):
     )
 
 
-def _window_cells(corpus, n_cells=8):
+def _window_cells(corpus, n_cells=8, keep=1):
     """The replaced r13 shape, verbatim (crossJoin + row_number)."""
     anchors = (
         corpus.orderBy("vec_id")
@@ -82,53 +85,26 @@ def _window_cells(corpus, n_cells=8):
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", F.col("anchor_id").alias("cell"))
+        .filter(F.col("rn") <= keep)
+        .select("id", F.col("anchor_id").alias("cell"), "rn")
     )
 
 
 def test_struct_sort_assignment_matches_window_shape(spark):
     corpus = _mk_corpus(spark)
-    ref = {
-        r["id"]: r["cell"] for r in _window_cells(corpus).collect()
-    }
-    # the operator does not expose cells directly; recompute them the
-    # same way its first stage does and compare, then sanity-check the
-    # end-to-end result is non-degenerate
-    from ingest_pipeline_spark.operators import similarity as S
-
-    a_rows = sorted(
-        (r[0], list(r[1]))
-        for r in corpus.select("vec_id", "embedding")
-        .orderBy("vec_id").limit(8).collect()
-        if r[1] is not None
-    )
-    cos = S.anchor_cosines_seq([v for (_aid, v) in a_rows])
-    scored = corpus.select(
-        F.col("vec_id").alias("id"),
-        cos(F.col("embedding")).alias("__cs"),
-    )
-
-    def _key(r):
-        return F.when(F.isnan(r), F.lit(float("-inf"))).otherwise(
-            -(r + F.lit(0.0))
-        )
-
-    cands = [
-        F.struct(
-            _key(F.round(F.col("__cs")[i], 6)).alias("ns"),
-            F.lit(aid).alias("aid"),
-        )
-        for i, (aid, _v) in enumerate(a_rows)
-    ]
-    best = F.element_at(F.sort_array(F.array(*cands)), 1)
-    got = {
-        r["id"]: r["cell"]
-        for r in scored.select("id", best["aid"].alias("cell")).collect()
-    }
-    assert got == ref
+    anchors = _ivf_anchors(corpus, 8)
+    for keep in (1, 3):
+        ref = {
+            (r["id"], r["cell"], r["rn"])
+            for r in _window_cells(corpus, keep=keep).collect()
+        }
+        got = {
+            (r["vec_id"], r["cell"], r["rank"])
+            for r in ivf_assign(corpus, anchors, n_probe=keep).collect()
+        }
+        assert got == ref, keep
     # ties and negative-alignment rows really exercised the corners
-    assert 10 in got and 14 in got
+    assert {10, 14} <= {i for i, _c, _r in got}
 
 
 def test_indegree_histogram_counts(spark):
@@ -147,3 +123,21 @@ def test_empty_corpus_yields_empty_histogram(spark):
         [], "vec_id int, embedding array<double>"
     )
     assert ivf_knn_indegree(empty, k=2, n_cells=4).count() == 0
+
+
+def test_one_ivf_quantizer_in_package():
+    """Source pin: the deterministic IVF quantizer has ONE definition.
+    Every cell assignment goes through ivf_assign (the only caller of
+    the Arrow anchor cosine), no hand-rolled crossJoin + window copy
+    remains, and the MLlib KMeans IVF/PQ path stays deleted."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ingest_pipeline_spark"
+    srcs = {p: p.read_text() for p in pkg.rglob("*.py")}
+    calls = sum(
+        s.count("anchor_cosines_seq(") - s.count("def anchor_cosines_seq(")
+        for s in srcs.values()
+    )
+    assert calls == 1, calls
+    assert not [p for p, s in srcs.items() if "crossJoin(F.broadcast(anchors))" in s]
+    assert "KMeans" not in (pkg / "operators" / "similarity.py").read_text()

@@ -7,7 +7,8 @@ maintainer can alternate incremental appends and full rebuilds and get
 bit-identical assignment tables.  Also guarded: the testdata split
 actually keeps the anchor set identical between base and base+delta
 (the precondition the registered query's split is chosen to satisfy),
-and assignment determinism under ties."""
+assignment determinism under ties, and NULL vectors among the anchor
+ids (window-reference parity, no crash)."""
 
 import os
 import sys
@@ -16,22 +17,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.window import Window  # noqa: E402
 
 from ingest_pipeline_spark.operators.similarity import (  # noqa: E402
+    _ivf_anchors,
+    cosine,
     ivf_assign,
     ivf_index_upsert,
 )
 from ingest_pipeline_spark.tables import load_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-
-
-def _anchors(df, n=8):
-    return (
-        df.orderBy("vec_id")
-        .limit(n)
-        .select(F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("a_vec"))
-    )
 
 
 def test_upsert_equals_rebuild_under_frozen_quantizer(spark):
@@ -46,7 +42,7 @@ def test_upsert_equals_rebuild_under_frozen_quantizer(spark):
     # full rebuild over base+delta with the SAME frozen (base) anchors
     rebuilt = {
         (r.vec_id, r.cell, r.a_sim)
-        for r in ivf_assign(emb, _anchors(base)).collect()
+        for r in ivf_assign(emb, _ivf_anchors(base, 8)).collect()
     }
     assert up == rebuilt and len(up) == emb.count()
 
@@ -76,24 +72,20 @@ def test_delta_assignment_touches_only_delta(spark):
         [(9001, [0.1] * 8), (9002, [-0.2] * 8)],
         "vec_id long, embedding array<double>",
     )
-    anchors = _anchors(base).collect()  # persisted index artifact
-    frozen = spark.createDataFrame(
-        [(r.anchor_id, r.a_vec) for r in anchors],
-        "anchor_id long, a_vec array<double>",
-    )
-    out = ivf_assign(delta, frozen).collect()
+    anchors = _ivf_anchors(base, 8)  # persisted index artifact
+    assigned = ivf_assign(delta, anchors)
+    plan = assigned._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "FileScan" not in plan
+    out = assigned.collect()
     assert {r.vec_id for r in out} == {9001, 9002}
     # every assignment picks a real anchor and the best-cosine one
-    aid = {r.anchor_id for r in anchors}
+    aid = {a for a, _v in anchors}
     assert all(r.cell in aid for r in out)
 
 
 def test_tie_breaks_deterministic(spark):
     # two anchors equidistant from the vector: lowest anchor_id wins
-    anchors = spark.createDataFrame(
-        [(5, [1.0, 0.0]), (2, [0.0, 1.0])],
-        "anchor_id long, a_vec array<double>",
-    )
+    anchors = [(5, [1.0, 0.0]), (2, [0.0, 1.0])]
     v = spark.createDataFrame(
         [(1, [1.0, 1.0])], "vec_id long, embedding array<double>"
     )
@@ -101,9 +93,59 @@ def test_tie_breaks_deterministic(spark):
     assert row.cell == 2
 
 
+def _window_cells(corpus, anchor_src, n_cells, keep):
+    """The crossJoin + row_number shape ivf_assign replaced: Catalyst
+    cosine() (NULL-tolerant), ORDER BY a_sim DESC (NULLS LAST),
+    anchor_id — the DuckDB oracles' semantics."""
+    anchors = (
+        anchor_src.orderBy("vec_id")
+        .limit(n_cells)
+        .select(F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("a_vec"))
+    )
+    scored = corpus.crossJoin(F.broadcast(anchors)).select(
+        "vec_id",
+        "anchor_id",
+        F.round(cosine(F.col("embedding"), F.col("a_vec")), 6).alias("a_sim"),
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.desc("a_sim"), F.asc("anchor_id"))
+    return {
+        (r.vec_id, r.anchor_id, r.a_sim, r.rn)
+        for r in scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= keep)
+        .collect()
+    }
+
+
+def test_null_vector_among_anchor_ids_matches_window(spark):
+    """A NULL vector among the n_cells lowest ids keeps its anchor slot
+    but never scores: no vector is assigned to it unless the vector is
+    NULL too (then every cosine is NULL and anchor-id order decides),
+    exactly the window reference — and neither ivf_assign nor
+    ivf_index_upsert crashes on it."""
+    schema = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0]), (4, [0.6, 0.8])], schema
+    )
+    delta = spark.createDataFrame([(5, [0.2, 0.9]), (6, None)], schema)
+    up = {
+        (r.vec_id, r.cell, r.a_sim)
+        for r in ivf_index_upsert(base, delta, n_cells=3).collect()
+    }
+    ref = _window_cells(base.unionByName(delta), base, 3, 1)
+    assert up == {(v, c, s) for v, c, s, _rn in ref}
+    assert {c for v, c, _s in up if v in (2, 6)} == {1}  # NULL vectors
+    assert 2 not in {c for v, c, _s in up if v not in (2, 6)}
+    # ranked probes: the NULL anchor ranks last for every live vector
+    probes = {
+        (r.vec_id, r.cell, r.a_sim, r.rank)
+        for r in ivf_assign(base, _ivf_anchors(base, 3), n_probe=3).collect()
+    }
+    assert probes == _window_cells(base, base, 3, 3)
+
+
 # --------------------------------------------------------------------------
 # PQ code-table upsert (operators/similarity.py pq_assign /
-# pq_index_upsert / pq_codebook_rows) — the same frozen-artifact theorem
+# pq_index_upsert) — the same frozen-artifact theorem
 # applied to the product-quantization path (r8 verdict ask #6).
 # --------------------------------------------------------------------------
 
@@ -128,39 +170,6 @@ def test_pq_upsert_equals_rebuild_under_frozen_codebook(spark):
     rebuilt = {
         (r.vec_id, r.j, r.code)
         for r in pq_assign(emb, cb, 8, dim // 8).collect()
-    }
-    assert up == rebuilt and len(up) == emb.count() * 8
-
-
-def test_pq_upsert_equals_rebuild_with_learned_codebooks(spark):
-    """The SAME theorem for the KMeans path: fit pq_index ONCE on the
-    base corpus, persist its codebooks (pq_codebook_rows), and prove
-    delta-encode + append == full re-encode of base+delta against the
-    frozen artifact — the maintenance loop a real deployment runs."""
-    from ingest_pipeline_spark.operators.similarity import (
-        pq_assign,
-        pq_codebook_rows,
-        pq_index,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    is_delta = (F.col("vec_id") % 10 == 7) & (F.col("vec_id") >= 100)
-    base, delta = emb.filter(~is_delta), emb.filter(is_delta)
-
-    _, codebooks = pq_index(base, m=8, n_codes=4)  # the persisted artifact
-    frozen = pq_codebook_rows(spark, codebooks)
-    dim = len(emb.select("embedding").first()[0])
-    up = {
-        (r.vec_id, r.j, r.code)
-        for df in (
-            pq_assign(base, frozen, 8, dim // 8),
-            pq_assign(delta, frozen, 8, dim // 8),
-        )
-        for r in df.collect()
-    }
-    rebuilt = {
-        (r.vec_id, r.j, r.code)
-        for r in pq_assign(emb, frozen, 8, dim // 8).collect()
     }
     assert up == rebuilt and len(up) == emb.count() * 8
 

@@ -177,8 +177,6 @@ BNLJ_BY_DESIGN = {
     "sessions_maintenance_overlap",  # broadcast ~days-sized window list
     "orders_backlog_aging",     # broadcast 1-row anchor date
     "orders_price_decile_stats",  # global_ntile's broadcast 1-row total
-    "similarity_ivf_topk_det",  # broadcast 8-row anchor set (IVF cells)
-    "similarity_ivfpq_topk_det",  # broadcast 8-row anchor set (IVF-PQ cells)
     "corpus_mix_temperature",  # broadcast 1-row total-token count
     "graph_modularity_brand",  # broadcast 1-row total-edge count
     "basket_association_rules",  # broadcast 1-row basket total
@@ -188,7 +186,6 @@ BNLJ_BY_DESIGN = {
     "graph_lpa_communities",  # broadcast 1-row total-edge count
     "supplier_topsis_ranking",  # broadcast 1-row norms + ideal points
     "sample_stratified_neyman",  # broadcast 1-row allocation denominator
-    "dedup_semantic_clusters",  # broadcast 8-row anchor set (SemDeDup cells)
     "sketch_hll_rolling_users",  # broadcast ~days spine over register rows
     "text_bigram_perplexity",   # broadcast 1-row vocabulary size
     "stats_linear_trend",       # broadcast 1-row corpus-min epoch
@@ -220,30 +217,20 @@ BNLJ_BY_DESIGN = {
                                 # 1-row corpus stats (branch reused)
     "stats_bootstrap_ci",       # broadcast 1-row day count + 1-row
                                 # lo/hi/moment frames
-    "similarity_index_upsert",  # broadcast 8-row frozen anchor set
-                                # (IVF quantizer; ivf_assign)
-    "embedding_hubness_audit",  # broadcast 8-row anchor set (IVF cells)
     "stats_theil_sen",          # windowed day-pair self-join: bounded by
                                 # |date domain| x 60 (gap cap), plus the
                                 # broadcast 1-row median-position frame
-    "similarity_recall_probe_curve",  # broadcast 8-row anchors + the
-                                # 15-query exact side (ann_recall's shape)
+    "similarity_recall_probe_curve",  # broadcast 15-query exact side
+                                # (ann_recall's shape)
     "embedding_matryoshka_agreement",  # broadcast 20-probe vector set,
                                 # id<>query_id pred (similarity_topk's
                                 # shape; r11 whole-vector rewrite)
     "embedding_drift_cells",    # broadcast 1-row snapshot totals
     "shard_rendezvous_stability",  # broadcast 1-row count/occupancy rows
     "stats_permutation_test",   # broadcast 1-row sizes/obs/count frames
-    "dedup_semantic_threshold_sweep",  # broadcast 8-row anchor set
-    "sample_kcenter_coreset",   # broadcast <=k-row selected set per round
-    "dedup_shingle_size_sweep", # broadcast 1-row per-k pair-count frames
     "dedup_span_coverage_audit",  # broadcast 1-row occurrence grand total
     "stats_benjamini_hochberg",  # broadcast 1-row m + 1-row kmax scalars
     "corpus_token_budget_allocation",  # broadcast 1-row budget scalar
-    "embedding_pq_distortion_by_cell",  # broadcast 8-row anchor set
-                                # (ivf_assign) for the per-cell breakdown
-    "similarity_index_delete_compact",  # broadcast 8-row anchor set
-                                # (ivf_assign) for the tombstone census
 }
 
 
@@ -262,7 +249,6 @@ GLOBAL_WINDOW_BY_DESIGN = {
     "orders_runs_test",  # daily series: rows = distinct days (~2.4k, fixed date domain)
     "search_rrf_fusion",  # final rank over the fused ≤40-row (two top-20 lists) relation
     "stats_bootstrap_ci",  # day-rank over ~2.4k fixed date domain + rank over the 200 replicate means
-    "corpus_mix_temperature",  # normalizer over the per-source weight rows (|sources|, a domain bound)
     "corpus_heaps_curve",  # cumulative pass over the 10 decile rows
     "stats_benjamini_hochberg",  # rank over |sources| x |langs| cells (domain bound)
     "corpus_token_budget_allocation",  # rank + prefix over |sources| rows
@@ -287,10 +273,15 @@ def test_no_query_plans_cartesian_or_slow_udf(spark, sf_dir):
     """Fleet-wide plan gate: no cartesian products, no row-at-a-time
     Python UDFs (BatchEvalPython), BNLJ only where a tiny broadcast
     side is the documented design, and no single-task global window
-    over data-proportional input."""
+    over data-proportional input.  Both allow-lists also fail the
+    other way: an entry whose query no longer plans its node is
+    stale and must be pruned."""
     from ingest_pipeline_spark.queries import oracle_sql  # noqa: F401
 
-    offenders = {}
+    offenders = {
+        name: ["allow-listed but not registered"]
+        for name in (BNLJ_BY_DESIGN | GLOBAL_WINDOW_BY_DESIGN) - set(queries())
+    }
     for name, fn in sorted(queries().items()):
         plan = _plan(fn(spark, sf_dir))
         marks = [
@@ -298,13 +289,18 @@ def test_no_query_plans_cartesian_or_slow_udf(spark, sf_dir):
             for m in ("CartesianProduct", "BatchEvalPython")
             if m in plan
         ]
-        if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_BY_DESIGN:
-            marks.append("BroadcastNestedLoopJoin")
+        bnlj = "BroadcastNestedLoopJoin" in plan
+        if bnlj != (name in BNLJ_BY_DESIGN):
+            marks.append(
+                "BroadcastNestedLoopJoin" if bnlj else "stale BNLJ_BY_DESIGN entry"
+            )
         gw = [
             g
             for g in _global_windows(plan)
             if "__prefix_pid" not in g
         ]
+        if name in GLOBAL_WINDOW_BY_DESIGN and not gw:
+            marks.append("stale GLOBAL_WINDOW_BY_DESIGN entry")
         if (
             gw
             and name not in GLOBAL_WINDOW_BY_DESIGN
