@@ -205,27 +205,7 @@ def main() -> None:
     # tier 2 gets its own subtotal
     tier2 = sorted(n for n in fns if n not in set(HEADLINE))
 
-    # warmup: JVM, parquet footers, codegen/broadcast machinery, and the
-    # Arrow Python-worker pool (session infrastructure — not any query's
-    # cost).  The similarity plan shapes run once at the smallest SF so
-    # their first-execution compile + worker spin-up doesn't pollute the
-    # per-query sf0.1 numbers.
-    fns[names[0]](spark, sf_dir).count()
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        # graph_modularity_brand warms the co-purchase family: whichever
-        # copurchase-edge-build query runs FIRST in a session pays ~10 s
-        # of one-time JIT/codegen (measured r12: first-in-session 13 s,
-        # warm 2.5 s, regardless of which family member goes first) —
-        # the r11 driver graded that spread as a 2.2x regression on
-        # unchanged code (r11 verdict ask #7)
-        # sample_kcenter_coreset warms its own plan shape: 7 sequential
-        # driver barriers each pay first-execution JIT/codegen in a cold
-        # session (r12 driver graded 11.99 s vs ~2.5 s warm)
-        for warm_q in ("similarity_topk", "embedding_near_dup",
-                       "graph_modularity_brand", "sample_kcenter_coreset"):
-            if warm_q in fns:
-                fns[warm_q](spark, warm_sf).count()
+    warm_session(spark, fns, sf_dir)
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     # the graded headline number gets one extra rep: r10's driver run
@@ -236,31 +216,9 @@ def main() -> None:
     reps_headline = max(
         reps, int(os.environ.get("SPARK_GRAFT_BENCH_REPS_HEADLINE", "3"))
     )
-    def _sweep_checkpoints() -> None:
-        # every queries() call builds a FRESH plan, so each rep's eager
-        # localCheckpoint blocks are garbage the moment count() returns
-        # — but py4j keeps the JVM RDD refs alive until a Python GC
-        # runs, so the ContextCleaner frees them erratically MID-
-        # measurement (r12: two same-code full runs spread 121.6 vs
-        # 137.6 s headline with the excess concentrated in random
-        # checkpoint-heavy queries — graph_pagerank_suppliers 2.2 vs
-        # 10.3 s — while the median query ratio was 0.983).  Unpersist
-        # deterministically BETWEEN timed reps instead: the direct JVM
-        # unpersist frees the blocks immediately, no Python GC needed
-        # (a periodic gc.collect below bounds py4j stub growth).
-        # INVARIANT (r12 ADVICE): this unpersists EVERY persistent RDD
-        # in the context — safe because nothing in this harness persists
-        # across reps (tables.register_views caches plain DataFrames in
-        # a Python dict, not persisted RDDs).  If a future change adds an
-        # intentional cross-rep .persist()/.cache(), snapshot the ids
-        # before the timed rep and unpersist only the delta.
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(True)
-
     timings: dict[str, float] = {}
     first_total = 0.0
-    _sweep_checkpoints()  # warmups leave blocks too
+    sweep_checkpoints(spark)  # warmups leave blocks too
     for qi, name in enumerate(names + tier2):
         best = float("inf")
         # back-to-back reps of one query find its generated classes still
@@ -273,7 +231,7 @@ def main() -> None:
             best = min(best, elapsed)
             if rep == 0 and name in set(names):
                 first_total += elapsed
-            _sweep_checkpoints()
+            sweep_checkpoints(spark)
         if qi % 50 == 49:
             import gc
 
@@ -405,6 +363,54 @@ def main() -> None:
                 f.write(line + "\n")
         except OSError:
             pass  # read-only checkout: stdout line remains the contract
+
+
+def warm_session(spark, fns, sf_dir: str) -> None:
+    """Untimed session warm-up shared by bench.py and plans/measure.py:
+    JVM, parquet footers, codegen/broadcast machinery, and the Arrow
+    Python-worker pool (session infrastructure — not any query's
+    cost).  The similarity plan shapes run once at the smallest SF so
+    their first-execution compile + worker spin-up doesn't pollute the
+    per-query sf0.1 numbers."""
+    fns[HEADLINE[0]](spark, sf_dir).count()
+    warm_sf = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
+    if os.path.isdir(warm_sf):
+        # graph_modularity_brand warms the co-purchase family: whichever
+        # copurchase-edge-build query runs FIRST in a session pays ~10 s
+        # of one-time JIT/codegen (measured r12: first-in-session 13 s,
+        # warm 2.5 s, regardless of which family member goes first), a
+        # spread that reads as a 2.2x regression on unchanged code.
+        # sample_kcenter_coreset warms its own plan shape: 7 sequential
+        # eager barriers each pay first-execution JIT/codegen in a cold
+        # session (r12: 11.99 s cold vs ~2.5 s warm)
+        for warm_q in ("similarity_topk", "embedding_near_dup",
+                       "graph_modularity_brand", "sample_kcenter_coreset"):
+            if warm_q in fns:
+                fns[warm_q](spark, warm_sf).count()
+
+
+def sweep_checkpoints(spark) -> None:
+    """Unpersist every persistent RDD in the context, between timed reps.
+
+    Every queries() call builds a FRESH plan, so each rep's eager
+    localCheckpoint blocks are garbage the moment its action returns —
+    but py4j keeps the JVM RDD refs alive until a Python GC runs, so
+    the ContextCleaner frees them erratically MID-measurement (r12: two
+    same-code full runs spread 121.6 vs 137.6 s headline with the
+    excess concentrated in random checkpoint-heavy queries —
+    graph_pagerank_suppliers 2.2 vs 10.3 s — while the median query
+    ratio was 0.983).  The direct JVM unpersist frees the blocks
+    immediately, no Python GC needed (bench.py's periodic gc.collect
+    bounds py4j stub growth).
+    INVARIANT: this unpersists EVERY persistent RDD in the
+    context — safe because nothing in either harness persists across
+    reps (tables.register_views caches plain DataFrames in a Python
+    dict, not persisted RDDs).  If a future change adds an intentional
+    cross-rep .persist()/.cache(), snapshot the ids before the timed
+    rep and unpersist only the delta."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        it.next()._2().unpersist(True)
 
 
 if __name__ == "__main__":

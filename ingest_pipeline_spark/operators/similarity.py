@@ -423,6 +423,25 @@ def semantic_dedup(
     localCheckpointed once (three consumers: both join sides + the
     final left join).
     """
+    best = _semantic_best(corpus, vec_col, id_col, n_cells)
+    return best.select(
+        F.col("id").alias(id_col),
+        F.col("cell").cast("long").alias("cell"),
+        (F.col("best").isNull() | (F.col("best") < F.lit(threshold))).alias(
+            "keep"
+        ),
+        F.round(F.col("best"), 6).alias("best_lower_sim"),
+    )
+
+
+def _semantic_best(
+    corpus: DataFrame, vec_col: str, id_col: str, n_cells: int
+) -> DataFrame:
+    """The SemDeDup pair pipeline behind semantic_dedup and
+    dedup_semantic_threshold_sweep: per corpus vector, its ivf_assign
+    cell and ``best`` = the UNROUNDED max cosine to a lower-id vector
+    in the same cell (NULL when there is none).  Returns (id, cell,
+    best), one row per vector."""
     assigned = (
         ivf_assign(
             corpus.select(
@@ -451,16 +470,8 @@ def semantic_dedup(
         )
     )
     best = pairs.groupBy("id_b").agg(F.max("sim").alias("best"))
-    return (
-        assigned.join(best, assigned["id"] == best["id_b"], "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("cell").cast("long").alias("cell"),
-            (F.col("best").isNull() | (F.col("best") < F.lit(threshold))).alias(
-                "keep"
-            ),
-            F.round(F.col("best"), 6).alias("best_lower_sim"),
-        )
+    return assigned.join(best, assigned["id"] == best["id_b"], "left").select(
+        "id", "cell", "best"
     )
 
 
@@ -549,19 +560,57 @@ _DET_CB_ROWS_CACHE: dict = {}
 
 
 def _det_cb_rows(spark, m: int, n_codes: int, d_sub: int, tag: str = "pqdet"):
-    """Collected pq_codebook_det rows, cached per (session, params).
+    """pq_codebook_det as micro rows [(j, c, ps, cbv)], cached per
+    (session, params).
 
     The det codebook is corpus-independent and fully determined by its
     parameters, so the (bounded, m*n_codes*d_sub-row) collect happens
     once per process instead of once per encode — pq_index_upsert runs
-    two encodes per call and the bench runs every det query twice."""
+    two encodes per call, pq_codebook_lloyd starts from this grid, and
+    the bench runs every det query twice."""
     key = (id(spark), m, n_codes, d_sub, tag)
     if key not in _DET_CB_ROWS_CACHE:
-        _DET_CB_ROWS_CACHE[key] = [
-            (r["j"], r["c"], r["ps"], r["cb_val"])
-            for r in pq_codebook_det(spark, m, n_codes, d_sub, tag).collect()
-        ]
+        _DET_CB_ROWS_CACHE[key] = _cb_micro(
+            pq_codebook_det(spark, m, n_codes, d_sub, tag)
+        )
     return _DET_CB_ROWS_CACHE[key]
+
+
+def _cb_micro(cb: DataFrame) -> "list[tuple]":
+    """Collect a (j, c, ps, cb_val) codebook frame as micro rows
+    [(j, c, ps, cbv)], quantized Spark-side by `_micro` exactly as the
+    vectors are (bounded: m * n_codes * d_sub rows)."""
+    return [
+        (r.j, r.c, r.ps, r.cbv)
+        for r in cb.select("j", "c", "ps", _micro(F.col("cb_val")).alias("cbv"))
+        .collect()
+    ]
+
+
+def _lowest_id_rows(
+    corpus: DataFrame, n: int, vec_col: str, id_col: str
+) -> list:
+    """The ``n`` lowest-id rows as (id, vec, vec in micro-units), one
+    bounded collect (a TakeOrdered over the corpus).  Collected doubles
+    are exact IEEE values and the quantization stays Spark-side."""
+    vec = F.col(vec_col).cast("array<double>")
+    return (
+        corpus.select(id_col, vec, F.transform(vec, _micro))
+        .orderBy(id_col)
+        .limit(n)
+        .collect()
+    )
+
+
+def _sampled_cb(rows: list, d_sub: int) -> "list[tuple]":
+    """The corpus-SAMPLED PQ codebook in micro rows: subspace j's codes
+    are the j-subvectors of ``rows`` (from `_lowest_id_rows`), each code
+    labeled by its row's id (no rank relabeling needed)."""
+    return [
+        (pos // d_sub, r[0], pos % d_sub, v)
+        for r in rows
+        for pos, v in enumerate(r[2])
+    ]
 
 
 def pq_assign(
@@ -571,27 +620,17 @@ def pq_assign(
     d_sub: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _cb_rows=None,
 ) -> DataFrame:
     """Encode vectors against a FROZEN PQ codebook frame (j, c, ps,
     cb_val): per (vector, subspace), the nearest centroid by exact
-    int64 micro squared distance with a code tiebreak — the
-    pq_topk_det encode stage factored out so index build and index
-    upsert share ONE code-assignment definition (the ivf_assign
-    discipline applied to PQ).  The codebook frame is collected once
-    (bounded: m * n_codes * d_sub rows) and the assignment runs as a
-    single scan-side Arrow projection (`_assign_codes_micro`; decimal
-    equivalence documented there — the former explode -> broadcast
-    join -> double-groupBy shape cost two corpus shuffles per encode).
-    Internal callers that already hold the rows pass ``_cb_rows`` to
-    skip the collect (see `_det_cb_rows`).  Returns (vec_id, j, code)."""
-    if _cb_rows is None:
-        _cb_rows = [
-            (r["j"], r["c"], r["ps"], r["cb_val"]) for r in cb.collect()
-        ]
+    int64 micro squared distance with a code tiebreak.  The codebook
+    frame is collected once (bounded: m * n_codes * d_sub rows) and the
+    assignment runs as a single scan-side Arrow projection
+    (`_assign_codes_micro`, the one PQ encoder behind index build,
+    index upsert and the ADC scans).  Returns (vec_id, j, code)."""
     return _assign_codes_micro(
-        vectors, _cb_rows, m, d_sub, vec_col, id_col, code_type="int"
-    )
+        vectors, _cb_micro(cb), m, d_sub, vec_col, id_col
+    ).select("vec_id", "j", "code")
 
 
 def pq_index_upsert(
@@ -614,6 +653,7 @@ def pq_index_upsert(
     broadcast codebook; base is never rescanned.  Returns
     (vec_id, j, code, origin)."""
     spark = base.sparkSession
+    parts = [(base, "base"), (delta, "delta")]
     first = base.select(vec_col).first()
     if first is None or first[0] is None:
         # empty/NULL-leading base.  pq_codebook_det is corpus-independent,
@@ -622,8 +662,9 @@ def pq_index_upsert(
         # documented rebuild-equivalence encode(empty UNION delta) ==
         # encode(delta)).  Only when BOTH inputs are empty do we return
         # the empty typed frame (the empty-input battery requires it).
-        dfirst = delta.select(vec_col).first()
-        if dfirst is None or dfirst[0] is None:
+        parts = parts[1:]
+        first = delta.select(vec_col).first()
+        if first is None or first[0] is None:
             return (
                 base.select(F.col(id_col).alias("vec_id"))
                 .limit(0)
@@ -631,27 +672,18 @@ def pq_index_upsert(
                 .withColumn("code", F.lit(0))
                 .withColumn("origin", F.lit(""))
             )
-        dim = len(dfirst[0])
-        if dim % m != 0:
-            raise ValueError(f"vector dim {dim} not divisible by m={m}")
-        cb = pq_codebook_det(spark, m, n_codes, dim // m)
-        return pq_assign(
-            delta, cb, m, dim // m, vec_col, id_col,
-            _cb_rows=_det_cb_rows(spark, m, n_codes, dim // m),
-        ).withColumn("origin", F.lit("delta"))
     dim = len(first[0])
     if dim % m != 0:
         raise ValueError(f"vector dim {dim} not divisible by m={m}")
     d_sub = dim // m
-    cb = pq_codebook_det(spark, m, n_codes, d_sub)
-    rows = _det_cb_rows(spark, m, n_codes, d_sub)
-    b = pq_assign(
-        base, cb, m, d_sub, vec_col, id_col, _cb_rows=rows
-    ).withColumn("origin", F.lit("base"))
-    d = pq_assign(
-        delta, cb, m, d_sub, vec_col, id_col, _cb_rows=rows
-    ).withColumn("origin", F.lit("delta"))
-    return b.unionByName(d)
+    cb = _det_cb_rows(spark, m, n_codes, d_sub)
+    out = [
+        _assign_codes_micro(df, cb, m, d_sub, vec_col, id_col).select(
+            "vec_id", "j", "code", F.lit(origin).alias("origin")
+        )
+        for df, origin in parts
+    ]
+    return out[0] if len(out) == 1 else out[0].unionByName(out[1])
 
 
 def pq_topk_det(
@@ -664,30 +696,30 @@ def pq_topk_det(
     n_codes: int = 16,
     refine: int = 2,
 ) -> DataFrame:
-    """Oracle-checkable PQ top-k: deterministic codebook, LUT-join ADC
-    scan, decimal-exact sums, exact re-rank of the top refine·k.
+    """Oracle-checkable PQ top-k: deterministic codebook, LUT ADC scan,
+    exact re-rank of the top refine·k.
 
     The codebook is ``pq_codebook_det``'s md5 grid (``pq_topk_lloyd``
     is the learned-codebook sibling), so every stage is
     SQL-expressible and hash-matches the DuckDB oracle:
 
-    1. **Encode** — explode vectors to (id, dim) rows, join the
-       broadcast codebook on the (subspace, sub-dim) key, one keyed agg
-       for per-(id, subspace, code) squared distance (products rounded
-       to 12 dp, summed as DECIMAL(28,12) — exact under any
-       partitioning), argmin with a code tiebreak.
-    2. **ADC scan** — the classic lookup-table formulation: partial
-       dots per (query, subspace, code) are ONE tiny aggregation
-       (queries × codebook), broadcast; corpus codes join it on the
-       (subspace, code) key and a map-side-partial sum over m decimals
-       yields the approximate dot.  The 100 TB corpus is never
-       shuffled until the (query, doc)-keyed agg, and never meets the
-       raw query vectors.
-    3. **Refine** — top refine·k ADC candidates per query re-scored
-       exactly against the stored vectors (decimal dot), rank ≤ k with
-       id tiebreaks at both stages.
+    1. **Encode** — the shared frozen-codebook assignment
+       (`_assign_codes_micro`, also behind pq_index_upsert): per
+       (id, subspace) the nearest code by exact int64 micro squared
+       distance, code tiebreak, one scan-side Arrow projection.
+    2. **ADC scan + refine** — `_adc_rerank`: partial dots per (query,
+       subspace, code) are ONE tiny aggregation (queries × codebook),
+       broadcast; corpus codes join it on the (subspace, code) key and
+       a map-side-partial sum over m partial dots yields the
+       approximate dot; the top refine·k per query are re-scored
+       exactly against the stored vectors, rank ≤ k with id tiebreaks
+       at both stages.
+
+    All sums are int64 micro-units: a product of two 6-dp values is
+    exactly a 12-dp decimal, so every sum and rank equals the oracle's
+    12-dp decimal one, and ``round(dot_i / 1e12, 6)`` is the same
+    double as the rounded decimal.
     """
-    spark = corpus.sparkSession
     first = corpus.select(vec_col).first()
     if first is None or first[0] is None:
         return _empty_topk(queries, id_col)
@@ -695,72 +727,17 @@ def pq_topk_det(
     if dim % m != 0:
         raise ValueError(f"vector dim {dim} not divisible by m={m}")
     d_sub = dim // m
-    cb = pq_codebook_det(spark, m, n_codes, d_sub)
-    x = corpus.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val"),
-    ).select(
-        "id",
-        "pos",
-        F.round(F.col("val"), 6).alias("val"),
-        (F.col("pos") / d_sub).cast("int").alias("j"),
-        (F.col("pos") % d_sub).cast("int").alias("ps"),
+    cb = _det_cb_rows(corpus.sparkSession, m, n_codes, d_sub)
+    codes = _assign_codes_micro(corpus, cb, m, d_sub, vec_col, id_col).select(
+        F.col("vec_id").alias("id"), "j", "code"
     )
-    dec = lambda c: F.sum(F.round(c, 12).cast("decimal(28,12)"))  # noqa: E731
-    # encode via the SHARED frozen-codebook assignment (pq_assign) so
-    # the scan, the upsert path, and the unit theorem all run one
-    # code-assignment definition; argmin is a min-of-struct hash agg
-    # (map-side partials, never a per-(id, j) sort window)
-    codes = pq_assign(
-        corpus, cb, m, d_sub, vec_col, id_col,
-        _cb_rows=_det_cb_rows(spark, m, n_codes, d_sub),
-    ).select(F.col("vec_id").alias("id"), "j", "code")
-    qx = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val"),
+    return _adc_rerank(
+        corpus, queries, codes, cb, vec_col, id_col, d_sub, k, refine
     ).select(
         "query_id",
-        "pos",
-        F.round(F.col("val"), 6).alias("qval"),
-        (F.col("pos") / d_sub).cast("int").alias("j"),
-        (F.col("pos") % d_sub).cast("int").alias("ps"),
-    )
-    lut = (
-        qx.join(F.broadcast(cb), ["j", "ps"])
-        .groupBy("query_id", "j", "c")
-        .agg(dec(F.col("qval") * F.col("cb_val")).alias("pdot"))
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (codes["j"] == lut["j"]) & (codes["code"] == lut["c"]),
-        )
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("pdot").alias("approx_dot"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("approx_dot"), F.asc("id"))
-    cand = (
-        adc.withColumn("__rn", F.row_number().over(w_adc))
-        .filter(F.col("__rn") <= refine * k)
-        .select("query_id", "id")
-    )
-    ex = (
-        cand.join(x.select("id", "pos", "val"), "id")
-        .join(F.broadcast(qx.select("query_id", "pos", "qval")), ["query_id", "pos"])
-        .groupBy("query_id", "id")
-        .agg(dec(F.col("qval") * F.col("val")).alias("dot_d"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_d"), F.asc("id"))
-    return (
-        ex.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(F.col("dot_d").cast("double"), 6).alias("dot"),
-            "rank",
-        )
+        "neighbor_id",
+        F.round(F.col("dot_i") / F.lit(1000000000000.0), 6).alias("dot"),
+        "rank",
     )
 
 
@@ -788,47 +765,46 @@ def ivfpq_topk_det(
     anchor-id tiebreak — ``ivf_topk_det``'s quantizer) and the PQ
     codebook is SAMPLED from the corpus — subspace j's codes are the
     j-subvectors of the n_codes lowest-id vectors (code label = the
-    sample's id, so no rank relabeling is needed).  A data-sampled
-    codebook quantizes the corpus distribution far better than the
-    md5-uniform ``pq_codebook_det`` (measured recall@5 at sf0.01,
-    unpruned, refine=20: 0.36 random -> 0.84 sampled at m=32/d_sub=2;
-    with the 2-of-8-cell IVF prune the composition holds 0.45 while
-    scanning ~25% of codes).  Distance/dot partial sums are
-    12-dp-rounded products in DECIMAL(28,12) (exact under any
-    partitioning), ranks always tiebroken by id.
+    sample's id, `_sampled_cb`).  A data-sampled codebook quantizes the
+    corpus distribution far better than the md5-uniform
+    ``pq_codebook_det`` (measured recall@5 at sf0.01, unpruned,
+    refine=20: 0.36 random -> 0.84 sampled at m=32/d_sub=2; with the
+    2-of-8-cell IVF prune the composition holds 0.45 while scanning
+    ~25% of codes).  Encode, ADC scan and exact re-rank are the shared
+    int64 micro path of pq_topk_det (`_assign_codes_micro`,
+    `_adc_rerank` with the probed-cell pairs as its candidates); ranks
+    are always tiebroken by id.
 
     Scale shape: every stage is an equi-join — (cell) for the IVF
-    prune, (j, ps) broadcast for encode (the broadcast codebook is
-    dim x n_codes rows regardless of m), (id) and (query_id, j, code)
-    for the ADC scan, (id, pos) for the re-rank.  The corpus is
-    touched data-proportionally only by encode (the index build,
-    amortized across queries); per query the scan cost is
-    |probed cells| x m codes, never the corpus.  Returns
-    (query_id, neighbor_id, dot, rank<=k) ranked by exact inner
+    prune, (id) and (query_id, j, code) for the ADC scan, (id, pos)
+    for the re-rank; encode is a scan-side Arrow projection against
+    the closure codebook.  The corpus is touched data-proportionally
+    only by encode (the index build, amortized across queries); per
+    query the scan cost is |probed cells| x m codes, never the corpus.
+    Returns (query_id, neighbor_id, dot, rank<=k) ranked by exact inner
     product among the ADC survivors.
 
     The max(n_cells, n_codes) lowest-id sample vectors are collected
     ONCE driver-side (report-sized by contract — 16 rows here, one
     TakeOrdered over the corpus): the first n_cells are ivf_assign's
-    frozen anchors, the first n_codes are re-emitted as a literal
-    broadcast codebook relation.  Collected doubles are exact IEEE
-    values, and all rounding stays Spark-side, so results are
-    bit-identical to the join-built codebook while skipping four
-    corpus-scan jobs.
+    frozen anchors, the first n_codes are the codebook.
     """
-    spark = corpus.sparkSession
-    sample = (
-        corpus.select(id_col, F.col(vec_col).cast("array<double>"))
-        .orderBy(id_col)
-        .limit(max(n_cells, n_codes))
-        .collect()
-    )
+    sample = _lowest_id_rows(corpus, max(n_cells, n_codes), vec_col, id_col)
     if not sample or sample[0][1] is None:
         return _empty_topk(queries, id_col)
     dim = len(sample[0][1])
     if dim % m != 0:
         raise ValueError(f"vector dim {dim} not divisible by m={m}")
     d_sub = dim // m
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    if id_t not in ("tinyint", "smallint", "int", "bigint"):
+        # codes are labeled by sampled corpus ids and carried through the
+        # Arrow micro-argmin as an int64 label vector — a string-id corpus
+        # would crash inside the UDF with an opaque numpy error
+        raise ValueError(
+            f"ivfpq_topk_det requires an integer {id_col} (codes are "
+            f"labeled by sampled corpus ids); got {id_t}"
+        )
     anchors = [(r[0], r[1]) for r in sample[:n_cells]]
     cells = ivf_assign(
         corpus.select(F.col(id_col).alias("id"), vec_col), anchors, vec_col
@@ -839,97 +815,23 @@ def ivfpq_topk_det(
         vec_col,
         n_probe,
     ).select("query_id", "cell")
-    x = corpus.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val0"),
-    ).select(
-        "id",
-        "pos",
-        F.round(F.col("val0"), 6).alias("val"),
-        (F.col("pos") / d_sub).cast("int").alias("j"),
-        (F.col("pos") % d_sub).cast("int").alias("ps"),
-    )  # re-rank only (encode is the Arrow micro assignment below)
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    if id_t not in ("tinyint", "smallint", "int", "integer", "bigint", "long"):
-        # codes are labeled by sampled corpus ids and carried through the
-        # Arrow micro-argmin as an int64 label vector — a string-id corpus
-        # would crash inside the UDF with an opaque numpy error
-        raise ValueError(
-            f"ivfpq_topk_det requires an integer {id_col} (codes are "
-            f"labeled by sampled corpus ids); got {id_t}"
-        )
-    cb = spark.createDataFrame(
-        [
-            (pos // d_sub, r[0], pos % d_sub, r[1][pos])
-            for r in sample[:n_codes]
-            for pos in range(dim)
-        ],
-        f"j int, c {id_t}, ps int, cb_raw double",
-    ).select("j", "c", "ps", F.round("cb_raw", 6).alias("cb_val"))
-    dec = lambda c: F.sum(F.round(c, 12).cast("decimal(28,12)"))  # noqa: E731
-    # argmin encode via the Arrow micro assignment (decimal equivalence
-    # in _assign_codes_micro's docstring); collect the Spark-rounded
-    # codebook so the 6-dp HALF_UP values are byte-identical to the
-    # frame the LUT join uses (bounded: n_codes * dim rows)
-    cb_rows = [(r["j"], r["c"], r["ps"], r["cb_val"]) for r in cb.collect()]
-    codes = _assign_codes_micro(
-        corpus, cb_rows, m, d_sub, vec_col, id_col,
-        code_type="bigint" if id_t in ("bigint", "long") else id_t,
-    ).withColumnRenamed("vec_id", "id")
-    qx = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "qval0"),
-    ).select(
-        "query_id",
-        "pos",
-        F.round(F.col("qval0"), 6).alias("qval"),
-        (F.col("pos") / d_sub).cast("int").alias("j"),
-        (F.col("pos") % d_sub).cast("int").alias("ps"),
-    )
-    lut = (
-        qx.join(F.broadcast(cb), ["j", "ps"])
-        .groupBy("query_id", "j", "c")
-        .agg(dec(F.col("qval") * F.col("cb_val")).alias("pdot"))
-    )
-    candpairs = (
+    candidates = (
         probes.join(cells, "cell")
         .filter(F.col("id") != F.col("query_id"))
         .select("query_id", "id")
     )
-    adc = (
-        candpairs.join(codes, "id")
-        .join(F.broadcast(lut), ["query_id", "j"])
-        .filter(F.col("code") == F.col("c"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("pdot").alias("approx_dot"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_dot"), F.asc("id")
-    )
-    cand = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= refine * k)
-        .select("query_id", "id")
-    )
-    ex = (
-        cand.join(x.select("id", "pos", "val"), "id")
-        .join(
-            F.broadcast(qx.select("query_id", "pos", "qval")),
-            ["query_id", "pos"],
-        )
-        .groupBy("query_id", "id")
-        .agg(dec(F.col("qval") * F.col("val")).alias("dot_d"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_d"), F.asc("id"))
-    return (
-        ex.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(F.col("dot_d").cast("double"), 6).alias("dot"),
-            "rank",
-        )
+    cb = _sampled_cb(sample[:n_codes], d_sub)
+    codes = _assign_codes_micro(
+        corpus, cb, m, d_sub, vec_col, id_col, code_type=id_t
+    ).select(F.col("vec_id").alias("id"), "j", "code")
+    return _adc_rerank(
+        corpus, queries, codes, cb, vec_col, id_col, d_sub, k, refine,
+        candidates,
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("dot_i") / F.lit(1000000000000.0), 6).alias("dot"),
+        "rank",
     )
 
 
@@ -1196,9 +1098,14 @@ def ivf_index_upsert(
     over base+delta would produce, so snapshots can alternate between
     incremental and full builds freely.  Per upsert, work is
     |delta| x n_cells: the base corpus is touched only through the
-    n_cells-row anchor collect.  Returns (vec_id, cell, a_sim, origin).
+    n_cells-row anchor collect.  An empty base freezes its anchors from
+    the delta — where a rebuild over the empty base UNION delta draws
+    them too, so the invariant holds there as well.  Returns
+    (vec_id, cell, a_sim, origin).
     """
-    anchors = _ivf_anchors(base, n_cells, vec_col, id_col)
+    anchors = _ivf_anchors(base, n_cells, vec_col, id_col) or _ivf_anchors(
+        delta, n_cells, vec_col, id_col
+    )
 
     def _tagged(df: DataFrame, origin: str) -> DataFrame:
         return ivf_assign(df, anchors, vec_col).select(
@@ -1373,23 +1280,27 @@ def kcenter_coreset(
 # ---------------------------------------------------------------------------
 
 
+def _micro(val: Column) -> Column:
+    """A double in integer micro-units: round(round(val, 6) * 1e6) as
+    int64.  The inner 6-dp round is the det path's established
+    cross-engine quantization; the outer round only snaps the float
+    product to the integer it already sits within 1e-9 of, so no
+    half-boundary can straddle engines."""
+    return F.round(F.round(val, 6) * F.lit(1000000.0), 0).cast("long")
+
+
 def _x_micro(
     df: DataFrame, vec_col: str, id_col: str, d_sub: int
 ) -> DataFrame:
     """Explode vectors to integer micro-units: (id, pos, j, ps, v) with
-    v = round(round(val, 6) * 1e6) as int64.  The inner 6-dp round is
-    the det path's established cross-engine quantization; the outer
-    round only snaps the float product to the integer it already sits
-    within 1e-9 of, so no half-boundary can straddle engines."""
+    v = `_micro`(val)."""
     return df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val"),
     ).select(
         "id",
         "pos",
-        F.round(F.round(F.col("val"), 6) * F.lit(1000000.0), 0)
-        .cast("long")
-        .alias("v"),
+        _micro(F.col("val")).alias("v"),
         (F.col("pos") / d_sub).cast("int").alias("j"),
         (F.col("pos") % d_sub).cast("int").alias("ps"),
     )
@@ -1402,12 +1313,9 @@ def _xg_micro(
     of subspace j, ordered by within-subspace position.  Built entirely
     scan-side (quantize + slice over a <=64-element array, then one
     m-way posexplode) — no explode->groupBy shuffle, so the relation is
-    derived in the same stage as the parquet scan.  Quantization is the
-    byte-identical double-round expression of `_x_micro`."""
-    quant = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda v: F.round(F.round(v, 6) * F.lit(1000000.0), 0).cast("long"),
-    )
+    derived in the same stage as the parquet scan.  Quantization is
+    `_micro`, as in `_x_micro`."""
+    quant = F.transform(F.col(vec_col).cast("array<double>"), _micro)
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda j: F.slice(quant, j * F.lit(d_sub) + F.lit(1), d_sub),
@@ -1419,7 +1327,9 @@ def _xg_micro(
 
 def _argmin_code_udf(cb, m: int, n_codes: int, d_sub: int,
                      code_type: str = "int"):
-    """Arrow-vectorized nearest-code assignment: (j, comps) -> code.
+    """Arrow-vectorized nearest-code assignment: (j, comps) ->
+    struct(code, dist2), dist2 the winner's int64 micro squared
+    distance (the PQ distortion audits sum it).
 
     The <=1024-entry driver-side codebook list [(j, c, ps, cbv_micro)]
     rides the closure as an (m, n_codes, d_sub) int64 array — no join
@@ -1453,14 +1363,21 @@ def _argmin_code_udf(cb, m: int, n_codes: int, d_sub: int,
         import pandas as pd
 
         if len(j_ser) == 0:
-            return pd.Series([], dtype=out_dtype)
+            return pd.DataFrame({"code": pd.Series([], dtype=out_dtype),
+                                 "dist2": pd.Series([], dtype="int64")})
         j = j_ser.to_numpy(dtype=np.int64)
         comps = np.array(comps_ser.tolist(), dtype=np.int64)
         diff = comps[:, None, :] - cbm[j]
         dist2 = (diff * diff).sum(axis=2)
-        return pd.Series(lab_arr[np.argmin(dist2, axis=1)].astype(out_dtype))
+        best = np.argmin(dist2, axis=1)
+        return pd.DataFrame({
+            "code": lab_arr[best].astype(out_dtype),
+            "dist2": dist2[np.arange(len(best)), best],
+        })
 
-    return pandas_udf(fn, code_type).asNondeterministic()
+    return pandas_udf(
+        fn, f"struct<code:{code_type},dist2:bigint>"
+    ).asNondeterministic()
 
 
 def band_dots_micro(bands: "list[tuple[int, int]]"):
@@ -1469,7 +1386,7 @@ def band_dots_micro(bands: "list[tuple[int, int]]"):
     partial dots (Σ qv[i]*cv[i] for each [lo, hi) band).
 
     Exactness: micro products are 1e-12-scaled integers, so the int64
-    band sum equals the DECIMAL(28,12) sum of round(qval*val, 12)
+    band sum equals the 12-dp decimal sum of round(qval*val, 12)
     times 1e12 EXACTLY (products of two 6-dp values are 12-dp
     decimals; see _assign_codes_micro) — rankings on these longs are
     bit-identical to the decimal formulation, with no decimal
@@ -1497,50 +1414,120 @@ def band_dots_micro(bands: "list[tuple[int, int]]"):
 
 def _assign_codes_micro(
     vectors: DataFrame,
-    cb_rows,
+    cb,
     m: int,
     d_sub: int,
     vec_col: str,
     id_col: str,
     code_type: str = "int",
 ) -> DataFrame:
-    """Encode vectors against a FROZEN 6-dp codebook [(j, c, ps,
-    cb_val)] by exact int64 micro arithmetic + the Arrow argmin.
+    """THE PQ encoder: vectors against a FROZEN micro codebook [(j, c,
+    ps, cbv)] by exact int64 micro arithmetic + the Arrow argmin.
 
-    Bit-equivalent to the decimal formulation (sum of
-    round((val-cb_val)^2, 12) in DECIMAL(28,12)): a product of two
-    6-dp values is EXACTLY a 12-dp decimal, the double square sits
-    within ~4e-16 of that multiple of 1e-12 so round(.,12) recovers it
-    exactly, and the integer micro dist2 equals that decimal * 1e12 —
-    same argmin winner, same lowest-label tiebreak, no oracle change.
-    Returns (vec_id, j, code)."""
-    n_codes = len({c for (_j, c, _ps, _v) in cb_rows})
-    cb_micro = [
-        (j, c, ps, int(round(v * 1000000.0))) for (j, c, ps, v) in cb_rows
-    ]
-    code = _argmin_code_udf(cb_micro, m, n_codes, d_sub, code_type)
-    xg = _xg_micro(vectors, vec_col, id_col, d_sub, m)
-    return xg.select(
-        F.col("id").alias("vec_id"),
-        "j",
-        code(F.col("j"), F.col("comps")).alias("code"),
+    Bit-equivalent to the decimal formulation the oracles spell out
+    (sum of round((val-cb_val)^2, 12) as a 12-dp decimal): a product
+    of two 6-dp values is EXACTLY a 12-dp decimal, the double square
+    sits within ~4e-16 of that multiple of 1e-12 so round(.,12)
+    recovers it exactly, and the integer micro dist2 equals that
+    decimal * 1e12 — same argmin winner, same lowest-label tiebreak,
+    no oracle change.  Returns (vec_id, j, code, dist2)."""
+    n_codes = len({c for (_j, c, _ps, _v) in cb})
+    enc = _argmin_code_udf(cb, m, n_codes, d_sub, code_type)
+    return (
+        _xg_micro(vectors, vec_col, id_col, d_sub, m)
+        .select(
+            F.col("id").alias("vec_id"),
+            "j",
+            enc(F.col("j"), F.col("comps")).alias("e"),
+        )
+        .select("vec_id", "j", "e.*")
     )
 
 
-def _lloyd_grid_micro(
-    spark, m: int, n_codes: int, d_sub: int, tag: str
-) -> "list[tuple[int, int, int, int]]":
-    """Init codebook rows [(j, c, ps, cbv_micro)] — pq_codebook_det's
-    md5 grid in micro-units, computed BY Spark so the 6-dp rounding
-    semantics are byte-identical to every other det operator."""
-    cb = pq_codebook_det(spark, m, n_codes, d_sub, tag=tag)
-    rows = cb.select(
-        "j",
-        "c",
-        "ps",
-        F.round(F.col("cb_val") * F.lit(1000000.0), 0).cast("long").alias("cbv"),
-    ).collect()  # bounded: m * n_codes * d_sub rows (8*16*8 = 1024)
-    return [(r.j, r.c, r.ps, r.cbv) for r in rows]
+def _adc_rerank(
+    corpus: DataFrame,
+    queries: DataFrame,
+    codes: DataFrame,
+    cb,
+    vec_col: str,
+    id_col: str,
+    d_sub: int,
+    k: int,
+    refine: int,
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """THE PQ scan: lookup-table ADC over the corpus ``codes`` (id, j,
+    code), then exact re-rank of the top refine·k per query, in int64
+    micro-units end to end.  Behind pq_topk_det, ivfpq_topk_det and
+    pq_topk_lloyd.
+
+    1. LUT — partial dots per (query, subspace, code) against the micro
+       codebook ``cb`` [(j, c, ps, cbv)]: ONE tiny aggregation
+       (queries × codebook), broadcast.
+    2. ADC — codes join the LUT on (j, code) and a map-side-partial sum
+       over m partial dots per (query, doc) is the approximate dot; the
+       codes are not shuffled before that agg and never meet the raw
+       query vectors.
+       ``candidates`` (query_id, id) is an IVF prune, self-pairs already
+       dropped; ``None`` scans every code but the query's own.
+    3. Window — the top refine·k per query by approximate dot, id
+       tiebreak.
+    4. Re-rank — exact dot over the micro-exploded corpus, candidates
+       shuffle-joined on id (measured at sf0.1: broadcasting the
+       candidates against the posexploded `_xg_micro` components
+       instead was ~1.4x slower), rank ≤ k with id tiebreak.
+
+    Exact: micro products are 12-dp decimals × 1e12 (see
+    `_assign_codes_micro`), so every sum and both rankings equal the
+    oracle's decimal ones.  Returns (query_id, neighbor_id, dot_i,
+    rank); callers scale dot_i by 1e-12."""
+    cb_df = corpus.sparkSession.createDataFrame(
+        cb,
+        f"j int, c {codes.schema['code'].dataType.simpleString()}, "
+        "ps int, cbv long",
+    )
+    qx = _x_micro(queries, vec_col, id_col, d_sub).withColumnsRenamed(
+        {"id": "query_id", "v": "qv"}
+    )
+    lut = (
+        qx.join(F.broadcast(cb_df), ["j", "ps"])
+        .groupBy("query_id", "j", "c")
+        .agg(F.sum(F.col("qv") * F.col("cbv")).alias("pdot"))
+        .withColumnRenamed("c", "code")
+    )
+    if candidates is None:
+        hits = codes.join(F.broadcast(lut), ["j", "code"]).filter(
+            F.col("id") != F.col("query_id")
+        )
+    else:
+        hits = candidates.join(codes, "id").join(
+            F.broadcast(lut), ["query_id", "j", "code"]
+        )
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.desc("approx_dot"), F.asc("id")
+    )
+    cand = (
+        hits.groupBy("query_id", "id")
+        .agg(F.sum("pdot").alias("approx_dot"))
+        .withColumn("__rn", F.row_number().over(w_adc))
+        .filter(F.col("__rn") <= refine * k)
+        .select("query_id", "id")
+    )
+    ex = (
+        cand.join(_x_micro(corpus, vec_col, id_col, d_sub), "id")
+        .join(
+            F.broadcast(qx.select("query_id", "pos", "qv")),
+            ["query_id", "pos"],
+        )
+        .groupBy("query_id", "id")
+        .agg(F.sum(F.col("qv") * F.col("v")).alias("dot_i"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("dot_i"), F.asc("id"))
+    return (
+        ex.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col("id").alias("neighbor_id"), "dot_i", "rank")
+    )
 
 
 def _half_up_mean(s: int, n: int) -> int:
@@ -1592,7 +1579,7 @@ def pq_codebook_lloyd(
         xg = _xg_micro(df, vec_col, id_col, d_sub, m).localCheckpoint(
             eager=True
         )
-    cb = _lloyd_grid_micro(spark, m, n_codes, d_sub, tag)
+    cb = _det_cb_rows(spark, m, n_codes, d_sub, tag)
     for _t in range(iters):
         code = _argmin_code_udf(cb, m, n_codes, d_sub)
         census = {
@@ -1600,7 +1587,7 @@ def pq_codebook_lloyd(
             for r in (
                 xg.select(
                     "j",
-                    code(F.col("j"), F.col("comps")).alias("code"),
+                    code(F.col("j"), F.col("comps"))["code"].alias("code"),
                     "comps",
                 )
                 .select("j", "code", F.posexplode("comps").alias("ps", "v"))
@@ -1629,15 +1616,15 @@ def pq_topk_lloyd(
     refine: int = 2,
 ) -> DataFrame:
     """PQ ANN with the Lloyd-LEARNED integer codebook: encode -> ADC
-    lookup-table scan -> exact integer refine, the same three stages
-    as pq_topk_det but with int64 micro arithmetic end to end, so the
-    whole pipeline (codebook learning included) hash-matches the
-    DuckDB oracle.  Scale: the corpus is quantized scan-side into ONE
+    lookup-table scan -> exact integer refine, the same stages as
+    pq_topk_det (the ADC scan and re-rank are the shared `_adc_rerank`)
+    in the same int64 micro arithmetic, so the whole pipeline
+    (codebook learning included) hash-matches the DuckDB oracle.
+    Scale: the corpus is quantized scan-side into ONE
     localCheckpointed (id, j, comps) relation shared by the Lloyd
-    rounds, the encode projection, and the refine stage; it meets only
-    the broadcast 8-row codebook matrix (encode, a shuffle-free codegen
-    argmin) and the broadcast queries x codebook LUT (ADC), and is
-    shuffled once, on the (query, doc) agg key."""
+    rounds and the encode projection; it meets only the closure
+    codebook (encode, a shuffle-free Arrow argmin) and the broadcast
+    queries x codebook LUT (ADC).  ``dot`` is dot_i / 1e12, unrounded."""
     spark = corpus.sparkSession
     first = corpus.select(vec_col).first()
     if first is None or first[0] is None:
@@ -1655,55 +1642,17 @@ def pq_topk_lloyd(
             corpus, vec_col, id_col, m, n_codes, iters, _xg=xg, _d_sub=d_sub
         ).collect()  # bounded: m * n_codes * d_sub rows (1024 here)
     ]
-    cb = spark.createDataFrame(cb_list, "j int, c int, ps int, cbv long")
     code = _argmin_code_udf(cb_list, m, n_codes, d_sub)
     codes = xg.select(
-        "id", "j", code(F.col("j"), F.col("comps")).alias("code")
+        "id", "j", code(F.col("j"), F.col("comps"))["code"].alias("code")
     )
-    x = xg.select("id", "j", F.posexplode("comps").alias("ps", "v")).select(
-        "id", (F.col("j") * d_sub + F.col("ps")).alias("pos"), "v"
-    )
-    qx = _x_micro(queries, vec_col, id_col, d_sub).withColumnsRenamed(
-        {"id": "query_id", "v": "qv"}
-    )
-    lut = (
-        qx.join(F.broadcast(cb), ["j", "ps"])
-        .groupBy("query_id", "j", "c")
-        .agg(F.sum(F.col("qv") * F.col("cbv")).alias("pdot"))
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (codes["j"] == lut["j"]) & (codes["code"] == lut["c"]),
-        )
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("pdot").alias("approx_dot"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_dot"), F.asc("id")
-    )
-    cand = (
-        adc.withColumn("__rn", F.row_number().over(w_adc))
-        .filter(F.col("__rn") <= refine * k)
-        .select("query_id", "id")
-    )
-    ex = (
-        x.join(F.broadcast(cand), "id")
-        .join(F.broadcast(qx.select("query_id", "pos", "qv")), ["query_id", "pos"])
-        .groupBy("query_id", "id")
-        .agg(F.sum(F.col("qv") * F.col("v")).alias("dot_i"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_i"), F.asc("id"))
-    return (
-        ex.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            (F.col("dot_i").cast("double") / F.lit(1000000000000.0)).alias("dot"),
-            "rank",
-        )
+    return _adc_rerank(
+        corpus, queries, codes, cb_list, vec_col, id_col, d_sub, k, refine
+    ).select(
+        "query_id",
+        "neighbor_id",
+        (F.col("dot_i").cast("double") / F.lit(1000000000000.0)).alias("dot"),
+        "rank",
     )
 
 

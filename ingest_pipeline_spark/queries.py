@@ -17,6 +17,7 @@ Operator IDs in each docstring refer to SURVEY.md §2.
 from __future__ import annotations
 
 from collections.abc import Callable
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,6 +170,13 @@ def _u8_sql(x: str) -> str:
         f"LEAST(255, GREATEST(0, CAST(FLOOR((CAST({x} AS DOUBLE) "
         f"+ CAST(1.0 AS DOUBLE)) * CAST(127.5 AS DOUBLE)) AS INT)))"
     )
+
+
+def _micro12(col: Column) -> Column:
+    """An int64 product of micro-units (1e-12 units, e.g. the PQ
+    encoder's dist2) as its exact decimal: decimal(33,12), summed to
+    decimal(38,12) like the oracles' 12-dp decimal sums."""
+    return col.cast("decimal(20,0)") * F.lit(Decimal("1E-12"))
 
 
 # ---------------------------------------------------------------------------
@@ -14501,8 +14509,8 @@ def similarity_ivfpq_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's 2 nearest cells; a corpus-SAMPLED PQ codebook (subspace
     codes = the 16 lowest-id vectors' subvectors, m=32/d_sub=2)
     scores the surviving codes in the compressed domain (LUT
-    equi-join, decimal partial dots); the top-20 ADC candidates are
-    re-ranked by exact decimal inner product to a top-5 — the
+    equi-join, exact int64 micro partial dots); the top-20 ADC
+    candidates are re-ranked by exact inner product to a top-5 — the
     IVFADC architecture a billion-vector corpus actually serves
     (Jegou et al. 2011).  The sampled codebook fits the corpus
     distribution: measured recall@5 vs brute force at sf0.01 is 0.45
@@ -14511,7 +14519,9 @@ def similarity_ivfpq_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivfpq_recall.py).  Every stage is an equi-join; the
     raw vectors are touched data-proportionally only by the index
     build.  operators/similarity.py:ivfpq_topk_det (cells via
-    ivf_assign against the 8 lowest-id sample rows).
+    ivf_assign against the 8 lowest-id sample rows; encode, ADC scan
+    and re-rank are the shared PQ path, _assign_codes_micro +
+    _adc_rerank, whose micro sums equal the oracle's decimal ones).
     """
     from .operators.similarity import ivfpq_topk_det
 
@@ -16679,66 +16689,47 @@ def similarity_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFram
     signal energy (rel_distortion = quantization MSE / signal power —
     the quantity PQ codebook sizing trades against memory).  Uses the
     corpus-sampled 16-code codebook of similarity_ivfpq_topk_det; the
-    per-(id, subspace) argmin is a plain MIN (only the distance, not
-    the code id, is reported); all sums are 12-dp-rounded products in
-    DECIMAL(28,12) (exact: inputs are 6-dp).  Scale: encode is the
-    (j, ps)-keyed broadcast join + one keyed agg; the audit output is
-    m rows.  A healthy codebook shows rel_distortion well under 1;
-    random data with 16 codes in 2-D subspaces sits near ~0.3-0.6.
+    per-(id, subspace) winner's squared distance comes from the one
+    PQ encoder (operators/similarity.py _assign_codes_micro, exact
+    int64 micro-units), converted per row to its exact 12-dp decimal
+    and summed as a decimal — the oracle's DECIMAL(28,12) sums of
+    12-dp-rounded products, exactly.  Scale: encode is one scan-side
+    Arrow projection against the closure codebook (no
+    |corpus| x dim x n_codes join); the audit output is m rows.  A
+    healthy codebook shows rel_distortion well under 1; random data
+    with 16 codes in 2-D subspaces sits near ~0.3-0.6.
     """
-    emb = _t(spark, sf_dir)["embeddings"]
-    spark_ = spark
-    sample = (
-        emb.select("vec_id", F.col("embedding").cast("array<double>"))
-        .orderBy("vec_id")
-        .limit(16)
-        .collect()
+    from .operators.similarity import (
+        _assign_codes_micro,
+        _lowest_id_rows,
+        _sampled_cb,
+        _x_micro,
     )
+
+    emb = _t(spark, sf_dir)["embeddings"]
+    sample = _lowest_id_rows(emb, 16, "embedding", "vec_id")
     if not sample or sample[0][1] is None:
-        return spark_.createDataFrame(
+        return spark.createDataFrame(
             [],
             "subspace int, n_vectors long, total_sq_error double, "
             "total_energy double, rel_distortion double",
         )
-    dim = len(sample[0][1])
     d_sub = 2
-    x = emb.select(
-        F.col("vec_id").alias("id"),
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "pos", "v0"
-        ),
-    ).select(
-        "id",
-        F.round("v0", 6).alias("val"),
-        (F.col("pos") / d_sub).cast("int").alias("j"),
-        (F.col("pos") % d_sub).cast("int").alias("ps"),
-    ).localCheckpoint(eager=True)  # encode + energy share it
-    cb = spark_.createDataFrame(
-        [
-            (pos // d_sub, r[0], pos % d_sub, r[1][pos])
-            for r in sample
-            for pos in range(dim)
-        ],
-        "j int, c long, ps int, cb_raw double",
-    ).select("j", "c", "ps", F.round("cb_raw", 6).alias("cb_val"))
-    dec = lambda c: F.sum(F.round(c, 12).cast("decimal(28,12)"))  # noqa: E731
-    enc = (
-        x.join(F.broadcast(cb), ["j", "ps"])
-        .groupBy("id", "j", "c")
-        .agg(
-            dec(
-                (F.col("val") - F.col("cb_val"))
-                * (F.col("val") - F.col("cb_val"))
-            ).alias("dist2")
-        )
+    m = len(sample[0][1]) // d_sub
+    codes = _assign_codes_micro(
+        emb, _sampled_cb(sample, d_sub), m, d_sub, "embedding", "vec_id",
+        code_type="bigint",
     )
-    codes = enc.groupBy("id", "j").agg(F.min("dist2").alias("best_dist2"))
-    nrm = x.groupBy("j").agg(dec(F.col("val") * F.col("val")).alias("energy"))
+    nrm = (
+        _x_micro(emb, "embedding", "vec_id", d_sub)
+        .groupBy("j")
+        .agg(F.sum(_micro12(F.col("v") * F.col("v"))).alias("energy"))
+    )
     return (
         codes.groupBy("j")
         .agg(
             F.count("*").alias("n_vectors"),
-            F.sum("best_dist2").cast("double").alias("total_sq_error"),
+            F.sum(_micro12(F.col("dist2"))).cast("double").alias("total_sq_error"),
         )
         .join(F.broadcast(nrm.select("j", F.col("energy").cast("double").alias("total_energy"))), "j")
         .select(
@@ -17248,9 +17239,10 @@ def similarity_pq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode(base) UNION encode(delta) == encode(base UNION delta)
     (the rebuild-equivalence theorem, proven in
     tests/test_index_upsert.py).  Scale:
-    per-upsert work is |delta| x m x n_codes rows against a 1024-row
-    broadcast codebook; exact decimal distances, min-struct argmin
-    hash agg (operators/similarity.py:pq_index_upsert / pq_assign).
+    per-upsert work is |delta| x m x n_codes against a 1024-entry
+    closure codebook; exact int64 micro distances, lowest-code argmin
+    in one Arrow projection (operators/similarity.py:pq_index_upsert /
+    _assign_codes_micro).
     """
     from .operators.similarity import pq_index_upsert
 
@@ -18829,44 +18821,15 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     (unrounded, the semantic_dedup decision value — identical IEEE
     fold in both engines; tau = t/100 from integers, never a decimal
     literal); the five curve points are an explode + one agg over the
-    |corpus|-row best table.  Shape: cell equi-join pairs with Arrow
-    dot_seq over precomputed norms — never all-pairs.
+    |corpus|-row best table.  The best table is semantic_dedup's own
+    pair pipeline (operators/similarity.py _semantic_best): cell
+    equi-join pairs with Arrow dot_seq over precomputed norms — never
+    all-pairs.
     """
-    from .operators.similarity import _ivf_anchors, _norm, dot_seq, ivf_assign
+    from .operators.similarity import _semantic_best
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cells = (
-        ivf_assign(
-            emb.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("vec"),
-                _norm(F.col("embedding")).alias("nrm"),
-            ),
-            _ivf_anchors(emb, 8),
-            "vec",
-        )
-        .select("id", "vec", "nrm", "cell")
-        .localCheckpoint(eager=True)  # both pair sides + the left join
-    )
-    pairs = (
-        cells.alias("a")
-        .join(
-            cells.alias("b"),
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("b.id").alias("id_b"),
-            (
-                dot_seq(F.col("a.vec"), F.col("b.vec"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("sim"),
-        )
-    )
-    bb = pairs.groupBy("id_b").agg(F.max("sim").alias("best"))
-    best = cells.select("id").join(
-        bb, F.col("id") == F.col("id_b"), "left"
-    ).select("id", "best")
+    best = _semantic_best(emb, "embedding", "vec_id", 8).select("id", "best")
     taus = F.transform(
         F.sequence(F.lit(30), F.lit(50), F.lit(5)),
         lambda t: t.cast("double") / F.lit(100.0),
@@ -19776,51 +19739,35 @@ def embedding_pq_distortion_by_cell(spark: SparkSession, sf_dir: str) -> DataFra
     operating audit that tells an ANN maintainer WHICH region of the
     index quantizes badly (a global distortion number hides a bad
     cell; recall losses are always local).  Per vector, the PQ SSE is
-    the sum over subspaces of the winning centroid's exact decimal
-    squared distance (the pq_assign argmin, keeping dist2 instead of
-    the code); vectors group by their frozen-anchor IVF cell
-    (ivf_assign); per cell: count, total and mean SSE.  Composes the
-    two frozen-index primitives end to end — a drift in either
-    assignment breaks the hash.  Scale: encode is |corpus| x m x
-    n_codes vs a broadcast codebook; cell assign is |corpus| x
-    n_cells in one Arrow projection; one keyed agg.
+    the sum over subspaces of the winning centroid's exact squared
+    distance (the one PQ encoder, operators/similarity.py
+    _assign_codes_micro: int64 micro-units, converted per row to the
+    exact 12-dp decimal the oracle sums); vectors group by their
+    frozen-anchor IVF cell (ivf_assign); per cell: count, total and
+    mean SSE.  Composes the two frozen-index primitives end to end — a
+    drift in either assignment breaks the hash.  Scale: encode is
+    |corpus| x m x n_codes in one scan-side Arrow projection against
+    the closure codebook; cell assign is |corpus| x n_cells in one
+    Arrow projection; one keyed agg.
     """
-    from .operators.similarity import _ivf_anchors, ivf_assign, pq_codebook_det
+    from .operators.similarity import (
+        _assign_codes_micro,
+        _det_cb_rows,
+        _ivf_anchors,
+        ivf_assign,
+    )
 
     emb = _t(spark, sf_dir)["embeddings"]
     dim = 64
     d_sub = dim // 8
-    cb = pq_codebook_det(spark, 8, 16, d_sub)
-    x = emb.select(
-        F.col("vec_id").alias("id"),
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "pos", "val"
-        ),
-    ).select(
-        "id",
-        F.round(F.col("val"), 6).alias("val"),
-        (F.col("pos") / d_sub).cast("int").alias("j"),
-        (F.col("pos") % d_sub).cast("int").alias("ps"),
-    )
-    enc = (
-        x.join(F.broadcast(cb), ["j", "ps"])
-        .groupBy("id", "j", "c")
-        .agg(
-            F.sum(
-                F.round(
-                    (F.col("val") - F.col("cb_val"))
-                    * (F.col("val") - F.col("cb_val")),
-                    12,
-                ).cast("decimal(28,12)")
-            ).alias("dist2")
+    sse = (
+        _assign_codes_micro(
+            emb, _det_cb_rows(spark, 8, 16, d_sub), 8, d_sub,
+            "embedding", "vec_id",
         )
+        .groupBy(F.col("vec_id").alias("id"))
+        .agg(F.sum(_micro12(F.col("dist2"))).alias("sse"))
     )
-    best = (
-        enc.groupBy("id", "j")
-        .agg(F.min(F.struct("dist2", "c")).alias("mn"))
-        .select("id", F.col("mn.dist2").alias("best2"))
-    )
-    sse = best.groupBy("id").agg(F.sum("best2").alias("sse"))
     cells = ivf_assign(emb, _ivf_anchors(emb, 8)).select(
         F.col("vec_id").alias("id"), "cell"
     )

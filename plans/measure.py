@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """A/B measurement harness: time named queries at sf0.1 the way
-bench.py does (count() after warmup, min-of-N, checkpoint sweep + GC
-between reps) and optionally dump .explain("formatted") to
+bench.py does (bench.warm_session first, count() or --noop, min-of-N,
+bench.sweep_checkpoints + GC between reps) and optionally dump
+.explain("formatted") to
 <out>/<q>_<tag>.txt.  The output directory's name (e.g. ``r14``) labels
 the Spark app and every timed job.
 
@@ -18,6 +19,7 @@ import time
 REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, REPO)
 
+from bench import sweep_checkpoints, warm_session  # noqa: E402
 from ingest_pipeline_spark.queries import queries  # noqa: E402
 from ingest_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -37,20 +39,8 @@ def main() -> None:
     tag = os.path.basename(os.path.normpath(args.out))
     spark = get_spark(f"{tag}-measure")
     fns = queries()
-    # session warmup mirroring bench.py
-    fns["q1_pricing_summary"](spark, args.sf).count()
-    warm_sf = "/root/testdata/sf0.001"
-    for warm_q in ("similarity_topk", "embedding_near_dup",
-                   "graph_modularity_brand", "sample_kcenter_coreset"):
-        if warm_q in fns and os.path.isdir(warm_sf):
-            fns[warm_q](spark, warm_sf).count()
-
-    def sweep() -> None:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(True)
-
-    sweep()
+    warm_session(spark, fns, args.sf)
+    sweep_checkpoints(spark)
     for name in args.names:
         if name not in fns:
             print(f"!! unknown query {name}")
@@ -64,7 +54,7 @@ def main() -> None:
             with open(out, "w") as f:
                 f.write(plan)
             print(f"plan -> {out} ({len(plan)} chars)")
-            sweep()
+            sweep_checkpoints(spark)
         times = []
         if args.reps <= 0:
             continue
@@ -78,7 +68,7 @@ def main() -> None:
                 df.count()
             times.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
-            sweep()
+            sweep_checkpoints(spark)
             spark.sparkContext._jvm.System.gc()
         print("%-40s min=%.3f  runs=%s" % (
             name, min(times), " ".join("%.3f" % t for t in times)))

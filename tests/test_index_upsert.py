@@ -7,8 +7,9 @@ maintainer can alternate incremental appends and full rebuilds and get
 bit-identical assignment tables.  Also guarded: the testdata split
 actually keeps the anchor set identical between base and base+delta
 (the precondition the registered query's split is chosen to satisfy),
-assignment determinism under ties, and NULL vectors among the anchor
-ids (window-reference parity, no crash)."""
+assignment determinism under ties, NULL vectors among the anchor
+ids (window-reference parity, no crash), and an empty base (anchors
+frozen from the delta)."""
 
 import os
 import sys
@@ -45,6 +46,27 @@ def test_upsert_equals_rebuild_under_frozen_quantizer(spark):
         for r in ivf_assign(emb, _ivf_anchors(base, 8)).collect()
     }
     assert up == rebuilt and len(up) == emb.count()
+
+
+def test_upsert_empty_base_freezes_anchors_from_delta(spark):
+    """An empty base has no anchors to freeze: the delta's lowest ids
+    become the quantizer, exactly as a rebuild over the empty base
+    UNION delta draws them, so the delta is kept and upsert == rebuild
+    still holds."""
+    schema = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame([], schema)
+    delta = spark.createDataFrame([(5, [0.2, 0.9]), (6, [0.8, -0.1])], schema)
+    up = {
+        (r.vec_id, r.cell, r.a_sim, r.origin)
+        for r in ivf_index_upsert(base, delta, n_cells=8).collect()
+    }
+    rebuilt = {
+        (r.vec_id, r.cell, r.a_sim, "delta")
+        for r in ivf_assign(
+            base.unionByName(delta), _ivf_anchors(base.unionByName(delta), 8)
+        ).collect()
+    }
+    assert up == rebuilt and len(up) == 2
 
 
 def test_split_preserves_anchor_set():
