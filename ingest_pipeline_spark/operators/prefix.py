@@ -8,23 +8,31 @@ executors exist).  The reference pipelines never hit this because they
 are single-node to begin with; the scalable restatement is the classic
 two-phase parallel prefix scan:
 
-1. ``repartitionByRange(order)`` + ``sortWithinPartitions(order)``
-   gives a totally-ordered partitioning (partition *i* holds keys
-   strictly below partition *i+1*; the order columns must include a
-   unique tiebreak so the total order is well defined).
-2. A per-partition running aggregate (window PARTITIONED by the range
-   partition id — each partition is one task, full parallelism).
-3. Per-partition totals (one row per partition — CLUSTER-proportional,
-   not data-proportional) are prefix-combined into offsets and
-   broadcast-joined back; ``global_running = offset ⊕ local_running``.
+1. A range repartition on (group, order) + ``sortWithinPartitions``
+   gives a totally-ordered partitioning (the order columns must
+   include a unique tiebreak so the total order is well defined).
+2. A running aggregate per (range partition, group): one task each.
+3. Per-(partition, group) totals (cluster-sized, never
+   data-proportional) are prefix-combined into offsets and
+   broadcast-joined back; ``running = offset ⊕ local``.
+
+All seven public functions are one private ``_scan``; the global ones
+are its zero-group case.  Sums and row numbers combine as
+``coalesce(offset + local, offset, local)``, maxima as ``greatest``, so
+NULL semantics are the SQL window's: a NULL value is skipped (a
+NULL-valued row that opens a range partition keeps its predecessors'
+total), a sum or max is NULL only while no non-NULL value precedes,
+and a row number is never NULL.
 
 The partition-id column must be stable across the two consumers of the
 ranged relation (the rows and the totals), and range boundaries come
 from run-dependent sampling — so the ranged relation is
 localCheckpoint-materialized ONCE (the same lineage rule CLAUDE.md
-records for NGram/UDF fan-out).  Everything stays JVM-side and
-decimal-exact; accumulation order within a combine is the sorted order,
-so DECIMAL sums are bit-deterministic.
+records for NGram/UDF fan-out).  The tiny totals relation is
+checkpointed only when a per-group grand total is requested: only then
+does it have a second consumer.  Everything stays JVM-side and
+decimal-exact; accumulation order within a combine is the sorted
+order, so DECIMAL sums are bit-deterministic.
 """
 
 from __future__ import annotations
@@ -34,8 +42,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 _PID = "__prefix_pid"
-_LOCAL = "__prefix_local"
-_OFF = "__prefix_off"
+
+# per-(partition, group) total of each scan kind (row count for "count")
+_TOTAL = {"sum": F.sum, "count": lambda _v: F.count("*"), "max": F.max}
 
 
 def _ranged(df: DataFrame, order_cols: list[Column]) -> DataFrame:
@@ -48,6 +57,52 @@ def _ranged(df: DataFrame, order_cols: list[Column]) -> DataFrame:
     # Two consumers (rows + per-partition totals) must observe the SAME
     # sampled range boundaries — materialize once.
     return d.localCheckpoint(eager=True)
+
+
+def _scan(
+    df: DataFrame, group_cols: list[str], order_cols: list[Column],
+    scans: list[tuple[str, str | None, str]], totals: tuple[str | None, ...] = (),
+) -> DataFrame:
+    """The one two-phase prefix scan behind every public function.
+
+    ``scans``: ``(kind, value_col, out_col)`` sharing one range
+    partitioning, per ``group_cols`` (empty: global) along
+    ``order_cols``; kind ``"sum"`` (inclusive), ``"count"`` (1-based row
+    number) or ``"max"`` (strict predecessors).  ``totals[i]`` names a
+    column for scan *i*'s per-group grand total, or is ``None``.
+    """
+    d = _ranged(df, [*map(F.col, group_cols), *order_cols])
+    keys = [_PID, *group_cols]
+    w = Window.partitionBy(_PID, *group_cols).orderBy(*order_cols)
+    # offsets: prefix over ≤ shuffle-partitions rows per group (cluster-sized)
+    woff = Window.partitionBy(*group_cols).orderBy(_PID)
+    woff = woff.rowsBetween(Window.unboundedPreceding, -1)
+    local, tots, offs, outs, helpers = {}, [], [], {}, [_PID]
+    for i, (kind, v, out) in enumerate(scans):
+        lc, tc, oc = f"__prefix_local{i}", f"__prefix_tot{i}", f"__prefix_off{i}"
+        if kind == "count":
+            local[lc] = F.row_number().over(w).cast("long")
+        else:
+            upto = -1 if kind == "max" else Window.currentRow
+            frame = w.rowsBetween(Window.unboundedPreceding, upto)
+            local[lc] = _TOTAL[kind](v).over(frame)
+        tots.append(_TOTAL[kind](v).alias(tc))
+        offs.append((F.max if kind == "max" else F.sum)(tc).over(woff).alias(oc))
+        lo, of = F.col(lc), F.col(oc)
+        # greatest() ignores NULL operands: an empty prefix adds nothing
+        outs[out] = F.greatest(lo, of) if kind == "max" else F.coalesce(of + lo, of, lo)
+        helpers += [lc, oc]
+    grand = [F.sum(f"__prefix_tot{i}").alias(c) for i, c in enumerate(totals) if c]
+    d = d.withColumns(local)
+    tot = d.groupBy(*keys).agg(*tots)
+    if grand:
+        tot = tot.localCheckpoint(eager=True)  # offsets + grand totals share it
+    d = d.join(F.broadcast(tot.select(*keys, *offs)), keys)
+    d = d.withColumns(outs).drop(*helpers)
+    if grand:
+        g = F.broadcast(tot.groupBy(*group_cols).agg(*grand))
+        d = d.join(g, group_cols) if group_cols else d.crossJoin(g)
+    return d
 
 
 def running_sum(
@@ -71,37 +126,7 @@ def running_sums(
     however many ``(value_col, out_col)`` pairs are requested (e.g.
     the two empirical CDFs of a KS statistic).
     """
-    d = _ranged(df, order_cols)
-    wloc = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    for i, (value_col, _out) in enumerate(sums):
-        d = d.withColumn(f"{_LOCAL}{i}", F.sum(value_col).over(wloc))
-    totals = d.groupBy(_PID).agg(
-        *[F.sum(v).alias(f"__ptot{i}") for i, (v, _o) in enumerate(sums)]
-    )
-    # offsets: prefix over ≤ shuffle-partitions rows (cluster-sized)
-    woff = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        _PID,
-        *[
-            F.sum(f"__ptot{i}").over(woff).alias(f"{_OFF}{i}")
-            for i in range(len(sums))
-        ],
-    )
-    d = d.join(F.broadcast(offsets), _PID)
-    drop = [_PID]
-    for i, (_v, out_col) in enumerate(sums):
-        d = d.withColumn(
-            out_col,
-            F.when(
-                F.col(f"{_OFF}{i}").isNull(), F.col(f"{_LOCAL}{i}")
-            ).otherwise(F.col(f"{_OFF}{i}") + F.col(f"{_LOCAL}{i}")),
-        )
-        drop += [f"{_LOCAL}{i}", f"{_OFF}{i}"]
-    return d.drop(*drop)
+    return _scan(df, [], order_cols, [("sum", v, o) for v, o in sums])
 
 
 def global_row_number(
@@ -113,17 +138,7 @@ def global_row_number(
     order: per-partition local row numbers plus prefix-combined
     per-partition row counts.
     """
-    d = _ranged(df, order_cols)
-    wloc = Window.partitionBy(_PID).orderBy(*order_cols)
-    d = d.withColumn(_LOCAL, F.row_number().over(wloc).cast("long"))
-    counts = d.groupBy(_PID).agg(F.count("*").alias("__ptot"))
-    woff = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(_PID, F.sum("__ptot").over(woff).alias(_OFF))
-    return (
-        d.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, F.coalesce(F.col(_OFF), F.lit(0)) + F.col(_LOCAL))
-        .drop(_PID, _LOCAL, _OFF)
-    )
+    return _scan(df, [], order_cols, [("count", None, out_col)])
 
 
 def global_ntile(
@@ -134,26 +149,13 @@ def global_ntile(
     SQL NTILE semantics in closed form over the distributed global
     rank: with n rows, the first ``n mod k`` tiles hold ``⌈n/k⌉`` rows
     and the rest hold ``⌊n/k⌋`` — bit-identical to ``NTILE(k) OVER
-    (ORDER BY order)`` for any total order.
+    (ORDER BY order)`` for any total order.  The row count n is the
+    row number's grand total.
     """
-    rn = "__prefix_rn"
-    d = _ranged(df, order_cols)
-    wloc = Window.partitionBy(_PID).orderBy(*order_cols)
-    d = d.withColumn(_LOCAL, F.row_number().over(wloc).cast("long"))
-    counts = d.groupBy(_PID).agg(F.count("*").alias("__ptot"))
-    counts = counts.localCheckpoint(eager=True)  # offsets + total share it
-    woff = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(_PID, F.sum("__ptot").over(woff).alias(_OFF))
-    # total rows from the SAME tiny per-partition counts — never a
-    # second scan of the data
-    n_total = counts.agg(F.sum("__ptot").alias("__n"))
-    d = (
-        d.join(F.broadcast(offsets), _PID)
-        .withColumn(rn, F.coalesce(F.col(_OFF), F.lit(0)) + F.col(_LOCAL))
-        .drop(_PID, _LOCAL, _OFF)
-    )
-    q = (F.col("__n") / k).cast("long")  # floor: n, k ≥ 0
-    rem = F.col("__n") % k
+    rn, n = "__prefix_rn", "__prefix_n"
+    d = _scan(df, [], order_cols, [("count", None, rn)], (n,))
+    q = (F.col(n) / k).cast("long")  # floor: n, k ≥ 0
+    rem = F.col(n) % k
     big = rem * (q + 1)  # rows covered by the ⌈n/k⌉-sized tiles
     r = F.col(rn)
     tile = F.when(
@@ -161,19 +163,12 @@ def global_ntile(
     ).otherwise(
         rem + F.when(q > 0, ((r - big - 1) / q).cast("long")).otherwise(0) + 1
     )
-    return (
-        d.crossJoin(F.broadcast(n_total))
-        .withColumn(out_col, tile.cast("long"))
-        .drop(rn, "__n")
-    )
+    return d.withColumn(out_col, tile.cast("long")).drop(rn, n)
 
 
 def grouped_row_number(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column],
-    out_col: str,
-    count_col: str | None = None,
+    df: DataFrame, group_cols: list[str], order_cols: list[Column],
+    out_col: str, count_col: str | None = None,
 ) -> DataFrame:
     """Per-group 1-based row number for LOW-CARDINALITY heavy groups.
 
@@ -190,84 +185,24 @@ def grouped_row_number(
     row count is attached from the SAME tiny counts relation (no
     second scan).
     """
-    gcols = [F.col(c) for c in group_cols]
-    d = _ranged(df, [*gcols, *order_cols])
-    wloc = Window.partitionBy(_PID, *group_cols).orderBy(*order_cols)
-    d = d.withColumn(_LOCAL, F.row_number().over(wloc).cast("long"))
-    counts = d.groupBy(_PID, *group_cols).agg(F.count("*").alias("__ptot"))
-    counts = counts.localCheckpoint(eager=True)  # offsets + totals share it
-    woff = (
-        Window.partitionBy(*group_cols)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        _PID, *group_cols, F.sum("__ptot").over(woff).alias(_OFF)
-    )
-    d = (
-        d.join(F.broadcast(offsets), [_PID, *group_cols])
-        .withColumn(out_col, F.coalesce(F.col(_OFF), F.lit(0)) + F.col(_LOCAL))
-        .drop(_PID, _LOCAL, _OFF)
-    )
-    if count_col is not None:
-        totals = counts.groupBy(*group_cols).agg(
-            F.sum("__ptot").alias(count_col)
-        )
-        d = d.join(F.broadcast(totals), group_cols)
-    return d
+    return _scan(df, group_cols, order_cols, [("count", None, out_col)], (count_col,))
 
 
 def grouped_running_sum(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column],
-    value_col: str,
-    out_col: str,
-    total_col: str | None = None,
+    df: DataFrame, group_cols: list[str], order_cols: list[Column],
+    value_col: str, out_col: str, total_col: str | None = None,
 ) -> DataFrame:
     """Per-group inclusive running sum for LOW-CARDINALITY heavy groups.
 
     ``SUM(v) OVER (PARTITION BY g ORDER BY order ROWS UNBOUNDED
     PRECEDING)`` executes one task per group — the sharded flavor of
     the single-task global window.  Same grouped two-phase scan as
-    ``grouped_row_number``: range-partition on (group, order), local
-    running sums per (partition, group), prefix-combined
-    per-(partition, group) offsets (a cluster-sized relation) joined
-    back broadcast.  If ``total_col`` is given, the per-group total is
-    attached from the SAME tiny counts relation (no second scan).
+    ``grouped_row_number``.  If ``total_col`` is given, the per-group
+    total is attached from the SAME tiny totals relation (no second
+    scan).
     """
-    gcols = [F.col(c) for c in group_cols]
-    d = _ranged(df, [*gcols, *order_cols])
-    wloc = (
-        Window.partitionBy(_PID, *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    d = d.withColumn(_LOCAL, F.sum(value_col).over(wloc))
-    totals = d.groupBy(_PID, *group_cols).agg(F.sum(value_col).alias("__ptot"))
-    totals = totals.localCheckpoint(eager=True)  # offsets + totals share it
-    woff = (
-        Window.partitionBy(*group_cols)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        _PID, *group_cols, F.sum("__ptot").over(woff).alias(_OFF)
-    )
-    d = (
-        d.join(F.broadcast(offsets), [_PID, *group_cols])
-        .withColumn(
-            out_col,
-            F.when(F.col(_OFF).isNull(), F.col(_LOCAL)).otherwise(
-                F.col(_OFF) + F.col(_LOCAL)
-            ),
-        )
-        .drop(_PID, _LOCAL, _OFF)
-    )
-    if total_col is not None:
-        gt = totals.groupBy(*group_cols).agg(F.sum("__ptot").alias(total_col))
-        d = d.join(F.broadcast(gt), group_cols)
-    return d
+    sums = [("sum", value_col, out_col)]
+    return _scan(df, group_cols, order_cols, sums, (total_col,))
 
 
 def running_max_exclusive(
@@ -279,20 +214,4 @@ def running_max_exclusive(
     PRECEDING AND 1 PRECEDING)`` (NULL for the globally first row),
     executed as a two-phase distributed prefix scan.
     """
-    d = _ranged(df, order_cols)
-    wloc = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    d = d.withColumn(_LOCAL, F.max(value_col).over(wloc))
-    totals = d.groupBy(_PID).agg(F.max(value_col).alias("__ptot"))
-    woff = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(_PID, F.max("__ptot").over(woff).alias(_OFF))
-    # greatest() ignores NULLs (returns the greatest non-null operand),
-    # which is exactly the semantics an empty prefix needs.
-    return (
-        d.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, F.greatest(F.col(_LOCAL), F.col(_OFF)))
-        .drop(_PID, _LOCAL, _OFF)
-    )
+    return _scan(df, [], order_cols, [("max", value_col, out_col)])

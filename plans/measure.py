@@ -4,7 +4,10 @@ bench.py does (bench.warm_session first, count() or --noop, min-of-N,
 bench.sweep_checkpoints + GC between reps) and optionally dump
 .explain("formatted") to
 <out>/<q>_<tag>.txt.  The output directory's name (e.g. ``r14``) labels
-the Spark app and every timed job.
+the Spark app and the job group of every timed rep.  Each query line
+also prints ``jobs=N``: the Spark jobs one rep launches, plan-build
+barriers (checkpoints, driver collects) and the final action together
+(``a/b`` when reps differ).
 
 Usage: python plans/measure.py --out plans/r16 [--reps N] [--explain TAG] q1 q2 ...
        python plans/measure.py --out plans/r14 --explain before dedup_lsh_quality_audit
@@ -24,6 +27,14 @@ from ingest_pipeline_spark.queries import queries  # noqa: E402
 from ingest_pipeline_spark.session import get_spark  # noqa: E402
 
 
+def _next_job_id(sc) -> int:
+    """Spark's next job id.  The jobs a rep launches are the ids it
+    allocates: its job group would miss jobs a query starts from its
+    own driver threads (groups are thread-local), and only one query
+    runs at a time."""
+    return sc._jsc.sc().dagScheduler().nextJobId()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -38,6 +49,7 @@ def main() -> None:
 
     tag = os.path.basename(os.path.normpath(args.out))
     spark = get_spark(f"{tag}-measure")
+    sc = spark.sparkContext
     fns = queries()
     warm_session(spark, fns, args.sf)
     sweep_checkpoints(spark)
@@ -55,11 +67,12 @@ def main() -> None:
                 f.write(plan)
             print(f"plan -> {out} ({len(plan)} chars)")
             sweep_checkpoints(spark)
-        times = []
+        times, jobs, group = [], set(), f"{tag}:{name}"
         if args.reps <= 0:
             continue
         for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"{tag}:{name}")
+            sc.setJobGroup(group, group)
+            first = _next_job_id(sc)
             t0 = time.perf_counter()
             df = fns[name](spark, args.sf)
             if args.noop:
@@ -67,11 +80,13 @@ def main() -> None:
             else:
                 df.count()
             times.append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+            sc._jsc.clearJobGroup()
+            jobs.add(_next_job_id(sc) - first)
             sweep_checkpoints(spark)
-            spark.sparkContext._jvm.System.gc()
-        print("%-40s min=%.3f  runs=%s" % (
-            name, min(times), " ".join("%.3f" % t for t in times)))
+            sc._jvm.System.gc()
+        print("%-40s min=%.3f  jobs=%s  runs=%s" % (
+            name, min(times), "/".join(map(str, sorted(jobs))),
+            " ".join("%.3f" % t for t in times)))
 
 
 if __name__ == "__main__":
