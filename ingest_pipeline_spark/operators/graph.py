@@ -67,7 +67,9 @@ def descendants_bfs(
             .join(visited, ["root_uuid", "uuid"], "left_anti")
             .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
+        # The last bounded round ends the loop whatever the probe says, and
+        # a union with an empty frontier changes nothing: skip that job.
+        if depth != max_depth and frontier.isEmpty():
             break
         visited = visited.unionByName(frontier)
         if depth % checkpoint_every == 0:

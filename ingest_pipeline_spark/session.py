@@ -41,6 +41,14 @@ _DEFAULTS = {  # builder-only keys on top
     # cached, not the bound: Metaspace after that sweep is 226 MB, against
     # 186 MB at the default.
     "spark.sql.codegen.cache.maxEntries": "8192",
+    # Python workers fork from worker_daemon, which stops each task from
+    # re-reading every zip archive on sys.path (see its docstring).  Spark
+    # appends executorEnv.PYTHONPATH after its own zips, so workers import
+    # the package (and the daemon) whatever the driver's cwd.
+    "spark.python.daemon.module": "ingest_pipeline_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
 }
 
 

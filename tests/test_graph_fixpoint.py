@@ -49,6 +49,23 @@ def test_fixpoint_walks_past_default_depth_and_checkpoints(spark):
     assert max(r.depth for r in bounded.collect()) == 5
 
 
+def test_bounded_walk_skips_last_round_probe(spark):
+    # The last bounded round ends the loop whatever the emptiness probe
+    # says, so it runs none.  On this chain a call launches 2 jobs for the
+    # roots, 7 per frontier checkpoint and 1 per probe: max_depth=1 runs
+    # 2 + 7 and max_depth=3 runs 2 + 3*7 + 2*1.
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    chain = _edges(spark, [(f"n{i}", f"n{i+1}") for i in range(8)])
+    roots = _roots(spark, ["n0"])
+    jobs = {}
+    for depth in (1, 3):
+        first = sched.nextJobId()
+        got = descendants_bfs(chain, roots, depth)
+        jobs[depth] = sched.nextJobId() - first
+        assert sorted(r.depth for r in got.collect()) == list(range(depth + 1))
+    assert jobs == {1: 9, 3: 25}
+
+
 def test_fixpoint_ancestors_inverts(spark):
     chain = [(f"n{i}", f"n{i+1}") for i in range(8)]
     got = {
