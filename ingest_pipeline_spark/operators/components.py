@@ -8,40 +8,54 @@ Algorithm: iterative min-label propagation — per round every node
 takes the min label among itself and its neighbors; converged when no
 label changes.  Rounds needed = graph diameter (near-dup clusters are
 shallow — typically ≤ 3-4 hops), each round costing one shuffle on
-node id plus a broadcast-able change count.  This is the Spark-native
-restatement of the "iterative algorithm" class: driver-side loop,
-distributed steps, early exit via an aggregate, caching + unpersist
-per round.
+node id; the change count is observed on the job that checkpoints the
+round's labels (``_settle``), so the stop probe launches no job of its
+own.  This is the Spark-native restatement of the "iterative
+algorithm" class: driver-side loop, distributed steps, early exit via
+an aggregate, checkpoint + release per round.
+
+``_settle`` is the one round barrier of every fixpoint loop in
+``operators/graph.py`` too; it stays private, so benchmark spans that
+wrap this module's public functions never count it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def _ckpt_tracked(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint + the RDD ids it pinned.
+def _settle(df: DataFrame, stop: Column) -> tuple[DataFrame, int]:
+    """One fixpoint round's barrier: eagerly localCheckpoint ``df`` and
+    return it with ``n``, the number of its rows matching ``stop`` (the
+    round's stop probe; a loop stops once it reads 0).
+
+    The count is an observed aggregate: it rides on the checkpoint's
+    own plan as a CollectMetrics node, so the probe costs no Spark job
+    of its own and never re-reads the checkpoint.  Free the blocks with
+    ``_release`` once a later round supersedes them.
+    """
+    obs = Observation()
+    out = df.observe(obs, F.count(F.when(stop, 1)).alias("n"))
+    return out.localCheckpoint(eager=True), obs.get["n"]
+
+
+def _release(df: DataFrame) -> None:
+    """Free the localCheckpoint blocks ``df`` reads.
 
     Dataset.unpersist() does NOT release localCheckpoint blocks (they
     are RDD-level persists, not CacheManager entries — verified
     empirically); freeing them needs SparkContext.unpersistRDD on the
-    ids the checkpoint introduced.
+    checkpointed RDDs, which are the LogicalRDD leaves of ``df``'s plan.
     """
-    sc = df.sparkSession.sparkContext
-    before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}  # noqa: SLF001
-    out = df.localCheckpoint(eager=True)
-    after = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}  # noqa: SLF001
-    return out, after - before
-
-
-def _release(df: DataFrame, rdd_ids: set[int]) -> None:
-    sc = df.sparkSession.sparkContext
-    for rid in rdd_ids:
+    sc = df.sparkSession.sparkContext._jsc.sc()  # noqa: SLF001
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()  # noqa: SLF001
+    for i in range(leaves.size()):
         try:
-            sc._jsc.sc().unpersistRDD(rid, False)  # noqa: SLF001
-        except Exception:
-            pass  # already cleaned by ContextCleaner
+            sc.unpersistRDD(leaves.apply(i).rdd().id(), False)
+        except Py4JError:
+            pass  # not a checkpoint leaf, or already cleaned by ContextCleaner
 
 
 def connected_components(
@@ -55,21 +69,23 @@ def connected_components(
     component = min node id of the node's connected component.
     Raises if max_iter rounds don't converge (pathological diameter).
     """
-    sym, sym_ids = _ckpt_tracked(
+    sym = (
         pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .unionByName(
             pairs.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
     # localCheckpoint each round, not cache(): cache truncates execution
     # but NOT the logical plan, so per-round analysis cost compounds —
     # the canonical iterative-Spark trap (measured ~20 s/round by round
     # 8 with cache; constant ~1 s/round with checkpointing)
-    labels, label_ids = _ckpt_tracked(
+    labels = (
         sym.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
+        .localCheckpoint(eager=True)
     )
     try:
         for _ in range(max_iter):
@@ -78,7 +94,7 @@ def connected_components(
                 .groupBy("u")
                 .agg(F.min("component").alias("nbr_min"))
             )
-            updated, new_ids = _ckpt_tracked(
+            updated, n_changed = _settle(
                 labels.join(neighbor_min, labels.id == neighbor_min.u, "left")
                 .select(
                     "id",
@@ -90,20 +106,20 @@ def connected_components(
                         F.coalesce(F.col("nbr_min"), F.col("component"))
                         < F.col("component")
                     ).alias("__changed"),
-                )
+                ),
+                F.col("__changed"),
             )
-            n_changed = updated.filter(F.col("__changed")).count()
             # release the superseded round's checkpoint blocks — leaving
             # it to GC pins up to max_iter label-table copies
-            _release(labels, label_ids)
-            labels, label_ids = updated.drop("__changed"), new_ids
+            _release(labels)
+            labels = updated.drop("__changed")
             if n_changed == 0:
                 return labels
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
     finally:
-        _release(sym, sym_ids)
+        _release(sym)
 
 
 def dedup_cluster_census(

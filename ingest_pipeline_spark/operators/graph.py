@@ -11,9 +11,14 @@ DataFrames:
 
 Traversal = iterative self-join to a bounded depth (reference walks
 are depth ≤ ~5 in practice: Dataset→Sample*→Donor).  Each iteration is
-one shuffle on the join key; frontier DataFrames are cached and the
-loop stops early when a frontier is empty — the Spark-native
+one shuffle on the join key; frontier DataFrames are checkpointed and
+the loop stops early when a frontier is empty — the Spark-native
 restatement of the reference's memoized lazy walk.
+
+Every converge-or-stop loop here (BFS, kcore, ktruss, Borůvka) ends
+its round with ``components._settle``: the round's checkpoint job also
+counts the rows the stop probe needs, so no probe is an action of its
+own.
 """
 
 from __future__ import annotations
@@ -22,12 +27,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .components import _settle
+
+# rounds between lineage cuts of a lazily grown loop relation
+_BFS_VISITED_CKPT_EVERY = 10
+_PAGERANK_CKPT_EVERY = 5
+_SSSP_CKPT_EVERY = 5
+# lazy kcore peels per convergence check (r13: halving the driver
+# barriers cut the sf0.1 graph_kcore_parts 3.4 -> 2.6 s)
+_KCORE_PEELS_PER_CHECK = 2
+
 
 def descendants_bfs(
     edges: DataFrame,
     roots: DataFrame,
     max_depth: int | None = 5,
-    checkpoint_every: int = 10,
 ) -> DataFrame:
     """All (root_uuid, uuid, depth) reachable downward from roots,
     depth = shortest hop count.
@@ -40,9 +54,10 @@ def descendants_bfs(
     on cyclic inputs and keeps diamond-shaped DAG fan-in from
     re-expanding already-settled nodes; BFS level order makes the first
     arrival the min depth, so no final re-aggregation is needed.  The
-    frontier is localCheckpoint-materialized every round (it feeds the
-    expand join, the visited union, and the emptiness probe) and the
-    visited accumulator every ``checkpoint_every`` rounds — the
+    frontier is localCheckpoint-materialized every round by ``_settle``
+    (it feeds the expand join and the visited union, and the same job
+    counts its rows for the emptiness probe) and the visited
+    accumulator every ``_BFS_VISITED_CKPT_EVERY`` rounds — the
     connected-components lineage-cut discipline for pathological DAGs.
     """
     frontier = (
@@ -56,7 +71,7 @@ def descendants_bfs(
     depth = 0
     while max_depth is None or depth < max_depth:
         depth += 1
-        frontier = (
+        frontier, n_new = _settle(
             frontier.join(edges, frontier.uuid == edges.parent_uuid)
             .select(
                 "root_uuid",
@@ -64,15 +79,13 @@ def descendants_bfs(
                 F.lit(depth).alias("depth"),
             )
             .distinct()
-            .join(visited, ["root_uuid", "uuid"], "left_anti")
-            .localCheckpoint(eager=True)
+            .join(visited, ["root_uuid", "uuid"], "left_anti"),
+            F.lit(True),
         )
-        # The last bounded round ends the loop whatever the probe says, and
-        # a union with an empty frontier changes nothing: skip that job.
-        if depth != max_depth and frontier.isEmpty():
+        if n_new == 0:
             break
         visited = visited.unionByName(frontier)
-        if depth % checkpoint_every == 0:
+        if depth % _BFS_VISITED_CKPT_EVERY == 0:
             visited = visited.localCheckpoint(eager=True)
     return visited
 
@@ -81,14 +94,13 @@ def ancestors_bfs(
     edges: DataFrame,
     roots: DataFrame,
     max_depth: int | None = 5,
-    checkpoint_every: int = 10,
 ) -> DataFrame:
     """All (root_uuid, uuid, depth) reachable upward from roots."""
     flipped = edges.select(
         F.col("child_uuid").alias("parent_uuid"),
         F.col("parent_uuid").alias("child_uuid"),
     )
-    return descendants_bfs(flipped, roots, max_depth, checkpoint_every)
+    return descendants_bfs(flipped, roots, max_depth)
 
 
 def latest_child(
@@ -118,7 +130,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Iterative PageRank over a directed edge list (src, dst).
 
@@ -135,9 +146,10 @@ def pagerank(
     Scale shape: one rank⋈degree join per iteration keyed on node, one
     contribution aggregation keyed on dst — both reuse the same hash
     partitioning.  The logical plan grows linearly with iterations, so
-    every `checkpoint_every` rounds the rank frontier is localCheckpointed
-    (same lineage-cut pattern as connected_components); for the typical
-    3-5 analytic iterations no checkpoint triggers.
+    every ``_PAGERANK_CKPT_EVERY`` rounds the rank frontier is
+    localCheckpointed (same lineage-cut pattern as
+    connected_components); for the typical 3-5 analytic iterations no
+    checkpoint triggers.
     """
     # materialize the (possibly expensive) edge derivation ONCE — each
     # iteration joins edges twice and the unrolled lineage would
@@ -171,7 +183,7 @@ def pagerank(
                 F.lit(base) + F.lit(damping) * F.sum("c").cast("double"), 12
             ).alias("rank")
         )
-        if i % checkpoint_every == 0 and i < iterations:
+        if i % _PAGERANK_CKPT_EVERY == 0 and i < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -180,7 +192,6 @@ def shortest_paths(
     edges: DataFrame,
     source,
     rounds: int = 4,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Single-source shortest paths by ``rounds`` Bellman-Ford
     relaxations over a weighted edge list (src, dst, w).
@@ -191,7 +202,7 @@ def shortest_paths(
     edges⋈frontier join + a dst-keyed MIN).  Determinism needs no
     decimal: path sums are per-row IEEE on identical doubles and MIN
     is order-free, so any partitioning yields the same distances.
-    Lineage is cut every ``checkpoint_every`` rounds (the
+    Lineage is cut every ``_SSSP_CKPT_EVERY`` rounds (the
     connected-components / pagerank discipline).
     """
     edges = edges.localCheckpoint(eager=True)
@@ -209,9 +220,47 @@ def shortest_paths(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if i % checkpoint_every == 0 and i < rounds:
+        if i % _SSSP_CKPT_EVERY == 0 and i < rounds:
             dist = dist.localCheckpoint(eager=True)
     return dist
+
+
+def _orient_by_degree(
+    e: DataFrame, pin_degrees: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """Degree-ordered orientation of an undirected edge list (u, v):
+    every edge points at its higher-degree endpoint, id tiebreak, as
+    (s, t).  The (degree, id) total order bounds every out-degree by
+    O(√m) and is transitive, so each triangle is enumerated once, as
+    s→t→w closed by s→w.
+
+    Returns (oriented, deg): ``oriented`` is eagerly checkpointed (it
+    feeds both wedge-join sides and the closure); ``deg`` is the
+    (node, d) relation, checkpointed too when ``pin_degrees`` (a caller
+    that reads it again).
+    """
+    deg = (
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+    if pin_degrees:
+        deg = deg.localCheckpoint(eager=True)
+    da, db = deg.alias("da"), deg.alias("db")
+    flip = (F.col("db.d") < F.col("da.d")) | (
+        (F.col("db.d") == F.col("da.d")) & (F.col("v") < F.col("u"))
+    )
+    oriented = (
+        e.join(da, F.col("u") == F.col("da.node"))
+        .join(db, F.col("v") == F.col("db.node"))
+        .select(
+            F.when(flip, F.col("v")).otherwise(F.col("u")).alias("s"),
+            F.when(flip, F.col("u")).otherwise(F.col("v")).alias("t"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    return oriented, deg
 
 
 def triangle_stats(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -235,26 +284,8 @@ def triangle_stats(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFram
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = e.localCheckpoint(eager=True)  # degrees + orientation share it
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    deg = deg.localCheckpoint(eager=True)  # 3 consumers below
-    da, db = deg.alias("da"), deg.alias("db")
-    flip = (F.col("db.d") < F.col("da.d")) | (
-        (F.col("db.d") == F.col("da.d")) & (F.col("v") < F.col("u"))
-    )
-    oriented = (
-        e.join(da, F.col("u") == F.col("da.node"))
-        .join(db, F.col("v") == F.col("db.node"))
-        .select(
-            F.when(flip, F.col("v")).otherwise(F.col("u")).alias("s"),
-            F.when(flip, F.col("u")).otherwise(F.col("v")).alias("t"),
-        )
-    )
-    oriented = oriented.localCheckpoint(eager=True)  # 3 consumers
+    # degrees have 3 consumers: both orientation joins and the wedges
+    oriented, deg = _orient_by_degree(e, pin_degrees=True)
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.t") == F.col("e2.s"))
@@ -297,7 +328,6 @@ def kcore(
     k: int,
     src: str = "u",
     dst: str = "v",
-    peels_per_check: int = 2,
 ) -> DataFrame:
     """k-core decomposition membership: iteratively peel vertices of
     degree < k until the remaining subgraph has min degree ≥ k.
@@ -313,12 +343,14 @@ def kcore(
     hash-semi-joins keyed on the endpoints (never all-pairs).  Every
     round removes EVERY current sub-k vertex at once, so the round
     count is the peeling depth, not the vertex count.  Rounds are
-    BATCHED (r13): ``peels_per_check`` peels run lazily between each
-    convergence count — a peel at or past the fixpoint is a no-op
+    BATCHED (r13): ``_KCORE_PEELS_PER_CHECK`` peels run lazily between
+    the round barriers — a peel at or past the fixpoint is a no-op
     (every vertex already >= k), so over-peeling never changes the
-    result, and halving the driver barriers cut the sf0.1 query
-    3.4 -> 2.6 s.  Lineage is cut with an eager localCheckpoint at
-    every convergence check so the plan never unrolls past one batch.
+    result.  Each barrier checkpoints the peeled edges, then
+    ``_settle``s their degree relation, whose job also counts the
+    sub-k vertices (the convergence probe); that checkpointed degree
+    relation is the result at the fixpoint and the next batch's first
+    peel otherwise, so it is computed once.
     Oracle (r12): because extra peel rounds past convergence are
     no-ops, the fixpoint IS SQL-expressible by unrolling past the
     measured depth — graph_kcore_parts' oracle materializes
@@ -335,19 +367,21 @@ def kcore(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).distinct()
     sym = sym.localCheckpoint(eager=True)
+    deg = sym.groupBy("a").agg(F.count("*").alias("d"))
     while True:
         # peels are LAZY — on an already-converged graph the whole
-        # batch folds into the convergence count as no-op semi-joins,
-        # so peel-first costs no extra action
-        for _ in range(max(1, peels_per_check)):
-            deg = sym.groupBy("a").agg(F.count("*").alias("d"))
+        # batch folds into the barrier as no-op semi-joins, so
+        # peel-first costs no extra action
+        for _ in range(_KCORE_PEELS_PER_CHECK):
             survivors = deg.where(F.col("d") >= k).select("a")
             sym = sym.join(survivors, "a", "semi").join(
                 survivors.select(F.col("a").alias("b")), "b", "semi"
             )
+            deg = sym.groupBy("a").agg(F.count("*").alias("d"))
         sym = sym.localCheckpoint(eager=True)
-        deg = sym.groupBy("a").agg(F.count("*").alias("d"))
-        n_bad = deg.where(F.col("d") < k).count()
+        deg, n_bad = _settle(
+            sym.groupBy("a").agg(F.count("*").alias("d")), F.col("d") < k
+        )
         if n_bad == 0:
             return deg.select(
                 F.col("a").alias("node"), F.col("d").alias("core_degree")
@@ -375,7 +409,8 @@ def boruvka_mst(
     hash agg, never a sort window), and a component contraction via
     connected_components over the SELECTED edges only (a forest on
     components, so the inner fixpoint propagates over a relation that
-    halves every round).  Driver state: one count per round (the
+    halves every round).  Driver state: the live cross-component edge
+    count, observed on the job that checkpoints them (``_settle``, the
     fixpoint-loop discipline of connected_components).
     """
     from .components import connected_components
@@ -395,13 +430,11 @@ def boruvka_mst(
     for _ in range(max_rounds):
         ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-        lab = (
-            e.join(ca, "a")
-            .join(cb, "b")
-            .filter(F.col("ca") != F.col("cb"))
-            .localCheckpoint(eager=True)  # count + min-agg share it
+        lab, n_live = _settle(  # both min-agg sides share it
+            e.join(ca, "a").join(cb, "b").filter(F.col("ca") != F.col("cb")),
+            F.lit(True),
         )
-        if lab.count() == 0:
+        if n_live == 0:
             converged = True
             break
         est = F.struct("w", "a", "b", "ca", "cb").alias("e")
@@ -464,10 +497,11 @@ def ktruss(
     the wedge join on the middle VERTEX ID, so a high-degree low-id
     hub concentrated wedge rows in one task; pointing every edge at
     its higher-degree endpoint (id tiebreak) bounds every out-degree
-    by O(√m) exactly as in ``triangle_stats``, and the (deg, id)
-    total order is transitively consistent, so each triangle is still
-    enumerated exactly once as the path s→t→w with the closing edge
-    guaranteed oriented s→w):
+    by O(√m) exactly as in ``triangle_stats`` (both orient through
+    ``_orient_by_degree``), and the (deg, id) total order is
+    transitively consistent, so each triangle is still enumerated
+    exactly once as the path s→t→w with the closing edge guaranteed
+    oriented s→w):
 
     1. orientation: per-round degree count + two node-keyed joins
        (degrees change as edges peel, so the orientation is re-derived
@@ -482,12 +516,13 @@ def ktruss(
 
     Rounds remove ALL light edges at once (round count = peeling
     depth); the oriented relation is localCheckpointed every round (it
-    feeds three join sides), as is the scored edge relation (three
-    consumers + the convergence probe).  Like kcore, rounds at or past
-    the fixpoint are no-ops, which is what makes the unrolled-CTE
-    oracle exact (queries.graph_ktruss_copurchase) — and the oracle
-    enumerates triangles by the id-ordered a<b<c join, which is the
-    SAME triangle set (orientation never changes which triangles
+    feeds three join sides), and the scored edge relation is
+    ``_settle``d (it yields the next round's edges, and its checkpoint
+    job counts the light edges for the convergence probe).  Like kcore,
+    rounds at or past the fixpoint are no-ops, which is what makes the
+    unrolled-CTE oracle exact (queries.graph_ktruss_copurchase) — and
+    the oracle enumerates triangles by the id-ordered a<b<c join, which
+    is the SAME triangle set (orientation never changes which triangles
     exist, only the join's task balance).
     """
     if k < 3:
@@ -502,25 +537,7 @@ def ktruss(
         .localCheckpoint(eager=True)
     )
     while True:
-        deg = (
-            canon.select(F.col("u").alias("node"))
-            .unionByName(canon.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        da, db = deg.alias("da"), deg.alias("db")
-        flip = (F.col("db.d") < F.col("da.d")) | (
-            (F.col("db.d") == F.col("da.d")) & (F.col("v") < F.col("u"))
-        )
-        oriented = (
-            canon.join(da, F.col("u") == F.col("da.node"))
-            .join(db, F.col("v") == F.col("db.node"))
-            .select(
-                F.when(flip, F.col("v")).otherwise(F.col("u")).alias("s"),
-                F.when(flip, F.col("u")).otherwise(F.col("v")).alias("t"),
-            )
-            .localCheckpoint(eager=True)  # wedge join sides + closure
-        )
+        oriented, _ = _orient_by_degree(canon)
         o1 = oriented.select(F.col("s").alias("a"), F.col("t").alias("b"))
         o2 = oriented.select(F.col("s").alias("b"), F.col("t").alias("c"))
         tri = (
@@ -543,16 +560,16 @@ def ktruss(
         supp = contrib.groupBy("u", "v").agg(
             F.count("*").cast("bigint").alias("support")
         )
-        # checkpoint the SCORED relation first, then probe it: the
-        # triangle join executes exactly once per round (a count on the
-        # un-checkpointed relation plus a later checkpoint would run it
-        # twice).  Left join: an edge in no triangle scores 0 < k-2
+        # checkpoint the SCORED relation and count its light edges in
+        # the same job: the triangle join executes exactly once per
+        # round.  Left join: an edge in no triangle scores 0 < k-2
         # and drops (k >= 3 guarantees that's the correct fate).
-        scored = (
-            canon.join(supp, ["u", "v"], "left")
-            .withColumn("support", F.coalesce("support", F.lit(0).cast("bigint")))
-            .localCheckpoint(eager=True)
+        scored, n_light = _settle(
+            canon.join(supp, ["u", "v"], "left").withColumn(
+                "support", F.coalesce("support", F.lit(0).cast("bigint"))
+            ),
+            F.col("support") < k - 2,
         )
-        if scored.filter(F.col("support") < k - 2).isEmpty():
+        if n_light == 0:
             return scored
         canon = scored.filter(F.col("support") >= k - 2).select("u", "v")

@@ -36,11 +36,9 @@ def test_fixpoint_min_depth_on_diamond(spark):
 
 
 def test_fixpoint_walks_past_default_depth_and_checkpoints(spark):
-    # chain of 25 hops crosses two checkpoint_every=10 boundaries
+    # chain of 25 hops crosses two visited-checkpoint boundaries (every 10)
     chain = [(f"n{i}", f"n{i+1}") for i in range(25)]
-    got = descendants_bfs(
-        _edges(spark, chain), _roots(spark, ["n0"]), None, checkpoint_every=10
-    )
+    got = descendants_bfs(_edges(spark, chain), _roots(spark, ["n0"]), None)
     rows = {r.uuid: r.depth for r in got.collect()}
     assert len(rows) == 26 and rows["n25"] == 25
 
@@ -49,21 +47,72 @@ def test_fixpoint_walks_past_default_depth_and_checkpoints(spark):
     assert max(r.depth for r in bounded.collect()) == 5
 
 
-def test_bounded_walk_skips_last_round_probe(spark):
-    # The last bounded round ends the loop whatever the emptiness probe
-    # says, so it runs none.  On this chain a call launches 2 jobs for the
-    # roots, 7 per frontier checkpoint and 1 per probe: max_depth=1 runs
-    # 2 + 7 and max_depth=3 runs 2 + 3*7 + 2*1.
+def test_fixpoint_loops_launch_pinned_jobs(spark):
+    # Every loop reads its stop probe off its round's checkpoint job, so
+    # a call launches its checkpoints and nothing else.  The table counts
+    # jobs with adaptive execution off: AQE runs each query stage as a
+    # job of its own, and on the ktruss and MST fixtures how many of those
+    # it launches varies by one between identical calls.
+    from ingest_pipeline_spark.operators.components import connected_components
+    from ingest_pipeline_spark.operators.graph import boruvka_mst, kcore, ktruss
+
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     chain = _edges(spark, [(f"n{i}", f"n{i+1}") for i in range(8)])
     roots = _roots(spark, ["n0"])
-    jobs = {}
-    for depth in (1, 3):
+    longs = lambda rows, cols: spark.createDataFrame(  # noqa: E731
+        rows, ", ".join(f"{c} long" for c in cols)
+    )
+    k5 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    strip = [(i, i + 1) for i in range(7)] + [(i, i + 2) for i in range(6)]
+    bfs = lambda d: {("n0", f"n{i}", i) for i in range(d + 1)}  # noqa: E731
+    table = {  # name: (call, jobs, result rows)
+        # roots 1 + one frontier checkpoint per round
+        "bfs depth 1": (lambda: descendants_bfs(chain, roots, 1), 2, bfs(1)),
+        "bfs depth 3": (lambda: descendants_bfs(chain, roots, 3), 4, bfs(3)),
+        # edges 1 + per round: peeled edges 1 + degrees 1
+        "kcore clique+tail": (
+            lambda: kcore(longs(k5 + [(4, 10), (10, 11), (11, 12)], "uv"), 4),
+            3,
+            {(n, 4) for n in range(5)},
+        ),
+        # the strip peels away in two rounds, the third scores nothing
+        "ktruss strip": (lambda: ktruss(longs(strip, "uv"), 4), 7, set()),
+        "components chain": (
+            lambda: connected_components(
+                longs([(i, i + 1) for i in range(4)], ["id_a", "id_b"])
+            ),
+            7,
+            {(i, 0) for i in range(5)},
+        ),
+        "mst 4 nodes": (
+            lambda: boruvka_mst(
+                longs([(1, 2, 5), (2, 3, 2), (1, 3, 4), (3, 4, 5)], "abw")
+            ),
+            11,
+            {(2, 3, 2), (1, 3, 4), (3, 4, 5)},
+        ),
+    }
+
+    def jobs(call):
         first = sched.nextJobId()
-        got = descendants_bfs(chain, roots, depth)
-        jobs[depth] = sched.nextJobId() - first
-        assert sorted(r.depth for r in got.collect()) == list(range(depth + 1))
-    assert jobs == {1: 9, 3: 25}
+        out = call()
+        return sched.nextJobId() - first, out
+
+    aqe_conf = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got = {}
+        for name, (call, _, _) in table.items():
+            n, out = jobs(call)
+            got[name] = (n, {tuple(r) for r in out.collect()})
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_conf)
+    assert got == {name: (n, rows) for name, (_, n, rows) in table.items()}
+
+    # with AQE on, the BFS stage jobs are stable: 2 for the roots and 7
+    # per frontier round
+    aqe = {d: jobs(lambda: descendants_bfs(chain, roots, d))[0] for d in (1, 3)}
+    assert aqe == {1: 9, 3: 23}
 
 
 def test_fixpoint_ancestors_inverts(spark):

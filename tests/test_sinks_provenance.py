@@ -1,8 +1,15 @@
 """Tests: batched REST sink, provenance capture, check registry."""
 
+import re
+import subprocess
+
 from pyspark.sql import functions as F
 
-from ingest_pipeline_spark.provenance import run_manifest, with_provenance
+from ingest_pipeline_spark.provenance import (
+    git_provenance,
+    run_manifest,
+    with_provenance,
+)
 from ingest_pipeline_spark.sources.sinks import rest_batch_sink
 from ingest_pipeline_spark.validate.checks import Check, CheckRegistry
 
@@ -34,10 +41,20 @@ def test_rest_batch_sink_batches(spark, tmp_path):
     assert sorted(seen) == list(range(10))
 
 
-def test_run_manifest_and_stamp(spark):
+def test_run_manifest_and_stamp(spark, tmp_path):
+    # git_provenance reads a real commit: build a one-commit repo here so
+    # the check holds in any copy of the engine tree, with or without .git
+    git = ["git", "-c", "user.name=t", "-c", "user.email=t@example.com",
+           "-c", "commit.gpgsign=false"]
+    subprocess.run(git + ["init", "-q", str(tmp_path)], check=True)
+    (tmp_path / "f.txt").write_text("x\n")
+    subprocess.run(git + ["add", "f.txt"], cwd=tmp_path, check=True)
+    subprocess.run(git + ["commit", "-q", "-m", "c"], cwd=tmp_path, check=True)
+    assert re.fullmatch(r"[0-9a-f]{40}", git_provenance(str(tmp_path))["commit"])
+
     m = run_manifest(spark, "run42", ["/data/a.parquet"]).first()
     assert m.run_id == "run42"
-    assert len(m.commit) == 40  # this repo has git history
+    assert m.commit == git_provenance()["commit"]
     stamped = with_provenance(spark.range(2), "run42").collect()
     assert all(r.run_id == "run42" for r in stamped)
 
