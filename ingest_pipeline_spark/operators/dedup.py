@@ -17,6 +17,12 @@ All variants are shuffle-aware and designed for 100 TB:
                 the verifier behind minhash candidates, or standalone
                 for small cardinalities.
 
+Every exact pair count (shared shingles of two docs) goes through one
+of two private helpers: ``_overlaps`` (the inverted-index self-join,
+optionally behind the ``_capped`` stop-shingle guard) when pairs are
+discovered by their shared shingles, ``_pair_overlaps`` when the
+candidate pairs are given (prefix-filter verify, MinHash calibration).
+
 Hash family is md5-prefix (engine-portable, deterministic) rather than
 Spark's murmur3 `hash()` so the DuckDB oracle reproduces every
 signature bit-for-bit.
@@ -77,6 +83,70 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFram
     ng = NGram(n=k, inputCol="__toks", outputCol="__sh")
     return ng.transform(tok).select(
         "id", F.explode(F.array_distinct("__sh")).alias("shingle")
+    )
+
+
+def _capped(sh: DataFrame, cap: int, keys: tuple[str, ...] = ()) -> DataFrame:
+    """The stop-shingle guard: the (keys…, id, shingle) rows whose
+    shingle has a doc frequency of at most ``cap`` within ``keys``.
+
+    A shingle shared by k documents contributes k·(k−1)/2 rows to the
+    inverted-index self-join, so one stop-shingle is a quadratic hot
+    bucket; capping bounds the hottest bucket at cap·(cap−1)/2 rows.
+    The doc-frequency aggregate shuffles on the key the self-join
+    needs, so AQE reuses the exchange.
+    """
+    keep = (
+        sh.groupBy(*keys, "shingle")
+        .agg(F.count("*").alias("doc_freq"))
+        .filter(F.col("doc_freq") <= F.lit(int(cap)))
+        .select(*keys, "shingle")
+    )
+    return sh.join(keep, [*keys, "shingle"])
+
+
+def _overlaps(
+    sh: DataFrame, sizes: DataFrame, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Shared-shingle counts of every pair that shares one: the
+    inverted-index self-join on (keys…, shingle) with id_a < id_b —
+    docs meet only through a common shingle, never a cross product.
+
+    ``sizes`` is (keys…, id, set_size); it is joined onto both sides,
+    so a caller decides which set sizes the ratios divide by.  Returns
+    (keys…, id_a, id_b, n_inter, size_a, size_b).
+    """
+    a = sh.select(*keys, F.col("id").alias("id_a"), "shingle")
+    b = sh.select(*keys, F.col("id").alias("id_b"), "shingle")
+    za = sizes.select(
+        *keys, F.col("id").alias("id_a"), F.col("set_size").alias("size_a")
+    )
+    zb = sizes.select(
+        *keys, F.col("id").alias("id_b"), F.col("set_size").alias("size_b")
+    )
+    return (
+        a.join(b, [*keys, "shingle"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy(*keys, "id_a", "id_b")
+        .agg(F.count("*").alias("n_inter"))
+        .join(za, [*keys, "id_a"])
+        .join(zb, [*keys, "id_b"])
+        .select(*keys, "id_a", "id_b", "n_inter", "size_a", "size_b")
+    )
+
+
+def _pair_overlaps(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Shared-shingle counts of GIVEN candidate pairs: ``pairs``
+    (id_a, id_b, …) ⋈ ``sh`` on id_a, then ⋈ ``sh`` on (id_b, shingle),
+    counted per pair row.  Returns pairs' columns + n_inter; a pair
+    with no shared shingle has no row (left-join it back for a 0)."""
+    sa = sh.select(F.col("id").alias("id_a"), "shingle")
+    sb = sh.select(F.col("id").alias("id_b"), "shingle")
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, ["id_b", "shingle"])
+        .groupBy(*pairs.columns)
+        .agg(F.count("*").alias("n_inter"))
     )
 
 
@@ -236,16 +306,13 @@ def ngram_jaccard_pairs(
     product), count intersections, then |A∪B| = |A|+|B|−|A∩B|.
     Returns (id_a, id_b, jaccard).
 
-    ``df_cap`` is the stop-shingle guard for scale: a shingle shared by
-    k documents contributes k·(k−1)/2 rows to the self-join, so one
-    stop-shingle ("the quick brown" at corpus scale) is a quadratic hot
-    bucket.  With ``df_cap=c`` every shingle whose doc-frequency exceeds
-    c is dropped from BOTH the intersection join and the per-doc set
-    sizes — the result is exact Jaccard over the capped shingle
-    universe, and the hottest join bucket is bounded at c·(c−1)/2 rows.
-    ``None`` (default) disables the guard and preserves exact Jaccard
-    over all shingles.  The doc-frequency aggregate shuffles on the
-    same shingle key the join needs, so AQE reuses the exchange.
+    ``df_cap`` is the stop-shingle guard for scale (``_capped``): with
+    ``df_cap=c`` every shingle whose doc-frequency exceeds c is dropped
+    from BOTH the intersection join and the per-doc set sizes — the
+    result is exact Jaccard over the capped shingle universe, and the
+    hottest join bucket is bounded at c·(c−1)/2 rows.  ``None``
+    (default) disables the guard and preserves exact Jaccard over all
+    shingles.
 
     The shingle relation feeds THREE-plus consumers (per-doc sizes,
     both sides of the intersection self-join, and the optional df_cap
@@ -262,26 +329,10 @@ def ngram_jaccard_pairs(
             df, text_col, id_col, shingle_k
         ).localCheckpoint(eager=True)
     if df_cap is not None:
-        keep = (
-            shingles.groupBy("shingle")
-            .agg(F.count("*").alias("doc_freq"))
-            .filter(F.col("doc_freq") <= F.lit(int(df_cap)))
-            .select("shingle")
-        )
-        shingles = shingles.join(keep, "shingle")
+        shingles = _capped(shingles, df_cap)
     sizes = shingles.groupBy("id").agg(F.count("*").alias("set_size"))
-    inter = (
-        shingles.alias("a")
-        .join(
-            shingles.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    joined = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("set_size", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("set_size", "size_b"), "id_b")
+    return (
+        _overlaps(shingles, sizes)
         .withColumn(
             "jaccard",
             F.col("n_inter").cast("double")
@@ -290,7 +341,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return joined
 
 
 def containment_pairs(
@@ -307,10 +357,8 @@ def containment_pairs(
     The sub-document duplication detector Jaccard structurally misses:
     a short doc fully embedded in a long one has tiny Jaccard (union is
     dominated by the long doc) but containment ≈ 1.  Same inverted-index
-    shape as ngram_jaccard_pairs — shared-shingle self-join (docs meet
-    only through common shingles, never a cross product), one
-    intersection count, per-doc set sizes joined back — and the same
-    ``df_cap`` stop-shingle guard bounding hot buckets at c·(c−1)/2.
+    shape as ngram_jaccard_pairs (``_overlaps``) and the same ``df_cap``
+    stop-shingle guard (``_capped``) bounding hot buckets at c·(c−1)/2.
 
     Emits one row per unordered pair (id_a < id_b) where EITHER
     direction's containment ≥ t_num/t_den, with both directions
@@ -324,40 +372,13 @@ def containment_pairs(
         eager=True
     )
     if df_cap is not None:
-        keep = (
-            shingles.groupBy("shingle")
-            .agg(F.count("*").alias("doc_freq"))
-            .filter(F.col("doc_freq") <= F.lit(int(df_cap)))
-            .select("shingle")
-        )
-        shingles = shingles.join(keep, "shingle")
+        shingles = _capped(shingles, df_cap)
     sizes = shingles.groupBy("id").agg(F.count("*").alias("set_size"))
-    inter = (
-        shingles.alias("a")
-        .join(
-            shingles.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
     thr = F.lit(float(t_num)) / F.lit(float(t_den))
     c_ab = F.col("n_inter").cast("double") / F.col("size_a").cast("double")
     c_ba = F.col("n_inter").cast("double") / F.col("size_b").cast("double")
     return (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed(
-                "set_size", "size_a"
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "set_size", "size_b"
-            ),
-            "id_b",
-        )
+        _overlaps(shingles, sizes)
         .filter((c_ab >= thr) | (c_ba >= thr))
         .select(
             "id_a",
@@ -558,33 +579,13 @@ def prefix_filter_jaccard_pairs(
         )
         .distinct()
     )
-    # Verify only touches shingles of docs that appear in some candidate
-    # pair: semi-join the (big) shingle relation down with the (small)
-    # candidate id set before the pairwise intersection count, so the
-    # full corpus is never shuffled twice more.  Candidates are
-    # materialized first — they feed both the id set and the verify
-    # join, and their lineage (window rank + prefix self-join) is the
-    # expensive half of the plan.
-    cand = cand.localCheckpoint(eager=True)
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    toks_c = toks.join(F.broadcast(cand_ids), "id", "leftsemi")
-    inter = (
-        cand.join(toks_c.alias("ta"), F.col("id_a") == F.col("ta.id"))
-        .join(
-            toks_c.alias("tb"),
-            (F.col("id_b") == F.col("tb.id"))
-            & (F.col("ta.shingle") == F.col("tb.shingle")),
-        )
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    # Verify straight off the shingle rows: the candidates have one
+    # consumer, so they need no checkpoint, and AQE picks each join's
+    # strategy from runtime sizes, so no forced-broadcast semi-join cut
+    # (both cost 4 jobs per call and bought nothing at sf0.1).
     thr = F.lit(float(t_num)) / F.lit(float(t_den))
     return (
-        inter.withColumn(
+        _pair_overlaps(cand, toks).withColumn(
             "jaccard_raw",
             F.col("n_inter").cast("double")
             / (F.col("size_a") + F.col("size_b") - F.col("n_inter")).cast(

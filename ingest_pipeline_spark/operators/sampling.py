@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scalars import hex_prefix_to_long
+
 
 def stratified_sample(
     df: DataFrame, stratum_col: str, fractions: dict, seed: int = 42
@@ -103,10 +105,7 @@ def weighted_sample_aes(
     oracle-checkable.  Rows with non-positive weight are excluded
     (their key would be infinite/undefined).
     """
-    h = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10)
-        .cast("long")
-    )
+    h = hex_prefix_to_long(F.md5(F.col(id_col).cast("string")), 1, 13)
     u = (h + F.lit(1)).cast("double") / F.lit(4503599627370497.0)
     key = F.round(-F.log(u) / F.col(weight_col).cast("double"), 9)
     w = Window.partitionBy(stratum_col).orderBy(

@@ -1,9 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: brute-force cosine top-k of query vectors against a
-  corpus.  The corpus side is broadcast when small; otherwise the
-  query side is broadcast (top-k per query commutes).  Dot products
-  stay JVM-side via zip_with + aggregate — no Python in the hot path.
+  corpus.  The bounded query side is broadcast (top-k per query
+  commutes); per-pair dot products run in the Arrow-vectorized
+  ``dot_seq``, bit-identical to the zip_with + aggregate fold.
 - ``lsh_bucket_candidates``: random-hyperplane LSH (sign bits of dot
   products with deterministic md5-seeded hyperplanes) — the scale path:
   candidates meet only inside a bucket, turning O(n·m) into a bucketed
@@ -55,18 +55,6 @@ def _dot_seq_fn(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(acc)
 
 
-def _norm_seq_fn(a: pd.Series) -> pd.Series:
-    import numpy as np
-
-    if len(a) == 0:
-        return pd.Series([], dtype=np.float64)
-    A = _np_mat(a)
-    acc = A[:, 0] * A[:, 0]
-    for d in range(1, A.shape[1]):
-        acc = acc + A[:, d] * A[:, d]
-    return pd.Series(np.sqrt(acc))
-
-
 def dot_seq(a: Column, b: Column) -> Column:
     """Arrow-vectorized dot product, BIT-IDENTICAL to the _dot fold.
 
@@ -91,11 +79,6 @@ def dot_seq(a: Column, b: Column) -> Column:
     return pandas_udf(_dot_seq_fn, "double").asNondeterministic()(a, b)
 
 
-def norm_seq(a: Column) -> Column:
-    """Arrow-vectorized L2 norm, bit-identical to the _norm fold."""
-    return pandas_udf(_norm_seq_fn, "double")(a)
-
-
 def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -116,13 +99,12 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
-    broadcast_queries: bool = True,
     round_decimals: int | None = None,
 ) -> DataFrame:
     """Top-k corpus neighbors per query by cosine (exact, brute force).
 
     Returns (query_id, neighbor_id, cosine_sim, rank).  Plan: broadcast
-    the small side, cross-join, per-pair dot product, then row_number
+    the query side, cross-join, per-pair dot product, then row_number
     window partitioned by query — the window shuffle is on query_id
     (uniform).  Self-pairs (same id) are excluded.  round_decimals
     rounds the score BEFORE ranking (use when an external oracle ranks
@@ -142,12 +124,9 @@ def cosine_topk(
         F.col(vec_col).alias("c_vec"),
         _norm(F.col(vec_col)).alias("c_nrm"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    else:
-        c = F.broadcast(c)
     scored = (
-        q.join(c, F.col("query_id") != F.col("neighbor_id"))
+        F.broadcast(q)
+        .join(c, F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine_sim",
             dot_seq(F.col("q_vec"), F.col("c_vec"))

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scalars import hex_prefix_to_long
+
 # 2^52: 13 hex chars of md5, exactly representable in a double
 _SCALE = float(1 << 52)
 
@@ -51,8 +53,7 @@ def kmv_hash(value_col: str) -> "F.Column":
     """Uniform [0,1) hash of a column, identical in Spark and DuckDB:
     CAST('0x' || SUBSTR(MD5(v),1,13) AS BIGINT) / 2^52."""
     return (
-        F.conv(F.substring(F.md5(F.col(value_col)), 1, 13), 16, 10).cast("long")
-        / F.lit(_SCALE)
+        hex_prefix_to_long(F.md5(F.col(value_col)), 1, 13) / F.lit(_SCALE)
     )
 
 
@@ -106,7 +107,7 @@ HLL_RAW_NUMERATOR = _HLL_ALPHA * float(_HLL_M * _HLL_M) * float(1 << _HLL_RHO_MA
 
 def _hash32(col: "F.Column") -> "F.Column":
     """Unsigned-32 md5-prefix hash — bit-identical in any engine."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+    return hex_prefix_to_long(F.md5(col), 1, 8)
 
 
 def hll_registers(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -180,14 +181,9 @@ def hll_distinct(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
 
 def _cms_bucket(col: "F.Column", j: int, w: int) -> "F.Column":
     """Row-j bucket of a key: seeded md5 hash mod w."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), col.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(w)
-    )
+    return hex_prefix_to_long(
+        F.md5(F.concat(F.lit(f"{j}:"), col.cast("string"))), 1, 8
+    ) % F.lit(w)
 
 
 def cms_counters(
@@ -257,14 +253,9 @@ def cms_estimate(
 
 
 def _bloom_pos(col: "F.Column", i: int, m: int) -> "F.Column":
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{i}:"), col.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(m)
-    )
+    return hex_prefix_to_long(
+        F.md5(F.concat(F.lit(f"{i}:"), col.cast("string"))), 1, 8
+    ) % F.lit(m)
 
 
 def bloom_bits(df: DataFrame, key_col: str, k: int = 3, m: int = 4096) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .tables import register_views
-from .functions.scalars import expand_slice_ids
+from .functions.scalars import expand_slice_ids, hex_prefix_to_long
 from .functions.text import (
     LANG_MARKERS,
     fingerprint_md5,
@@ -32,6 +32,7 @@ from .functions.text import (
     normalize_text,
     quality_features,
     token_count,
+    tokenize_ws,
 )
 from .operators.dedup import (
     exact_dedup,
@@ -1510,8 +1511,6 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full query at sf0.1; the NGram transformer cannot express a
     stride-48 window).
     """
-    from .functions.text import tokenize_ws
-
     size, stride = 64, 48
     docs = _t(spark, sf_dir)["documents"].filter(F.col("doc_id") < 400)
     toks = docs.select("doc_id", tokenize_ws(F.col("text")).alias("tk"))
@@ -1708,7 +1707,6 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     text) and the probe key is fixed-width.  Both engines hash with
     the same md5 arithmetic, so the comparison stays exact.
     """
-    from .functions.scalars import hex_prefix_to_long
     from .operators.dedup import _shingle_rows
 
     aug = _aug_docs(spark, sf_dir)
@@ -1872,8 +1870,6 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision is a pure md5 function of the row id — reproducible
     across engines, retries, and cluster sizes (never seeded rand).
     """
-    from .functions.scalars import hex_prefix_to_long
-
     docs = _t(spark, sf_dir)["documents"]
     total = docs.groupBy().agg(F.count("*").alias("ntotal"))
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_before"))
@@ -2673,8 +2669,6 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     defaults.  Scales: two shuffles keyed by doc_id, no pairwise ops.
     """
     from pyspark.ml.feature import NGram
-
-    from .functions.text import tokenize_ws
 
     docs = _t(spark, sf_dir)["documents"].filter(F.col("doc_id") < 300)
     tok = docs.select(
@@ -6731,18 +6725,11 @@ def _geo_xy(prefix: str, key: str) -> tuple[Column, Column]:
     """Deterministic uniform [0,1)² coordinates from md5 — exact
     dyadic doubles, so both engines hold identical values."""
     def u(axis: str) -> Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{axis}:{prefix}:"), F.col(key).cast("string"))),
-                    1,
-                    13,
-                ),
-                16,
-                10,
-            ).cast("long")
-            / F.lit(_GEO_SCALE)
-        )
+        return hex_prefix_to_long(
+            F.md5(F.concat(F.lit(f"{axis}:{prefix}:"), F.col(key).cast("string"))),
+            1,
+            13,
+        ) / F.lit(_GEO_SCALE)
 
     return u("x"), u("y")
 
@@ -7205,7 +7192,7 @@ def quality_logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir)["documents"]
     n_chars = F.length("text")
-    n_tok = F.size(F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""))
+    n_tok = token_count(F.col("text"))
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
     n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
     f = docs.select(
@@ -7760,6 +7747,21 @@ def basket_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return copurchase_pairs(items, "l_orderkey", "l_partkey", min_support=3)
 
 
+def _copurchase_edges(
+    spark: SparkSession, sf_dir: str, min_support: int
+) -> DataFrame:
+    """The co-purchase graph of the graph_* queries: one (u, v) edge,
+    u < v, per part pair bought together in ≥ min_support orders.
+    copurchase_pairs dedups per basket via collect_set, so the raw
+    (l_orderkey, l_partkey) projection needs no distinct() exchange."""
+    from .operators.baskets import copurchase_pairs
+
+    items = _t(spark, sf_dir)["lineitem"].select("l_orderkey", "l_partkey")
+    return copurchase_pairs(items, "l_orderkey", "l_partkey", min_support).select(
+        F.col("part_a").alias("u"), F.col("part_b").alias("v")
+    )
+
+
 @register(
     "events_error_bursts",
     """
@@ -8113,9 +8115,7 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir)["documents"]
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "").alias(
-            "tk"
-        ),
+        tokenize_ws(F.col("text")).alias("tk"),
     )
     toks = toks.localCheckpoint(eager=True)  # tf, dlen, stats share it
     tf = (
@@ -8291,9 +8291,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir)["documents"]
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "").alias(
-            "tk"
-        ),
+        tokenize_ws(F.col("text")).alias("tk"),
     )
     toks = toks.localCheckpoint(eager=True)  # unigram + bigram + totals
     uni = (
@@ -8756,15 +8754,9 @@ def corpus_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir)["documents"]
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex_prefix_to_long(
+            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 8
+        )
         % 100
     )
     split = (
@@ -9290,9 +9282,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir)["documents"]
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "").alias(
-            "tk"
-        ),
+        tokenize_ws(F.col("text")).alias("tk"),
     )
     toks = toks.localCheckpoint(eager=True)  # unigrams + bigrams + V
     uni = (
@@ -9842,15 +9832,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning bit-matches; the single double division is guarded
     for the W = 0 empty graph.
     """
-    from .operators.baskets import copurchase_pairs
     from .operators.graph import triangle_stats
 
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 3)
     return triangle_stats(edges, "u", "v")
 
 
@@ -10448,7 +10432,7 @@ def text_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB version is scan-bound by construction.
     functions/text.py:tokenize_bpe_ish.
     """
-    from .functions.text import token_count, tokenize_bpe_ish
+    from .functions.text import tokenize_bpe_ish
 
     d = _t(spark, sf_dir)["documents"]
     n_ws = token_count(F.col("text"))
@@ -10865,7 +10849,6 @@ def corpus_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials → ≤#partitions broadcast offsets), NEVER a single-task
     global window, so shard assignment scales to 100 TB corpora.
     """
-    from .functions.text import token_count
     from .operators.prefix import running_sum
 
     docs = _t(spark, sf_dir)["documents"]
@@ -11236,15 +11219,9 @@ def graph_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail, cycle, star) — the oracle cannot catch a wrong constant
     mirrored into the SQL.
     """
-    from .operators.baskets import copurchase_pairs
     from .operators.graph import kcore
 
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 2).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 2)
     return (
         kcore(edges, 2)
         .orderBy(F.desc("core_degree"), F.asc("node"))
@@ -11935,15 +11912,9 @@ def experiment_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("exp:"), F.col("user_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    bucket = hex_prefix_to_long(
+        F.md5(F.concat(F.lit("exp:"), F.col("user_id").cast("string"))), 1, 8
+    )
     g = pv.select(
         "x", "y", F.when(bucket % 2 == 0, "A").otherwise("B").alias("grp")
     )
@@ -12731,14 +12702,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/baskets.py); the two degree lookups are keyed joins on
     the node id.  Regular graphs (zero variance) return NULL.
     """
-    from .operators.baskets import copurchase_pairs
-
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 3)
     edges = edges.localCheckpoint(eager=True)  # deg + moment stage share it
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -12917,14 +12881,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation, not needed at the co-purchase graph's support-≥3
     densities.
     """
-    from .operators.baskets import copurchase_pairs
-
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 3)
     edges = edges.localCheckpoint(eager=True)  # deg/adj/anti share it
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -13033,7 +12990,7 @@ def quality_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir)["documents"]
     n_chars = F.length("text")
-    n_tok = F.size(F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""))
+    n_tok = token_count(F.col("text"))
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
     n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
     f = docs.select(
@@ -13788,9 +13745,7 @@ def text_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             F.explode(
-                F.filter(
-                    F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
-                )
+                tokenize_ws(F.col("text"))
             ).alias("w"),
         )
         .groupBy("doc_id", "w")
@@ -14067,8 +14022,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2.4k-day / 200-row bounded relations (GLOBAL_WINDOW_BY_DESIGN);
     the 1-row count broadcasts are BNLJ_BY_DESIGN.
     """
-    from .functions.scalars import hex_prefix_to_long
-
     orders = _t(spark, sf_dir)["orders"]
     daily = orders.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).alias("day")
@@ -14607,9 +14560,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             F.explode(
-                F.filter(
-                    F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
-                )
+                tokenize_ws(F.col("text"))
             ).alias("w"),
         )
         .groupBy("doc_id", "w")
@@ -14835,11 +14786,7 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir)["documents"]
     tok = docs.groupBy("source").agg(
         F.sum(
-            F.size(
-                F.filter(
-                    F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
-                )
-            )
+            token_count(F.col("text"))
         ).alias("n_tokens"),
         F.count("*").alias("n_docs"),
     )
@@ -14940,9 +14887,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir)["documents"]
     n_chars = F.length("text")
-    n_tok = F.size(
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
-    )
+    n_tok = token_count(F.col("text"))
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
     n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
     f = docs.select(
@@ -15050,15 +14995,8 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference unit:
     tests/test_estimator_references.py::test_modularity_matches_reference.
     """
-    from .operators.baskets import copurchase_pairs
-
-    li = _t(spark, sf_dir)["lineitem"]
     part = _t(spark, sf_dir)["part"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    e0 = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    e0 = _copurchase_edges(spark, sf_dir, 3)
     pu = part.select(F.col("p_partkey").alias("u"), F.col("p_brand").alias("bu"))
     pv = part.select(F.col("p_partkey").alias("v"), F.col("p_brand").alias("bv"))
     edges = (
@@ -15193,15 +15131,9 @@ def graph_hyperball_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-BFS accuracy band):
     tests/test_estimator_references.py::test_hyperball_matches_reference.
     """
-    from .operators.baskets import copurchase_pairs
     from .operators.sketches import hll_registers, hll_estimate
 
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    e0 = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    e0 = _copurchase_edges(spark, sf_dir, 3)
     sym = (
         e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
     ).localCheckpoint(eager=True)  # joined every round
@@ -16305,14 +16237,8 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-order asynchronous variant.  BNLJ_BY_DESIGN: the 1-row
     total-edge broadcast.
     """
-    from .operators.baskets import copurchase_pairs
-
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    e = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    ).localCheckpoint(eager=True)  # sym + deg + intra share it
+    e = _copurchase_edges(spark, sf_dir, 3)
+    e = e.localCheckpoint(eager=True)  # sym + deg + intra share it
     sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
@@ -16791,9 +16717,7 @@ def corpus_source_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "source",
             F.explode(
-                F.filter(
-                    F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
-                )
+                tokenize_ws(F.col("text"))
             ).alias("w"),
         )
         .distinct()
@@ -17318,7 +17242,6 @@ def corpus_span_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in the partition-invariance battery.
     """
     from .operators.dedup import max_duplicated_spans
-    from .functions.text import tokenize_ws
 
     aug = _aug_docs(spark, sf_dir)
     spans = max_duplicated_spans(aug, "text", "doc_id", k=5, min_span=8, df_cap=50)
@@ -17865,8 +17788,6 @@ def quality_rater_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket_association_rules final-division discipline).  Scale: one
     corpus pass, one global agg row.
     """
-    from .functions.text import tokenize_ws
-
     docs = _t(spark, sf_dir)["documents"]
     stop = ["the", "a", "of", "and", "to"]
     f = docs.select(
@@ -18390,8 +18311,6 @@ def corpus_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy (the exact-dedup shuffle), one group-size equi-join back,
     one source-keyed agg; integer cells, int-ratio fractions.
     """
-    from .functions.text import tokenize_ws
-
     aug = _aug_docs(spark, sf_dir)
     src = _t(spark, sf_dir)["documents"].select(
         F.col("doc_id").alias("src_id"), "source"
@@ -18691,6 +18610,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure-Python reference unit: tests/test_minhash_calibration.py.
     """
     from .operators.dedup import (
+        _pair_overlaps,
         _shingle_rows,
         minhash_lsh_pairs,
         minhash_signatures,
@@ -18732,29 +18652,20 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    sa = sh.select(F.col("id").alias("id_a"), "shingle")
-    sb = sh.select(F.col("id").alias("id_b"), "shingle")
-    ext = (
-        cand.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("bigint").alias("ni"))
-    )
     za = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
     zb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
+    # left join: a candidate pair sharing no shingle has exact J = 0
+    ni = F.coalesce(F.col("n_inter"), F.lit(0))
     pairs = (
-        est.join(ext, ["id_a", "id_b"], "left")
+        est.join(_pair_overlaps(cand, sh), ["id_a", "id_b"], "left")
         .join(za, "id_a")
         .join(zb, "id_b")
         .select(
             "eq_slots",
             (F.col("eq_slots").cast("double") / F.lit(16.0)).alias("est_j"),
             (
-                F.coalesce(F.col("ni"), F.lit(0)).cast("double")
-                / (
-                    F.col("sz_a") + F.col("sz_b")
-                    - F.coalesce(F.col("ni"), F.lit(0))
-                ).cast("double")
+                ni.cast("double")
+                / (F.col("sz_a") + F.col("sz_b") - ni).cast("double")
             ).alias("exact_j"),
         )
     )
@@ -18957,7 +18868,6 @@ def corpus_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix ladder keeps vocab_cum strictly growing through all ten
     checkpoints.
     """
-    from .functions.text import tokenize_ws
     from .operators.prefix import global_ntile
 
     docs = _longtail_docs(spark, sf_dir)
@@ -19207,7 +19117,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.ml.feature import NGram
 
-    from .functions.text import tokenize_ws
+    from .operators.dedup import _capped, _overlaps
 
     aug = _aug_docs(spark, sf_dir)
     # tokenize ONCE for all three k-passes (the regex split is the
@@ -19235,30 +19145,15 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sh_all = shk if sh_all is None else sh_all.unionByName(shk)
     sh = sh_all.localCheckpoint(eager=True)  # stats + sizes + pair sides
-    sizes = sh.groupBy("k", "id").agg(F.count("*").alias("n"))
-    keep = (
-        sh.groupBy("k", "shingle")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= 100)
-        .select("k", "shingle")
-    )
-    shc = sh.join(keep, ["k", "shingle"])
-    a = shc.select("k", F.col("id").alias("ia"), "shingle")
-    b = shc.select("k", F.col("id").alias("ib"), "shingle")
-    inter = (
-        a.join(b, ["k", "shingle"])
-        .filter(F.col("ia") < F.col("ib"))
-        .groupBy("k", "ia", "ib")
-        .agg(F.count("*").alias("ni"))
-    )
-    za = sizes.select("k", F.col("id").alias("ia"), F.col("n").alias("na"))
-    zb = sizes.select("k", F.col("id").alias("ib"), F.col("n").alias("nb"))
+    # capped intersections over UNCAPPED set sizes (see docstring)
+    sizes = sh.groupBy("k", "id").agg(F.count("*").alias("set_size"))
     hits = (
-        inter.join(za, ["k", "ia"])
-        .join(zb, ["k", "ib"])
+        _overlaps(_capped(sh, 100, keys=("k",)), sizes, keys=("k",))
         .filter(
-            F.col("ni").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("ni")).cast("double")
+            F.col("n_inter").cast("double")
+            / (F.col("size_a") + F.col("size_b") - F.col("n_inter")).cast(
+                "double"
+            )
             >= F.lit(0.8)
         )
         .groupBy("k")
@@ -19334,8 +19229,6 @@ def corpus_pack_boundary_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     by all three L values via an explode; per-source ceil-division
     gives exact sequence counts.  Integer counts, int-ratio finals.
     """
-    from .functions.text import token_count
-
     docs = _t(spark, sf_dir)["documents"]
     sized = docs.select(
         "doc_id",
@@ -19450,8 +19343,6 @@ def corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join back, one doc-keyed agg.  Never pairwise; posting lists
     bound all work.  All-integer output.
     """
-    from .functions.text import tokenize_ws
-
     toks = _aug_docs(spark, sf_dir).select(
         "doc_id", tokenize_ws(F.col("text")).alias("tk")
     )
@@ -19550,8 +19441,6 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     |langs|), so the rank window is domain-bounded, never
     data-proportional; kmax is a broadcast 1-row scalar.
     """
-    from .functions.scalars import hex_prefix_to_long
-
     raw = (
         _t(spark, sf_dir)["documents"]
         .select("source", "lang")
@@ -19639,8 +19528,6 @@ def corpus_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFram
     n_tokens/n_docs is only an ORDER key with a source tiebreak, never
     an output value.
     """
-    from .functions.text import token_count
-
     docs = _t(spark, sf_dir)["documents"]
     per_src = docs.groupBy("source").agg(
         F.sum(token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
@@ -20071,8 +19958,6 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers except the 6-dp identical-integer drop fraction.
     """
     from .operators.prefix import running_max_exclusive
-
-    from .functions.scalars import hex_prefix_to_long
 
     ev = _t(spark, sf_dir)["events"].select(
         "event_id", F.unix_timestamp("ts").cast("bigint").alias("es")
@@ -20543,8 +20428,6 @@ def corpus_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id tiebreak.  Pure-Python reference unit guards the mirrored
     smoothing constants (tests/test_dsir_reference.py).
     """
-    from .functions.scalars import hex_prefix_to_long
-
     docs = _t(spark, sf_dir)["documents"]
     tb = (
         docs.select(
@@ -20922,9 +20805,7 @@ def search_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir)["documents"]
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "").alias(
-            "tk"
-        ),
+        tokenize_ws(F.col("text")).alias("tk"),
     ).localCheckpoint(eager=True)  # tf, dl, stats share it
     tf = (
         toks.select("doc_id", F.explode("tk").alias("term"))
@@ -21116,23 +20997,19 @@ def embedding_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame
             "j",
             F.when(
                 F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    "",
-                                    F.lit("jl:"),
-                                    F.col("i").cast("string"),
-                                    F.lit(":"),
-                                    F.col("j").cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
+                    hex_prefix_to_long(
+                        F.md5(
+                            F.concat_ws(
+                                "",
+                                F.lit("jl:"),
+                                F.col("i").cast("string"),
+                                F.lit(":"),
+                                F.col("j").cast("string"),
+                            )
                         ),
-                        16,
-                        10,
-                    ).cast("long"),
+                        1,
+                        8,
+                    ),
                     F.lit(2),
                 )
                 == 0,
@@ -21308,15 +21185,9 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-round work is frontier ⋈ edges equi-joins keyed on the node —
     8 simultaneous sources cost one traversal, not eight.
     """
-    from .operators.baskets import copurchase_pairs
     from .operators.graph import descendants_bfs
 
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 3)
     sym = (
         edges.select(F.col("u").alias("parent_uuid"), F.col("v").alias("child_uuid"))
         .unionAll(
@@ -21581,8 +21452,6 @@ def stats_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.prefix import grouped_row_number
 
     o = _t(spark, sf_dir)["orders"]
-    from .functions.scalars import hex_prefix_to_long
-
     unit = hex_prefix_to_long(
         F.md5(F.concat_ws("", F.lit("cp:"), F.col("o_orderkey").cast("string")))
     ) / F.lit(float(2**32))
@@ -21955,9 +21824,7 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex projection + one keyed agg — a pure scan at any scale.
     """
     docs = _t(spark, sf_dir)["documents"]
-    w = F.size(
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
-    ).cast("bigint")
+    w = token_count(F.col("text")).cast("bigint")
     y = F.size(
         F.expr("regexp_extract_all(lower(text), '[aeiouy]+', 0)")
     ).cast("bigint")
@@ -22402,14 +22269,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-keyed equi-joins of the edge list against club membership —
     work ∝ edges × |ks|, never pairwise over nodes.
     """
-    from .operators.baskets import copurchase_pairs
-
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 3).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 3)
     edges = edges.localCheckpoint(eager=True)  # degree + club joins share it
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -23054,8 +22914,6 @@ def split_cluster_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 fingerprint; the same audit runs unchanged on MinHash-cluster
     ids for near-dup leakage (operators/dedup.py families).
     """
-    from .functions.scalars import hex_prefix_to_long
-
     docs = _aug_docs(spark, sf_dir)
     db = (
         hex_prefix_to_long(
@@ -23697,15 +23555,9 @@ def graph_ktruss_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric wedge blow-up); support is one keyed count; rounds
     remove all light edges at once.  operators/graph.py:ktruss.
     """
-    from .operators.baskets import copurchase_pairs
     from .operators.graph import ktruss
 
-    li = _t(spark, sf_dir)["lineitem"]
-    items = li.select("l_orderkey", "l_partkey")  # r14: copurchase_pairs
-    # dedups per basket via collect_set — no distinct() exchange needed
-    edges = copurchase_pairs(items, "l_orderkey", "l_partkey", 2).select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    )
+    edges = _copurchase_edges(spark, sf_dir, 2)
     return (
         ktruss(edges, 3)
         .orderBy(F.desc("support"), F.asc("u"), F.asc("v"))

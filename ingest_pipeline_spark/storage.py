@@ -1,4 +1,4 @@
-"""Storage-layout utilities: bucketing for co-located joins, compaction.
+"""Storage-layout utilities: bucketing for co-located joins.
 
 At 100 TB the dominant cost of repeated joins on the same key (e.g.
 lineitem↔orders on orderkey, files↔datasets on parent_uuid) is the
@@ -40,10 +40,3 @@ def bucketed_join(
 def plan_has_exchange(df: DataFrame) -> bool:
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     return "Exchange" in plan
-
-
-def compact(spark: SparkSession, path: str, out_path: str, target_partitions: int) -> None:
-    """Small-files compaction: rewrite a parquet dir at a sane partition count."""
-    spark.read.parquet(path).repartition(target_partitions).write.mode(
-        "overwrite"
-    ).parquet(out_path)
