@@ -5,15 +5,11 @@ from .scalars import (  # noqa: F401
     tolerant_ts_eq,
     parse_text_list,
     expand_slice_ids,
-    is_uuid,
     hex_prefix_to_long,
-    epoch_millis_to_ts,
 )
 from .text import (  # noqa: F401
     tokenize_ws,
     token_count,
-    word_shingles,
-    char_ngrams,
     normalize_text,
     fingerprint_md5,
     quality_features,

@@ -8,11 +8,9 @@ no Python UDFs.  Mirrors the reference's scalar surface:
                                      (reference md/data_collection_types/
                                       akoya_codex_data_collection.py:14-57)
 - relative-tolerance float equality 1e-5 (same file :43-47)
-- timestamp equality within tolerance seconds (same file :58-59)
+- timestamp equality within 1 h      (same file :58-59)
 - bracketed text-list parsing        (reference misc/tools/survey.py:42-44,82-97)
 - slice-id expansion base-n1_n2 → rows (reference dags/utils.py:63,1221-1230)
-- 32-hex uuid shape check            (reference misc/tools/survey.py:800-801)
-- epoch-millis → timestamp           (reference dags/launch_checksums.py:317-319)
 """
 
 from __future__ import annotations
@@ -50,14 +48,14 @@ def parse_timestamp_multi(col: Column, formats: tuple[str, ...] = TS_FORMATS) ->
     return F.when(zone == "", naive).otherwise(F.to_utc_timestamp(naive, zone))
 
 
-def tolerant_float_eq(a: Column, b: Column, rel_tol: float = 1e-5) -> Column:
-    """Relative-tolerance float equality (|a-b| <= rel_tol * max(|a|,|b|))."""
-    return F.abs(a - b) <= F.lit(rel_tol) * F.greatest(F.abs(a), F.abs(b))
+def tolerant_float_eq(a: Column, b: Column) -> Column:
+    """Relative-tolerance float equality (|a-b| <= 1e-5 * max(|a|,|b|))."""
+    return F.abs(a - b) <= F.lit(1e-5) * F.greatest(F.abs(a), F.abs(b))
 
 
-def tolerant_ts_eq(a: Column, b: Column, tol_seconds: int = 3600) -> Column:
-    """Timestamp equality within a tolerance window (default 1 h)."""
-    return F.abs(F.unix_timestamp(a) - F.unix_timestamp(b)) <= F.lit(tol_seconds)
+def tolerant_ts_eq(a: Column, b: Column) -> Column:
+    """Timestamp equality within a 1 h tolerance window."""
+    return F.abs(F.unix_timestamp(a) - F.unix_timestamp(b)) <= F.lit(3600)
 
 
 def parse_text_list(col: Column) -> Column:
@@ -96,11 +94,6 @@ def expand_slice_ids(col: Column) -> Column:
     )
 
 
-def is_uuid(col: Column) -> Column:
-    """32-lowercase-hex uuid shape check."""
-    return col.rlike("^[0-9a-f]{32}$")
-
-
 def hex_prefix_to_long(col: Column, start: int = 1, length: int = 8) -> Column:
     """Interpret a hex-digest substring as an unsigned integer.
 
@@ -110,9 +103,9 @@ def hex_prefix_to_long(col: Column, start: int = 1, length: int = 8) -> Column:
     return F.conv(F.substring(col, start, length), 16, 10).cast("long")
 
 
-def hrw_shard(key: Column, n_shards: int, salt: str = "shard") -> Column:
+def hrw_shard(key: Column, n_shards: int) -> Column:
     """Rendezvous (highest-random-weight) shard assignment: argmax
-    over shards s of md5(salt || s || ':' || key) — the consistent-
+    over shards s of md5('shard' || s || ':' || key) — the consistent-
     hashing scheme whose shard map stays STABLE when n_shards changes
     (adding one shard moves ~1/(n+1) of keys; key % n moves ~(n-1)/n).
     Engine-portable: weights are the md5-prefix uniforms every other
@@ -124,7 +117,7 @@ def hrw_shard(key: Column, n_shards: int, salt: str = "shard") -> Column:
             (-hex_prefix_to_long(
                 F.md5(
                     F.concat_ws(
-                        "", F.lit(salt), F.lit(str(s)), F.lit(":"),
+                        "", F.lit("shard"), F.lit(str(s)), F.lit(":"),
                         key.cast("string"),
                     )
                 )
@@ -134,10 +127,6 @@ def hrw_shard(key: Column, n_shards: int, salt: str = "shard") -> Column:
         for s in range(n_shards)
     ]
     return F.element_at(F.sort_array(F.array(*cands)), 1)["s"]
-
-
-def epoch_millis_to_ts(col: Column) -> Column:
-    return F.timestamp_millis(col.cast("long"))
 
 
 def encrypt_token(col: Column, key: str, mode: str = "GCM") -> Column:

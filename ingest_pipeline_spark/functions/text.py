@@ -1,7 +1,7 @@
 """Text-analysis column functions for the LLM-data-pipeline surface.
 
-All pure Catalyst expressions (no UDFs): tokenization, n-gram
-shingling, quality features, language-ID scoring, fingerprinting.
+All pure Catalyst expressions (no UDFs): tokenization, quality
+features, language-ID scoring, fingerprinting.
 Designed so the same logic is expressible in ANSI SQL for the DuckDB
 oracle — deterministic, engine-portable (md5-based hashing only).
 """
@@ -44,32 +44,6 @@ BPE_ISH_PATTERN = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+"
 def tokenize_bpe_ish(col: Column) -> Column:
     """BPE-style pretokenizer → array<string> (JVM regex, no UDF)."""
     return F.regexp_extract_all(col, F.lit(BPE_ISH_PATTERN), 0)
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Word k-gram shingles → array<string> (space-joined, order-preserving).
-
-    Built from sequence+transform so it stays JVM-side; the DuckDB
-    oracle reproduces it with generate_series + list slicing.
-    """
-    toks = tokenize_ws(col)
-    n = F.size(toks)
-    # guard: sequence(1,0) would DESCEND in Spark; short docs → empty set
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    return F.when(
-        n >= k,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Character n-grams of the normalized text → array<string>."""
-    s = normalize_text(col)
-    ln = F.length(s)
-    idx = F.sequence(F.lit(1), ln - (n - 1))
-    return F.when(
-        ln >= n, F.transform(idx, lambda i: F.substring(s, i, n))
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def fingerprint_md5(col: Column) -> Column:

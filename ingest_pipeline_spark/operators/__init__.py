@@ -9,5 +9,5 @@ from .dedup import (  # noqa: F401
 )
 from .similarity import cosine_topk, embedding_near_dup_pairs, lsh_bucket_candidates  # noqa: F401
 from .graph import ancestors_bfs, descendants_bfs, latest_child  # noqa: F401
-from .windows import first_match_by_priority, latest_per_key, topk_with_overflow  # noqa: F401
+from .windows import first_match_by_priority  # noqa: F401
 from .sessionize import sessionize  # noqa: F401

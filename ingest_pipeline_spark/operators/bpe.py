@@ -23,8 +23,8 @@ driver-side state):
    replacement reproduces the reference trainer's greedy scan exactly
    (a freshly merged token can never re-match as the left element in
    the same round because its length grew);
-4. the histogram relation is localCheckpointed each round so lineage
-   never unrolls across rounds.
+4. the histogram relation is localCheckpointed every 4 rounds so
+   lineage never unrolls across more than 4 regex passes.
 
 Reference capability matched: none (the reference pipeline has no
 tokenizer training; LLM-extension mandate).  The learned merge table
@@ -45,6 +45,9 @@ from pyspark.sql import functions as F
 # and \x1f is whitespace-class-free but excluded by the histogram
 # guard below for safety.
 SEP = "\x1f"
+
+# merge rounds (chained regex passes) between histogram checkpoints
+_CHECKPOINT_EVERY = 4
 
 
 def _merge_pattern(a: str, b: str) -> str:
@@ -167,10 +170,7 @@ def learn_bpe_merges(
     words: DataFrame,
     n_merges: int = 50,
     min_count: int = 2,
-    checkpoint_every: int = 4,
     batch_cap: int = 16,
-    census_mode: str = "auto",
-    stats: "dict | None" = None,
 ) -> DataFrame:
     """Learn up to ``n_merges`` BPE merges from a (word, freq)
     histogram.  Returns a DataFrame (rank int, left string, right
@@ -190,47 +190,17 @@ def learn_bpe_merges(
     Driver-side state is <= batch_cap + 1 collected census rows per
     round plus the bounded merge list — never the histogram.
 
-    ``census_mode`` picks how per-round pair counts are produced
-    (r9 verdict ask #3 — the classic trainer's "touch only words
-    containing an accepted merge" bookkeeping, relationally):
-
-    * ``"full"`` — recount every histogram row each round (one explode
-      → shuffle → agg over the whole vocabulary).
-    * ``"delta"`` — count once up front, then per round recount ONLY
-      rows whose symbol string contains an accepted adjacency (a
-      codegen'd ``contains`` filter BEFORE the explode): old pairs of
-      the affected slice enter the standing census negated, new pairs
-      positive, one keyed agg folds the ±deltas.  EXACT by
-      construction — a merge cannot change pair counts of rows it does
-      not rewrite (delta == full unit in tests/test_bpe.py).  Census
-      work per round is O(affected rows), not O(vocab) — at sf0.01 the
-      200-merge long-tail run explodes 614 rows total instead of
-      34 650 (56x less census data; numbers in PLANS.md).
-    * ``"auto"`` (default) — ``delta`` when the histogram is large
-      enough that explode cost dominates the ~2 extra Spark jobs the
-      delta path issues per round, else ``full``.  At test scale
-      (hundreds of rows) full recount wins on fixed job overhead; at
-      32k-vocab scale the explode term dominates and delta wins.
+    Each round recounts every histogram row (one explode → shuffle →
+    agg over the vocabulary-sized relation).
     """
-    if census_mode not in ("auto", "full", "delta"):
-        raise ValueError(f"unknown census_mode {census_mode!r}")
     rep = words.select(
         "freq",
         F.concat(
             F.lit(SEP), F.array_join(F.split("word", ""), SEP), F.lit(SEP)
         ).alias("s"),
     ).localCheckpoint(eager=True)
-    if census_mode == "auto":
-        # rep is checkpointed: count() is an in-memory scan, one cheap
-        # job amortized over every round
-        census_mode = "delta" if rep.count() >= 50_000 else "full"
-    delta_mode = census_mode == "delta"
-    census = (
-        pair_counts(rep).localCheckpoint(eager=True) if delta_mode else None
-    )
 
     merges: list[tuple[int, str, str, int]] = []
-    rounds = 0
     pending = 0  # regex passes since the last checkpoint
     while len(merges) < n_merges:
         # the alias probe rides INSIDE the census action (r14): the old
@@ -263,7 +233,7 @@ def learn_bpe_merges(
             .withColumn("__alias", F.lit(True))
         )
         top = (
-            (census if delta_mode else pair_counts(rep))
+            pair_counts(rep)
             .withColumn("__cc", F.concat("a", "b"))
             .join(
                 symbols,
@@ -283,7 +253,6 @@ def learn_bpe_merges(
             .limit(batch_cap + 1)
             .collect()
         )
-        rounds += 1
         if not top or int(top[0]["cnt"]) < min_count:
             break
         alias_exists = {
@@ -296,51 +265,20 @@ def learn_bpe_merges(
         if not batch:
             break
         col = F.col("s")
-        touch = F.lit(False)
         for a, b, cnt in batch:
             merges.append((len(merges), a, b, cnt))
             col = F.regexp_replace(
                 col, _merge_pattern(a, b), _quote_replacement(SEP + a + b)
             )
-            touch = touch | F.col("s").contains(SEP + a + SEP + b + SEP)
-        if delta_mode:
-            # ±delta in ONE aggregation: the affected slice contributes
-            # its pre-merge pairs with negated freq and its post-merge
-            # pairs with positive freq; pair_counts sums both together.
-            # ``affected`` is a cheap contains-filter over the
-            # CHECKPOINTED rep, so the double reference below re-scans
-            # memory, not lineage.  Accepted pairs are symbol-disjoint
-            # (incl. concats), so no merge in the batch can create or
-            # destroy another's adjacencies — the pre-merge contains
-            # filter selects exactly the rows the projection rewrites.
-            affected = rep.filter(touch)
-            signed = affected.select(
-                (-F.col("freq")).alias("freq"), "s"
-            ).unionByName(affected.select("freq", col.alias("s")))
-            census = (
-                census.unionByName(pair_counts(signed))
-                .groupBy("a", "b")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-                .filter(F.col("cnt") > 0)
-                .localCheckpoint(eager=True)
-            )
-            if stats is not None:
-                stats["affected_rows"] = stats.get(
-                    "affected_rows", 0
-                ) + affected.count()
         rep = rep.withColumn("s", col)
         pending += 1
         # cadence, not per-round: one pending chained-regex pass is
         # cheap to recompute from the last checkpoint, and each eager
         # checkpoint is a full job — amortize it
-        if pending >= checkpoint_every:
+        if pending >= _CHECKPOINT_EVERY:
             rep = rep.localCheckpoint(eager=True)
             pending = 0
 
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["merges"] = len(merges)
-        stats["census_mode"] = census_mode
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count bigint"
     )

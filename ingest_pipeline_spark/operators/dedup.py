@@ -243,7 +243,6 @@ def minhash_lsh_pairs(
     id_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_k: int = 3,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH.
@@ -255,10 +254,10 @@ def minhash_lsh_pairs(
     pairs.  At 100 TB the band_key is an md5-uniform 128-bit string, so
     bucket sizes stay balanced and AQE handles any residual skew.
     """
-    # docs with < shingle_k tokens yield no shingle rows and are already
-    # absent from minhash_signatures' groupBy output — no null guard needed
+    # docs with < 3 tokens yield no 3-shingle rows and are already absent
+    # from minhash_signatures' groupBy output — no null guard needed
     if sigs is None:
-        sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
+        sigs = minhash_signatures(df, text_col, id_col, num_hashes)
         # materialize signatures before the self-join: both join sides
         # share this lineage, and without a checkpoint each side re-runs
         # the full scan→shingle→md5→16-min pipeline (the NGram
@@ -390,7 +389,7 @@ def containment_pairs(
 
 
 def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 32, shingle_k: int = 1
+    df: DataFrame, text_col: str, id_col: str, bits: int = 32
 ) -> DataFrame:
     """SimHash signature: per-bit majority vote over token hashes.
 
@@ -401,7 +400,7 @@ def simhash_signatures(
     tokens are absent from the output.  Default 32 bits keeps the
     signature in a long and the oracle SQL tractable.
     """
-    th = _shingle_rows(df, text_col, id_col, shingle_k).select(
+    th = _shingle_rows(df, text_col, id_col, 1).select(
         "id", _slot_hash(F.col("shingle"), 0).alias("h")
     )
     ones = [

@@ -134,7 +134,6 @@ def _sterilize_text(content: str, seed: str, retain_pct: float) -> str:
 
 def scrub_fastq_files(
     files: DataFrame,
-    seed: str = "s0",
     retain_pct: float = 100.0,
 ) -> DataFrame:
     """Distributed whole-file scrub over a binaryFile frame
@@ -167,14 +166,14 @@ def scrub_fastq_files(
                     n_records = len(
                         [ln for ln in text.split("\n") if ln != ""]
                     ) // 4
-                    clean = _sterilize_text(text, seed, retain_pct)
+                    clean = _sterilize_text(text, "s0", retain_pct)
                     # the audit mirrors scrub_fastqs.py:55-59: the
                     # REWRITE must be a projection (scrubbing clean
                     # output changes nothing).  Masking qualifies
                     # (A->A, 0->0, */@/+ fixed points); retention is
                     # a one-shot sampling decision, so the audit pass
                     # re-masks at retain=100 rather than re-sampling
-                    again = _sterilize_text(clean, seed, 100.0)
+                    again = _sterilize_text(clean, "s0", 100.0)
                     idem = hashlib.sha256(clean.encode()).hexdigest() == \
                         hashlib.sha256(again.encode()).hexdigest()
                     n_retained = len(

@@ -36,6 +36,9 @@ _SSSP_CKPT_EVERY = 5
 # lazy kcore peels per convergence check (r13: halving the driver
 # barriers cut the sf0.1 graph_kcore_parts 3.4 -> 2.6 s)
 _KCORE_PEELS_PER_CHECK = 2
+# Boruvka at least halves the component count per round: 20 rounds
+# cover 2^20 components
+_BORUVKA_MAX_ROUNDS = 20
 
 
 def descendants_bfs(
@@ -393,7 +396,6 @@ def boruvka_mst(
     a_col: str = "a",
     b_col: str = "b",
     w_col: str = "w",
-    max_rounds: int = 20,
 ) -> DataFrame:
     """Minimum spanning forest by Boruvka's algorithm — the classic
     distributed MST (each round EVERY component picks its cheapest
@@ -427,7 +429,7 @@ def boruvka_mst(
     )
     tree: DataFrame | None = None
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(_BORUVKA_MAX_ROUNDS):
         ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
         lab, n_live = _settle(  # both min-agg sides share it
@@ -465,7 +467,7 @@ def boruvka_mst(
         # a truncated forest returned silently would look like a valid
         # MSF — match the connected_components fixpoint discipline
         raise RuntimeError(
-            f"boruvka_mst did not converge in {max_rounds} rounds"
+            f"boruvka_mst did not converge in {_BORUVKA_MAX_ROUNDS} rounds"
         )
     if tree is None:
         return e.select("a", "b", "w").limit(0)

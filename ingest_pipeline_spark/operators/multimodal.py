@@ -364,10 +364,10 @@ def png_encode(
     channels: int,
     pixels: bytes,
     filter_type: int = 0,
-    compress_level: int = 6,
 ) -> bytes:
-    """Encode an 8-bit sample buffer as a PNG (deterministic for fixed
-    inputs and level — zlib's output is stable for a given library).
+    """Encode an 8-bit sample buffer as a PNG at zlib level 6
+    (deterministic for fixed inputs — zlib's output is stable for a
+    given library).
     channels: 1=gray, 2=gray+alpha, 3=RGB, 4=RGBA.
     """
     import struct
@@ -396,7 +396,7 @@ def png_encode(
         )
 
     ihdr = struct.pack(">IIBBBBB", width, height, 8, ct, 0, 0, 0)
-    idat = zlib.compress(bytes(raw), compress_level)
+    idat = zlib.compress(bytes(raw), 6)
     return (
         _PNG_MAGIC + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
         + chunk(b"IEND", b"")
@@ -1467,14 +1467,12 @@ def image_dhash_features(assets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def y4m_encode(
-    width: int, height: int, frames: "list[bytes]", rate: str = "25:1"
-) -> bytes:
-    """Encode mono 8-bit frames as a YUV4MPEG2 (Cmono) stream."""
+def y4m_encode(width: int, height: int, frames: "list[bytes]") -> bytes:
+    """Encode mono 8-bit frames as a 25 fps YUV4MPEG2 (Cmono) stream."""
     for i, f in enumerate(frames):
         if len(f) != width * height:
             raise ValueError(f"frame {i} length {len(f)} != {width * height}")
-    head = f"YUV4MPEG2 W{width} H{height} F{rate} Ip A1:1 Cmono\n".encode()
+    head = f"YUV4MPEG2 W{width} H{height} F25:1 Ip A1:1 Cmono\n".encode()
     return head + b"".join(b"FRAME\n" + f for f in frames)
 
 
@@ -2889,16 +2887,13 @@ def h264_ipcm_decode(data: bytes) -> tuple[int, int, "list[bytes]"]:
 
 def embeddings_to_h264(
     emb: DataFrame,
-    values_per_frame: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Render each embedding as an I_PCM H.264 stream (asset_id,
     media): the vector splits into 16x16 frames of 2x2 constant 8x8
-    tiles (the embeddings_to_avi layout — but PCM is lossless for ANY
-    content, no constant-tile trick needed)."""
-    if values_per_frame != 4:
-        raise ValueError("16x16 I_PCM frames carry exactly 4 tiles")
+    tiles, 4 values per frame (the embeddings_to_avi layout — but PCM
+    is lossless for ANY content, no constant-tile trick needed)."""
 
     def kernel(aid, vec):
         vals = _u8(vec)

@@ -10,8 +10,8 @@ SortMergeJoin with a range condition — and WITHOUT the equi-key it
 degenerates to BroadcastNestedLoop.  This operator keeps the join an
 EQUI-join at any scale by time-bucketing:
 
-- each left row explodes into the ceil(horizon/bucket)+1 buckets its
-  interval covers (2 for bucket == horizon);
+- buckets are horizon-wide, so each left row explodes into the 2
+  buckets its interval covers;
 - each right row lands in exactly ONE bucket;
 - the join key becomes (key, bucket) — a plain hash-partitioned
   equi-join Catalyst and AQE fully optimize (broadcast if small,
@@ -20,7 +20,7 @@ EQUI-join at any scale by time-bucketing:
 
 No pair is emitted twice: a right row has one bucket, and a left
 interval visits each bucket once.  Shuffle volume is bounded by the
-explode factor (2× for the default bucket = horizon), not by key
+explode factor (2×), not by key
 cardinality or interval density.
 """
 
@@ -37,7 +37,6 @@ def range_join(
     left_ts: str,
     right_ts: str,
     horizon_sec: int,
-    bucket_sec: int | None = None,
     strict_after: bool = True,
 ) -> DataFrame:
     """Pairs (left row, right row) with equal ``key`` and
@@ -47,20 +46,18 @@ def range_join(
     Column names must be disjoint apart from ``key`` (pre-alias the
     inputs); the joined key column appears once.
     """
-    if bucket_sec is None:
-        bucket_sec = horizon_sec
     overlap = set(left.columns) & set(right.columns) - {key}
     if overlap:
         raise ValueError(f"pre-alias overlapping columns: {sorted(overlap)}")
 
     l_sec = F.unix_timestamp(F.col(left_ts))
     l_buckets = F.sequence(
-        F.floor(l_sec / bucket_sec),
-        F.floor((l_sec + F.lit(horizon_sec)) / bucket_sec),
+        F.floor(l_sec / horizon_sec),
+        F.floor((l_sec + F.lit(horizon_sec)) / horizon_sec),
     )
     l_exp = left.withColumn("__bucket", F.explode(l_buckets))
     r_tag = right.withColumn(
-        "__bucket", F.floor(F.unix_timestamp(F.col(right_ts)) / bucket_sec)
+        "__bucket", F.floor(F.unix_timestamp(F.col(right_ts)) / horizon_sec)
     )
     lo = (
         F.col(right_ts) > F.col(left_ts)

@@ -48,15 +48,11 @@ def fixed_n_per_stratum(
 
 
 def hash_sample(
-    df: DataFrame,
-    id_col: str,
-    fraction: float | None = None,
-    stratum_col: str | None = None,
-    fractions: dict | None = None,
-    salt: str = "s0",
+    df: DataFrame, id_col: str, stratum_col: str, fractions: dict
 ) -> DataFrame:
     """Deterministic content-hash sampling: keep a row iff
-    md5(salt:id)'s first-8-hex-digit value / 2^32 < fraction.
+    md5('s0:' || id)'s first-8-hex-digit value / 2^32 < its stratum's
+    fraction.
 
     Unlike seeded rand() (plan- and partitioning-dependent ordering of
     the RNG stream), the decision is a pure function of the row id —
@@ -66,19 +62,13 @@ def hash_sample(
     contract).  Oracle-portable: DuckDB computes the identical md5
     arithmetic.
     """
-    from ..functions.scalars import hex_prefix_to_long
-
     u = hex_prefix_to_long(
-        F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string")))
+        F.md5(F.concat_ws(":", F.lit("s0"), F.col(id_col).cast("string")))
     ) / F.lit(float(2**32))
-    if stratum_col is not None and fractions is not None:
-        thr = F.lit(None).cast("double")
-        for k, frac in sorted(fractions.items()):
-            thr = F.when(F.col(stratum_col) == k, F.lit(float(frac))).otherwise(thr)
-        return df.filter(u < thr)
-    if fraction is None:
-        raise ValueError("need fraction or (stratum_col, fractions)")
-    return df.filter(u < F.lit(float(fraction)))
+    thr = F.lit(None).cast("double")
+    for k, frac in sorted(fractions.items()):
+        thr = F.when(F.col(stratum_col) == k, F.lit(float(frac))).otherwise(thr)
+    return df.filter(u < thr)
 
 
 def weighted_sample_aes(

@@ -820,7 +820,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Contrastive hard-negative mining: per query vector, the single
     most-similar corpus vector with a DIFFERENT label — the pair a
@@ -828,7 +827,7 @@ def hard_negatives(
 
     Same plan discipline as cosine_topk (norms precomputed per row
     before the broadcast pair join, score rounded BEFORE ranking,
-    full tiebreak), plus the label-inequality predicate inside the
+    full tiebreak; 6 dp), plus the label-inequality predicate inside the
     join so same-label pairs never materialize.  Returns
     (query_id, query_label, negative_id, negative_label, cosine_sim).
     """
@@ -848,7 +847,7 @@ def hard_negatives(
     )
     sim = F.round(
         _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-        round_decimals,
+        6,
     )
     scored = (
         c.join(
@@ -1524,7 +1523,6 @@ def pq_codebook_lloyd(
     m: int = 8,
     n_codes: int = 16,
     iters: int = 3,
-    tag: str = "pqlloyd",
     _xg: DataFrame | None = None,
     _d_sub: int | None = None,
 ) -> DataFrame:
@@ -1558,7 +1556,7 @@ def pq_codebook_lloyd(
         xg = _xg_micro(df, vec_col, id_col, d_sub, m).localCheckpoint(
             eager=True
         )
-    cb = _det_cb_rows(spark, m, n_codes, d_sub, tag)
+    cb = _det_cb_rows(spark, m, n_codes, d_sub, "pqlloyd")
     for _t in range(iters):
         code = _argmin_code_udf(cb, m, n_codes, d_sub)
         census = {
@@ -1639,7 +1637,6 @@ def late_interaction_maxsim(
     corpus_tokens: DataFrame,
     query_tokens: DataFrame,
     k: int = 3,
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Late-interaction (ColBERT-style) MaxSim retrieval: score(q, d) =
     sum over q's token vectors of the MAX cosine against any of d's
@@ -1686,7 +1683,7 @@ def late_interaction_maxsim(
         F.round(
             dot_seq(F.col("q_vec"), F.col("c_vec"))
             / (F.col("q_nrm") * F.col("c_nrm")),
-            round_decimals,
+            6,
         ),
     )
     per_qt = pair.groupBy("query_id", "doc_id", "qtok").agg(

@@ -51,9 +51,8 @@ def explode_salt_join(
     small: DataFrame,
     on: str,
     salt_buckets: int = 32,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join a salted big side against a replicated small side.
+    """Inner-join a salted big side against a replicated small side.
 
     big gets a random salt per row; small is exploded to every salt
     value; the join key becomes (on, salt) — the hot key's rows spread
@@ -63,4 +62,4 @@ def explode_salt_join(
     s = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
     )
-    return b.join(s, [on, "__salt"], how).drop("__salt")
+    return b.join(s, [on, "__salt"], "inner").drop("__salt")

@@ -51,13 +51,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "SignatureRule",
     "SIGNATURE_RULES",
-    "signature_rules_df",
     "classify_tsv_kind",
     "collect_tsvs",
 ]
@@ -77,15 +76,6 @@ SIGNATURE_RULES: tuple[SignatureRule, ...] = (
     SignatureRule("contributors", ("affiliation", "first_name", "last_name"), 1),
     SignatureRule("antibodies", ("channel_id", "antibody_name", "rr_id"), 2),
 )
-
-
-def signature_rules_df(
-    spark: SparkSession, rules: tuple[SignatureRule, ...] = SIGNATURE_RULES
-) -> DataFrame:
-    return spark.createDataFrame(
-        [(r.kind, list(r.required), r.priority) for r in rules],
-        "kind string, required array<string>, priority int",
-    )
 
 
 def classify_tsv_kind(

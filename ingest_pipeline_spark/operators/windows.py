@@ -3,12 +3,8 @@
 - first_match_by_priority: highest-priority match wins per item
   (reference md/metadata_extract.py:24-47 collection matching;
   dags/utils.py:185-203 ordered manifest rules).
-- latest_per_key: latest-revision per parent
-  (reference dags/extra_utils.py:35-48).
-- topk_with_overflow: top-N per group, plus an overflow count —
-  "20 ids then '…N more'" (reference dags/email_providers.py:477-489).
 
-All use row_number over an explicitly ordered window with a full
+Uses row_number over an explicitly ordered window with a full
 tiebreaker — deterministic under parallelism, never first() without
 order.
 """
@@ -33,31 +29,3 @@ def first_match_by_priority(
         .drop("__rn")
     )
 
-
-def latest_per_key(
-    df: DataFrame, key_cols: list[str], ts_col: str, tiebreak_col: str
-) -> DataFrame:
-    """Most-recent row per key, deterministic tiebreak."""
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(ts_col), F.asc(tiebreak_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def topk_with_overflow(
-    df: DataFrame, group_cols: list[str], order_col: str, id_col: str, k: int = 20
-) -> DataFrame:
-    """Top-k rows per group + total group count (for "…N more" notes).
-
-    One window shuffle serves both row_number and the group count.
-    """
-    w = Window.partitionBy(*group_cols).orderBy(F.desc(order_col), F.asc(id_col))
-    w_all = Window.partitionBy(*group_cols)
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("group_total", F.count("*").over(w_all))
-        .filter(F.col("rn") <= k)
-        .withColumn("n_overflow", F.col("group_total") - F.least(F.col("group_total"), F.lit(k)))
-    )

@@ -11,7 +11,7 @@ standard data-layout trick for multi-predicate scans over immutable
 
 The whole computation is Catalyst expressions (shifts/masks — codegen,
 no UDF); the only driver-side work is one tiny min/max stats action to
-normalize each column into [0, 2^bits).  tests/test_zorder.py measures
+normalize each column into [0, 2^16).  tests/test_zorder.py measures
 the actual effect: for a 2-D box predicate, the fraction of files
 whose min/max straddle the box drops sharply vs a single-column sort.
 """
@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Morton-key bits per column; 3 columns fill a signed long
+_BITS = 16
 
 def _normalize(col: Column, lo: float, hi: float, bits: int) -> Column:
     """Scale a numeric column into [0, 2^bits) as a long (clamped)."""
@@ -49,27 +51,26 @@ def zorder_key(normalized: list[Column], bits: int) -> Column:
     return reduce(lambda a, b: a.bitwiseOR(b), parts).alias("__z")
 
 
-def cluster_by_zorder(
-    df: DataFrame, cols: list[str], n_files: int, bits: int = 16
-) -> DataFrame:
+def cluster_by_zorder(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """Return ``df`` re-laid-out along the Morton curve of ``cols``:
     ``n_files`` range partitions, Morton-sorted within each.  Write the
     result with ``.write.parquet`` to materialize the clustered files.
 
     For timestamps pass a numeric projection (e.g. unix seconds).
-    ``bits`` x len(cols) must stay <= 63 (long key).
+    16 bits x len(cols) must stay <= 63 (long key).
     """
-    if bits * len(cols) > 63:
-        raise ValueError("bits * len(cols) must fit in a signed long")
+    if _BITS * len(cols) > 63:
+        raise ValueError("16 bits * len(cols) must fit in a signed long")
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"lo_{c}") for c in cols],
         *[F.max(F.col(c).cast("double")).alias(f"hi_{c}") for c in cols],
     ).collect()[0]
     normalized = [
-        _normalize(F.col(c), stats[f"lo_{c}"], stats[f"hi_{c}"], bits) for c in cols
+        _normalize(F.col(c), stats[f"lo_{c}"], stats[f"hi_{c}"], _BITS)
+        for c in cols
     ]
     return (
-        df.withColumn("__z", zorder_key(normalized, bits))
+        df.withColumn("__z", zorder_key(normalized, _BITS))
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")

@@ -7138,6 +7138,35 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _quality_logit(docs: DataFrame, *keep: str) -> tuple[DataFrame, Column]:
+    """The corpus quality classifier: ``keep`` columns plus its text
+    features for every document with at least one token and one
+    character, and the 6-dp logit over those features.  The logit is a
+    Column, not a ``zscore`` column, so a caller that uses it twice
+    computes it in one projection (a second Project holding it is not
+    collapsed by the optimizer)."""
+    n_chars = F.length("text")
+    n_tok = token_count(F.col("text"))
+    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
+    n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
+    f = docs.select(
+        *keep,
+        n_chars.alias("n_chars"),
+        n_tok.alias("n_tok"),
+        n_digit.alias("n_digit"),
+        n_punct.alias("n_punct"),
+    ).filter((F.col("n_tok") > 0) & (F.col("n_chars") > 0))
+    z = F.round(
+        F.lit(-3.0)
+        + F.lit(0.55) * (F.col("n_chars").cast("double") / F.col("n_tok").cast("double"))
+        - F.lit(6.0) * (F.col("n_digit").cast("double") / F.col("n_chars").cast("double"))
+        - F.lit(2.5) * (F.col("n_punct").cast("double") / F.col("n_chars").cast("double"))
+        + F.lit(0.002) * F.col("n_tok").cast("double"),
+        6,
+    )
+    return f, z
+
+
 @register(
     "quality_logistic_score",
     """
@@ -7190,31 +7219,8 @@ def quality_logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast row for many features), zero Python, zero shuffle before
     the tiny census agg.
     """
-    docs = _t(spark, sf_dir)["documents"]
-    n_chars = F.length("text")
-    n_tok = token_count(F.col("text"))
-    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
-    f = docs.select(
-        "doc_id",
-        "source",
-        n_chars.alias("n_chars"),
-        n_tok.alias("n_tok"),
-        n_digit.alias("n_digit"),
-        n_punct.alias("n_punct"),
-    ).filter((F.col("n_tok") > 0) & (F.col("n_chars") > 0))
-    z = F.round(
-        F.lit(-3.0)
-        + F.lit(0.55) * (F.col("n_chars").cast("double") / F.col("n_tok").cast("double"))
-        - F.lit(6.0) * (F.col("n_digit").cast("double") / F.col("n_chars").cast("double"))
-        - F.lit(2.5) * (F.col("n_punct").cast("double") / F.col("n_chars").cast("double"))
-        + F.lit(0.002) * F.col("n_tok").cast("double"),
-        6,
-    )
-    lab = f.select(
-        "source",
-        z.alias("zscore"),
-    ).select(
+    f, z = _quality_logit(_t(spark, sf_dir)["documents"], "source")
+    lab = f.select("source", z.alias("zscore")).select(
         "source",
         F.when(F.col("zscore") >= 1.5, "high")
         .when(F.col("zscore") >= 0.0, "medium")
@@ -7759,6 +7765,16 @@ def _copurchase_edges(
     items = _t(spark, sf_dir)["lineitem"].select("l_orderkey", "l_partkey")
     return copurchase_pairs(items, "l_orderkey", "l_partkey", min_support).select(
         F.col("part_a").alias("u"), F.col("part_b").alias("v")
+    )
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, d): undirected degree of every endpoint of (u, v) edges."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
     )
 
 
@@ -12704,12 +12720,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _copurchase_edges(spark, sf_dir, 3)
     edges = edges.localCheckpoint(eager=True)  # deg + moment stage share it
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _degrees(edges)
     da = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     db = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     mom = (
@@ -12883,12 +12894,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _copurchase_edges(spark, sf_dir, 3)
     edges = edges.localCheckpoint(eager=True)  # deg/adj/anti share it
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _degrees(edges)
     adj = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     n1 = adj.select(F.col("u").alias("w"), F.col("v").alias("a"))
     n2 = adj.select(F.col("u").alias("w"), F.col("v").alias("b"))
@@ -12988,26 +12994,7 @@ def quality_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.prefix import running_sum
 
-    docs = _t(spark, sf_dir)["documents"]
-    n_chars = F.length("text")
-    n_tok = token_count(F.col("text"))
-    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
-    f = docs.select(
-        "lang",
-        n_chars.alias("n_chars"),
-        n_tok.alias("n_tok"),
-        n_digit.alias("n_digit"),
-        n_punct.alias("n_punct"),
-    ).filter((F.col("n_tok") > 0) & (F.col("n_chars") > 0))
-    z = F.round(
-        F.lit(-3.0)
-        + F.lit(0.55) * (F.col("n_chars").cast("double") / F.col("n_tok").cast("double"))
-        - F.lit(6.0) * (F.col("n_digit").cast("double") / F.col("n_chars").cast("double"))
-        - F.lit(2.5) * (F.col("n_punct").cast("double") / F.col("n_chars").cast("double"))
-        + F.lit(0.002) * F.col("n_tok").cast("double"),
-        6,
-    )
+    f, z = _quality_logit(_t(spark, sf_dir)["documents"], "lang")
     scored = f.select(
         z.alias("zscore"),
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)).alias("y"),
@@ -14885,29 +14872,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing the score in column arithmetic + one tiny keyed agg —
     bins are a DOMAIN-bounded relation (score range / 0.5).
     """
-    docs = _t(spark, sf_dir)["documents"]
-    n_chars = F.length("text")
-    n_tok = token_count(F.col("text"))
-    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    n_punct = F.length(F.regexp_replace("text", "[^.,!?;:]", ""))
-    f = docs.select(
-        "lang",
-        n_chars.alias("n_chars"),
-        n_tok.alias("n_tok"),
-        n_digit.alias("n_digit"),
-        n_punct.alias("n_punct"),
-    ).filter((F.col("n_tok") > 0) & (F.col("n_chars") > 0))
-    z = F.round(
-        F.lit(-3.0)
-        + F.lit(0.55)
-        * (F.col("n_chars").cast("double") / F.col("n_tok").cast("double"))
-        - F.lit(6.0)
-        * (F.col("n_digit").cast("double") / F.col("n_chars").cast("double"))
-        - F.lit(2.5)
-        * (F.col("n_punct").cast("double") / F.col("n_chars").cast("double"))
-        + F.lit(0.002) * F.col("n_tok").cast("double"),
-        6,
-    )
+    f, z = _quality_logit(_t(spark, sf_dir)["documents"], "lang")
     b = f.select(
         F.floor(z * 2).cast("bigint").alias("bin"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
@@ -16263,12 +16228,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     m = e.agg(F.count("*").alias("m_edges"))
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _degrees(e)
     comm = (
         labels.join(deg, "node")
         .groupBy(F.col("lab").alias("community"))
@@ -22271,12 +22231,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _copurchase_edges(spark, sf_dir, 3)
     edges = edges.localCheckpoint(eager=True)  # degree + club joins share it
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
+    deg = _degrees(edges)
     ks = spark.createDataFrame([(2,), (4,), (8,)], "k int")
     club = deg.join(F.broadcast(ks), deg.d > F.col("k")).select("k", "node")
     club = club.localCheckpoint(eager=True)  # nk + both edge joins share it

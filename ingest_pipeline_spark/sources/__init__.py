@@ -1,2 +1,2 @@
-from .readers import read_tsv, read_csv, read_json_docs, read_yaml_docs, read_text_logs, listing  # noqa: F401
+from .readers import read_tsv, read_json_docs, read_yaml_docs, listing  # noqa: F401
 from .sinks import write_tsv, write_json  # noqa: F401

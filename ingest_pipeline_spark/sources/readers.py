@@ -1,4 +1,4 @@
-"""Sources: TSV/CSV/JSON/YAML/text/binary + distributed directory listing.
+"""Sources: TSV/JSON/YAML/Excel/fixed-width/binary + distributed directory listing.
 
 Mirrors the reference's source surface (SURVEY §2.1 S1-S13):
 
@@ -9,8 +9,6 @@ Mirrors the reference's source surface (SURVEY §2.1 S1-S13):
 - YAML documents (md/data_file_types/yaml_metadata_file.py) — parsed
   driver-side per file (YAML is a control-file format here, never a
   100 TB data format), then parallelized.
-- gz text logs (dags/generate_usage_report.py:70-151) —
-  spark.read.text handles the codec natively.
 - Recursive listing (dags/utils.py:717-767): one row per file with
   rel_path/size/mtime.  Local implementation walks on the driver and
   parallelizes; at cluster scale swap in the binaryFile source which
@@ -35,15 +33,8 @@ def read_tsv(spark: SparkSession, path: str, schema: T.StructType | None = None)
     return reader.csv(path)
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.csv(path)
-
-
-def read_json_docs(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:
-    return spark.read.option("multiLine", multiline).json(path)
+def read_json_docs(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.option("multiLine", True).json(path)
 
 
 def read_yaml_docs(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -67,9 +58,7 @@ def read_yaml_docs(spark: SparkSession, paths: list[str]) -> DataFrame:
     return spark.read.json(spark.sparkContext.parallelize(rows))
 
 
-def read_yaml_sidecars(
-    spark: SparkSession, path_glob: str, recursive: bool = False
-) -> DataFrame:
+def read_yaml_sidecars(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed YAML ingest: many small sidecar files → one DataFrame
     of ``(path, doc_json)`` rows.
 
@@ -88,10 +77,9 @@ def read_yaml_sidecars(
     except ImportError as exc:  # pragma: no cover
         raise NotImplementedError("pyyaml not installed in this environment") from exc
 
-    reader = spark.read.format("binaryFile")
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    bin_df = reader.load(path_glob).select("path", "content")
+    bin_df = spark.read.format("binaryFile").load(path_glob).select(
+        "path", "content"
+    )
 
     def parse(batches):
         import json
@@ -123,11 +111,6 @@ def read_yaml_sidecars(
     return bin_df.mapInPandas(
         parse, "path string, doc_json string, error string"
     )
-
-
-def read_text_logs(spark: SparkSession, glob: str) -> DataFrame:
-    """Line-wise log source; .gz transparently decompressed."""
-    return spark.read.text(glob)
 
 
 # ---------------------------------------------------------------------------
@@ -239,16 +222,17 @@ def xlsx_parse(
     return sheet_name, rows
 
 
-def read_excel(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFrame:
+def read_excel(spark: SparkSession, path: str) -> DataFrame:
     """Excel source (survey input shape, reference tools/survey.py:836).
 
     Single-workbook convenience: parses via the pure-stdlib xlsx codec
     (no engine dependency), first row = header, untyped string columns
-    (cast on demand — same contract as read_tsv).  For directories of
-    many workbooks use read_excel_sidecars (distributed).
+    (cast on demand — same contract as read_tsv); reads the first
+    sheet.  For directories of many workbooks use read_excel_sidecars
+    (distributed).
     """
     with open(path, "rb") as f:
-        _name, rows = xlsx_parse(f.read(), sheet=sheet)
+        _name, rows = xlsx_parse(f.read())
     if not rows:
         return spark.createDataFrame([], T.StructType([]))
     header = [str(h) if h is not None else f"c{i}" for i, h in enumerate(rows[0])]
@@ -262,29 +246,24 @@ def read_excel(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFram
     return spark.createDataFrame(body, schema)
 
 
-def read_excel_sidecars(
-    spark: SparkSession,
-    path_glob: str,
-    sheet: str | int = 0,
-    recursive: bool = False,
-) -> DataFrame:
+def read_excel_sidecars(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed Excel ingest: many small .xlsx workbooks → one
     DataFrame of ``(path, sheet, row_idx, row_json, error)`` rows.
 
     Same shape as read_yaml_sidecars: a ``binaryFile`` scan
     distributes listing + reads across executors (no driver loop), and
     ``mapInPandas`` parses each Arrow batch with the pure-stdlib xlsx
-    codec above — no Excel engine needed.  Row 0 of each sheet is the
-    header; every data row comes back as canonical JSON (sorted keys,
-    header→string-value) so downstream ``from_json``/get_json_object
-    stays JVM-side.  Corrupt/non-xlsx files degrade to one
-    (error, row_idx=-1) row each instead of failing the job — the
-    extractor discipline of operators/extractors.py.
+    codec above — no Excel engine needed.  Each workbook's first sheet
+    is read; its row 0 is the header; every data row comes back as
+    canonical JSON (sorted keys, header→string-value) so downstream
+    ``from_json``/get_json_object stays JVM-side.  Corrupt/non-xlsx
+    files degrade to one (error, row_idx=-1) row each instead of
+    failing the job — the extractor discipline of
+    operators/extractors.py.
     """
-    reader = spark.read.format("binaryFile")
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    bin_df = reader.load(path_glob).select("path", "content")
+    bin_df = spark.read.format("binaryFile").load(path_glob).select(
+        "path", "content"
+    )
 
     def parse(batches):
         import json
@@ -295,7 +274,7 @@ def read_excel_sidecars(
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 try:
-                    sheet_name, cells = xlsx_parse(bytes(content), sheet=sheet)
+                    sheet_name, cells = xlsx_parse(bytes(content))
                 except Exception as e:  # noqa: BLE001 — see below
                     # realistic corrupt workbooks raise beyond ValueError:
                     # malformed XML inside a valid zip → ET.ParseError,
@@ -370,11 +349,7 @@ def tsv_delimiter_report(df: DataFrame) -> dict:
     }
 
 
-def listing(
-    spark: SparkSession,
-    root: str,
-    num_partitions: int = 32,
-) -> DataFrame:
+def listing(spark: SparkSession, root: str) -> DataFrame:
     """Distributed-shaped recursive listing → files DataFrame.
 
     Schema: (rel_path, abs_path, size, mtime).  Top-level dirs are
@@ -426,7 +401,7 @@ def listing(
                             mtime_utc(st),
                         )
 
-    rdd = spark.sparkContext.parallelize(seeds, max(1, min(num_partitions, len(seeds) or 1)))
+    rdd = spark.sparkContext.parallelize(seeds, max(1, min(32, len(seeds))))
     return spark.createDataFrame(rdd.mapPartitions(walk), schema)
 
 
@@ -565,16 +540,15 @@ def read_fixed_width(
     path_glob: str,
     colspecs: "list[tuple[str, int, int]]",
     skip_header: bool = False,
-    trim: bool = True,
 ) -> DataFrame:
     """Fixed-width text source: (name, start, width) column specs over
     line-oriented files — the mainframe/ERP export format that still
     feeds enterprise ingestion (COBOL copybook layouts).  start is
     0-based.  Pure JVM substring slicing (one codegen'd projection per
-    line, no UDF, no per-line Python); short lines yield NULL for
-    columns that begin past the line end and the available prefix
-    otherwise — padded exports stay rectangular, truncated tails
-    degrade per-column instead of failing the scan.
+    line, no UDF, no per-line Python); values are trimmed; short
+    lines yield NULL for columns that begin past the line end and the
+    available prefix otherwise — padded exports stay rectangular,
+    truncated tails degrade per-column instead of failing the scan.
 
     Scale: spark.read.text splits by file/line like any text source;
     the projection is row-local.  skip_header drops the first line of
@@ -623,9 +597,7 @@ def read_fixed_width(
     for name, start, width in colspecs:
         c = F.substring(F.col("value"), start + 1, width)
         c = F.when(F.length("value") > start, c).otherwise(F.lit(None))
-        if trim:
-            c = F.trim(c)
-        cols.append(c.alias(name))
+        cols.append(F.trim(c).alias(name))
     return lines.select(*cols)
 
 

@@ -11,19 +11,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_tsv(df: DataFrame, path: str, single_file: bool = False, mode: str = "overwrite") -> None:
+def write_tsv(df: DataFrame, path: str, single_file: bool = False) -> None:
     out = df.coalesce(1) if single_file else df
     (
-        out.write.mode(mode)
+        out.write.mode("overwrite")
         .option("sep", "\t")
         .option("header", True)
         .csv(path)
     )
 
 
-def write_json(df: DataFrame, path: str, single_file: bool = False, mode: str = "overwrite") -> None:
+def write_json(df: DataFrame, path: str, single_file: bool = False) -> None:
     out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).json(path)
+    out.write.mode("overwrite").json(path)
 
 
 def pipe_partitions(df: DataFrame, command: list[str], to_line=None):
@@ -60,20 +60,17 @@ def rest_batch_sink(
     post_fn,
     batch_size: int = 100,
     num_partitions: int | None = None,
-    rate_limit_sleep_s: float = 0.0,
 ) -> None:
     """Batched remote-mutation sink (SURVEY §2.1 S17, §2.6 O4).
 
     The reference POSTs uuid/checksum records in fixed blocks with
     throttling (dags/launch_checksums.py:34,192-226 RECS_PER_BLOCK=100;
     tools/split_and_create.py:509-522 10-per-30 s).  Spark restatement:
-    foreachPartition with client-side chunking + optional sleep;
+    foreachPartition with client-side chunking;
     ``post_fn(list_of_row_dicts)`` is the transport (HTTP client in
     production, a recorder in tests).  Partition count bounds request
     concurrency — the cluster-wide analog of the reference's "lanes".
     """
-    import time as _time
-
     if num_partitions is not None:
         df = df.repartition(num_partitions)
 
@@ -84,8 +81,6 @@ def rest_batch_sink(
             if len(buf) >= batch_size:
                 post_fn(buf)
                 buf = []
-                if rate_limit_sleep_s:
-                    _time.sleep(rate_limit_sleep_s)
         if buf:
             post_fn(buf)
 
@@ -270,26 +265,24 @@ def xlsx_write_bytes(sheet_title: str, rows: "list[list]") -> bytes:
 def write_orc(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     single_file: bool = False,
 ) -> None:
     """Columnar ORC sink (Spark-native).  Distributed write — one file
     per partition; repartition upstream to control file count, or pass
     single_file for report-sized outputs (the write_tsv contract)."""
     out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).orc(path)
+    out.write.mode("overwrite").orc(path)
 
 
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
 ) -> None:
     """Parquet sink with optional hive-style partitioning — the layout
     that turns downstream equality filters on the partition columns
     into directory pruning (no file even opened)."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
@@ -299,7 +292,6 @@ def compact_parquet(
     spark,
     path: str,
     target_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
 ) -> dict:
     """Small-files compaction — the table-maintenance op every
     streaming/incremental parquet sink eventually needs (each
@@ -319,7 +311,7 @@ def compact_parquet(
     old-or-new swap needs the symlink-pointer scheme of
     streaming/events.py:cdc_upsert_sink or a transactional table
     format.)  No-op (returns counts unchanged) when the directory
-    already has fewer than ``min_files`` files.  Returns
+    holds at most one file.  Returns
     {"files_before", "files_after", "bytes"}.
     """
     import glob as _glob
@@ -345,7 +337,7 @@ def compact_parquet(
         if os.path.isfile(f)
     ]
     total = sum(os.path.getsize(f) for f in part_files)
-    if len(part_files) < min_files:
+    if len(part_files) < 2:
         return {
             "files_before": len(part_files),
             "files_after": len(part_files),

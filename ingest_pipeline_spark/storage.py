@@ -22,19 +22,18 @@ def write_bucketed(
     bucket_col: str,
     num_buckets: int = 32,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    writer = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
     if sort_col is not None:
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table)
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, on: str
 ) -> DataFrame:
-    """Join two same-bucketed tables — no shuffle on either side."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    """Inner-join two same-bucketed tables — no shuffle on either side."""
+    return spark.table(left_table).join(spark.table(right_table), on)
 
 
 def plan_has_exchange(df: DataFrame) -> bool:

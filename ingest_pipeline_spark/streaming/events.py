@@ -59,16 +59,15 @@ def dedup_stream(
     events: DataFrame,
     id_col: str = "event_id",
     ts_col: str = "ts",
-    watermark: str = "2 hours",
 ) -> DataFrame:
-    """Exactly-once intake: drop duplicate ids within the watermark.
+    """Exactly-once intake: drop duplicate ids within a 2-hour watermark.
 
     Mirrors the reference's run_id dedup (T2).  State is bounded by the
     watermark — at 100 TB/day the dedup state holds only the horizon.
     """
     src = events
     if src.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
+        src = src.withWatermark(ts_col, "2 hours")
         return src.dropDuplicatesWithinWatermark([id_col])
     return src.dropDuplicates([id_col])
 
@@ -127,7 +126,6 @@ def stateful_user_counts(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Custom stateful operator: running per-key event count + value sum.
 
@@ -135,7 +133,7 @@ def stateful_user_counts(
     per-entity state machine hooks (T6): state persists across
     micro-batches, keyed by entity; each batch emits the updated
     running totals for keys seen in that batch.  State is bounded by
-    the watermark at scale.  On a batch DataFrame, falls back to the
+    a 1-day watermark at scale.  On a batch DataFrame, falls back to the
     equivalent groupBy (same output contract).
     """
     import pandas as pd
@@ -175,7 +173,7 @@ def stateful_user_counts(
         )
 
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(ts_col, "1 day")
         .groupBy(key_col)
         .applyInPandasWithState(
             update, out_schema, state_schema, "update", "NoTimeout"

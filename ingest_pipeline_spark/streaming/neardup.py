@@ -108,22 +108,16 @@ def banded_signature_rows(
     ).select(F.col("id").alias("doc_id"), "band", "band_key")
 
 
-def _banded_rows_batch(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_k: int,
-) -> DataFrame:
-    """(doc_id, band, band_key) via the batch signature pipeline."""
+def _banded_rows_batch(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, band, band_key) via the batch signature pipeline:
+    16 hashes of word 3-shingles in 4 bands."""
     from ..operators.dedup import banded_key_array, minhash_signatures
 
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
+    sigs = minhash_signatures(df, text_col, id_col, 16, 3)
     return sigs.select(
         F.col("id").alias("doc_id"),
         F.posexplode(
-            banded_key_array(lambda i: F.col("signature")[i], num_hashes, bands)
+            banded_key_array(lambda i: F.col("signature")[i], 16, 4)
         ).alias("band", "band_key"),
     )
 
@@ -138,11 +132,9 @@ def neardup_dedup_stream(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
-    """Emit (band, band_key, doc_id, dup_of) collision records.
+    """Emit (band, band_key, doc_id, dup_of) collision records: MinHash
+    with 16 hashes of word 3-shingles in 4 bands.
 
     Streaming: applyInPandasWithState keyed by bucket; state = the
     bucket's earliest doc id; every later arrival in that bucket is
@@ -159,7 +151,7 @@ def neardup_dedup_stream(
         # in tests/test_stream_neardup.py; the projection form measured
         # ~20× slower at sf0.1 and exists only because streaming can't
         # aggregate before its stateful stage)
-        rows = _banded_rows_batch(docs, text_col, id_col, num_hashes, bands, shingle_k)
+        rows = _banded_rows_batch(docs, text_col, id_col)
         # both the reps agg and the join-back consume rows; checkpoint so
         # the scan→shingle→md5 pipeline runs once (the NGram UDF defeats
         # exchange-reuse canonicalization — same issue as minhash_lsh_pairs)
@@ -171,9 +163,7 @@ def neardup_dedup_stream(
             .select("band", "band_key", "doc_id", F.col("rep").alias("dup_of"))
         )
 
-    rows = banded_signature_rows(
-        docs, text_col, id_col, num_hashes, bands, shingle_k
-    )
+    rows = banded_signature_rows(docs, text_col, id_col, 16, 4, 3)
 
     import pandas as pd
 

@@ -128,7 +128,6 @@ def watch_terminal_once(
     spark: SparkSession,
     status_dir: str,
     status_schema,
-    query_name: str = "terminal_watch",
     **kwargs,
 ) -> DataFrame:
     """Drive the terminal-state watch over a status directory to
@@ -138,11 +137,11 @@ def watch_terminal_once(
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
-        .queryName(query_name)
+        .queryName("terminal_watch")
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return spark.sql("SELECT * FROM terminal_watch")

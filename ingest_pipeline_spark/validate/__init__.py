@@ -1,1 +1,1 @@
-from .checks import Check, CheckRegistry, route_violations, run_checks, violation_counts  # noqa: F401
+from .checks import Check, CheckRegistry, route_violations, violation_counts  # noqa: F401

@@ -52,17 +52,6 @@ def violation_counts(df: DataFrame, checks: list[Check]) -> DataFrame:
     )
 
 
-def run_checks(df: DataFrame, checks: list[Check], fail_on_violation: bool = False) -> DataFrame:
-    """Evaluate checks; optionally raise if any violation exists."""
-    report = violation_counts(df, checks)
-    if fail_on_violation:
-        bad = report.filter(F.col("n_violations") > 0).collect()
-        if bad:
-            details = ", ".join(f"{r.check_name}={r.n_violations}" for r in bad)
-            raise ValueError(f"DQ check failures: {details}")
-    return report
-
-
 class CheckRegistry:
     """Named check-factory registry (SURVEY §2.11 F3, §2.9 V5).
 
