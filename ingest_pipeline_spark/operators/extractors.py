@@ -2,9 +2,10 @@
 
 Restates the reference's md/data_file_types/ extractors — each a
 ``collect_metadata() -> dict`` over one file — as ONE distributed
-operator: ``spark.read.format("binaryFile")`` rows go through a
-single ``mapInPandas`` pass that dispatches on filename category and
-parses the bytes with pure-stdlib parsers:
+operator: ``spark.read.format("binaryFile")`` rows go through one
+kernel on the per-file harness (``multimodal._per_asset``) that
+dispatches on filename category and parses the bytes with
+pure-stdlib parsers:
 
 - OME_TIFF  — TIFF IFD walk + OME-XML Pixels attributes
   (reference md/data_file_types/ome_tiff_metadata_file.py:13-17,
@@ -38,11 +39,10 @@ import json
 import re
 import struct
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from .multimodal import _per_asset
 
 # first-match dispatch table (reference FILE_TYPE_MATCHERS shape,
 # airflow/dags/utils.py:90-100, with md/data_file_types category names)
@@ -371,36 +371,26 @@ def extract_format_metadata(files: DataFrame) -> DataFrame:
 
     ``files`` needs (path, content) — the binaryFile source's schema.
     Output: typed hot columns + canonical sorted-key JSON metadata.
+    Runs through the one per-file harness (multimodal._per_asset);
+    extract_one already turns a parse error into ``meta_json``, so the
+    harness's key and error columns are projected away.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("file_name", "category", "width", "height", "n_items", "meta_json")}
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                name = str(path).rsplit("/", 1)[-1]
-                r = extract_one(name, bytes(buf) if buf is not None else b"")
-                meta = r["meta"]
-                out["file_name"].append(name)
-                out["category"].append(r["category"])
-                out["width"].append(meta.get("SizeX", meta.get("max count of pixels x")))
-                out["height"].append(meta.get("SizeY", meta.get("max count of pixels y")))
-                n = meta.get("n_reads", meta.get("spectrum count"))
-                if n is None:
-                    n = meta.get("n_words", meta.get("n_images"))
-                out["n_items"].append(n)
-                out["meta_json"].append(
-                    json.dumps(meta, sort_keys=True, separators=(",", ":"))
-                )
-            yield pd.DataFrame(
-                {
-                    "file_name": out["file_name"],
-                    "category": out["category"],
-                    "width": pd.array(out["width"], dtype="Int32"),
-                    "height": pd.array(out["height"], dtype="Int32"),
-                    "n_items": pd.array(out["n_items"], dtype="Int64"),
-                    "meta_json": out["meta_json"],
-                }
-            )
+    def kernel(path, data):
+        name = str(path).rsplit("/", 1)[-1]
+        r = extract_one(name, data)
+        meta = r["meta"]
+        n = meta.get("n_reads", meta.get("spectrum count"))
+        if n is None:
+            n = meta.get("n_words", meta.get("n_images"))
+        return [(
+            name,
+            r["category"],
+            meta.get("SizeX", meta.get("max count of pixels x")),
+            meta.get("SizeY", meta.get("max count of pixels y")),
+            n,
+            json.dumps(meta, sort_keys=True, separators=(",", ":")),
+        )]
 
-    return files.select("path", "content").mapInPandas(run, OUT_SCHEMA)
+    out = _per_asset(files, "path", "content", OUT_SCHEMA, kernel)
+    return out.drop("path", "decode_ok", "error")

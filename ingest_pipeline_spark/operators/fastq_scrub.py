@@ -24,26 +24,25 @@ Spark restatement:
   promise none of that.
 - The file-level flow (``scrub_fastq_files``) reads a directory of
   .fastq/.fastq.gz via binaryFile, decompresses + parses + masks +
-  reassembles per file inside ONE Arrow-batched mapInPandas pass
-  (file-parallel, the multimodal codec shape), and bakes the
-  reference's idempotency audit into every row: scrub(scrub(x)) is
-  recomputed and sha256-compared executor-side, so a non-idempotent
-  rewrite can never be written back.  Writing stays with the caller
-  (sinks), keeping the operator a pure DataFrame transform.
+  reassembles per file as one kernel on the per-file harness
+  (``multimodal._per_asset``: file-parallel, the codec shape), and
+  bakes the reference's idempotency audit into every row:
+  scrub(scrub(x)) is recomputed and compared executor-side, and a
+  non-idempotent rewrite becomes an error row, so it can never be
+  written back.  Writing stays with the caller (sinks), keeping the
+  operator a pure DataFrame transform.
 """
 
 from __future__ import annotations
 
 import gzip
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import hex_prefix_to_long
+from .multimodal import _per_asset
 
 
 def sterilize_line(col: Column, preserve_specials: bool) -> Column:
@@ -140,60 +139,37 @@ def scrub_fastq_files(
     (``spark.read.format('binaryFile').load(dir)``): per file —
     gunzip when the path ends in .gz, sterilize every record, gzip
     back if the input was gzipped, and run the reference's
-    idempotency audit (scrub of the scrubbed text, sha256-compared)
+    idempotency audit (scrub of the scrubbed text must change nothing)
     executor-side.  Emits (path, n_records, n_retained, sha_clean,
-    idempotent, clean BINARY, error); a file that fails to parse or
-    the audit becomes an error row, never a partial rewrite.  One
-    mapInPandas pass, file-parallel — the 100 TB shape is many files,
-    not big tasks (cf. scrub_fastqs.py's thread pool, :114-121)."""
-    out_schema = (
-        "path string, n_records int, n_retained int, sha_clean string, "
-        "idempotent boolean, clean binary, error string"
+    clean BINARY, decode_ok, error); a file that fails to parse or
+    the audit becomes the harness's error row (multimodal._per_asset),
+    never a partial rewrite.  One mapInPandas pass, file-parallel — the
+    100 TB shape is many files, not big tasks (cf. scrub_fastqs.py's
+    thread pool, :114-121)."""
+
+    def kernel(path, raw):
+        gz = str(path).endswith(".gz")
+        text = (gzip.decompress(raw) if gz else raw).decode("ascii")
+        n_records = len([ln for ln in text.split("\n") if ln != ""]) // 4
+        clean = _sterilize_text(text, "s0", retain_pct)
+        # the audit mirrors scrub_fastqs.py:55-59: the REWRITE must be a
+        # projection (scrubbing clean output changes nothing).  Masking
+        # qualifies (A->A, 0->0, */@/+ fixed points); retention is a
+        # one-shot sampling decision, so the audit pass re-masks at
+        # retain=100 rather than re-sampling
+        if _sterilize_text(clean, "s0", 100.0) != clean:
+            raise ValueError("idempotency audit failed")
+        n_retained = len([ln for ln in clean.split("\n") if ln != ""]) // 4
+        body = clean.encode("ascii")
+        return [(
+            n_records,
+            n_retained,
+            hashlib.sha256(body).hexdigest(),
+            gzip.compress(body, 9, mtime=0) if gz else body,
+        )]
+
+    return _per_asset(
+        files, "path", "content",
+        "n_records int, n_retained int, sha_clean string, clean binary",
+        kernel,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["path", "n_records", "n_retained", "sha_clean",
-                "idempotent", "clean", "error"]
-        for pdf in batches:
-            rows = []
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                try:
-                    raw = bytes(buf)
-                    gz = str(path).endswith(".gz")
-                    text = (gzip.decompress(raw) if gz else raw).decode(
-                        "ascii"
-                    )
-                    n_records = len(
-                        [ln for ln in text.split("\n") if ln != ""]
-                    ) // 4
-                    clean = _sterilize_text(text, "s0", retain_pct)
-                    # the audit mirrors scrub_fastqs.py:55-59: the
-                    # REWRITE must be a projection (scrubbing clean
-                    # output changes nothing).  Masking qualifies
-                    # (A->A, 0->0, */@/+ fixed points); retention is
-                    # a one-shot sampling decision, so the audit pass
-                    # re-masks at retain=100 rather than re-sampling
-                    again = _sterilize_text(clean, "s0", 100.0)
-                    idem = hashlib.sha256(clean.encode()).hexdigest() == \
-                        hashlib.sha256(again.encode()).hexdigest()
-                    n_retained = len(
-                        [ln for ln in clean.split("\n") if ln != ""]
-                    ) // 4
-                    payload = gzip.compress(
-                        clean.encode("ascii"), 9, mtime=0
-                    ) if gz else clean.encode("ascii")
-                    if not idem:
-                        rows.append((path, n_records, n_retained, None,
-                                     False, None, "idempotency audit failed"))
-                    else:
-                        rows.append((
-                            path, n_records, n_retained,
-                            hashlib.sha256(clean.encode()).hexdigest(),
-                            True, bytearray(payload), None,
-                        ))
-                except Exception as e:  # corrupt-tolerant, like codecs
-                    rows.append((path, None, None, None, None, None,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path", "content").mapInPandas(run, out_schema)

@@ -79,48 +79,6 @@ def sniff_mime(col: Column) -> Column:
     return expr
 
 
-def documents_as_assets(docs: DataFrame) -> DataFrame:
-    """Adapter: treat the documents table's text as opaque media bytes.
-
-    Lets the multimodal plumbing run against the synthetic corpus —
-    the binary column is real (utf-8 encoded), only the decoder is fake.
-    """
-    return docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.lit("text").alias("modality"),
-        F.encode(F.col("text"), "utf-8").alias("media"),
-        F.named_struct(
-            F.lit("mime"), F.lit("text/plain"),
-            F.lit("width"), F.lit(None).cast("int"),
-            F.lit("height"), F.lit(None).cast("int"),
-            F.lit("sample_rate"), F.lit(None).cast("int"),
-            F.lit("duration_s"), F.lit(None).cast("double"),
-            F.lit("n_frames"), F.lit(None).cast("int"),
-        ).alias("meta"),
-    )
-
-
-def decode_media(assets: DataFrame) -> DataFrame:  # pragma: no cover - guard
-    """Catch-all decoder entry point for formats outside every codec
-    implemented here — NOT IMPLEMENTED by design.
-
-    PNG, strip-TIFF (incl. LZW/Deflate), baseline JPEG, and Gray8 CZI
-    are decoded for REAL by ``decode_image_features`` (pure-stdlib
-    codecs below), WAV by ``decode_audio_features``, Y4M by
-    ``video_frame_stats``, MJPEG AVI by ``video_mjpeg_frame_stats``,
-    and H.264 I_PCM by ``video_h264_frame_stats``; a production build
-    plugs Pillow/librosa/pyav into the same mapInPandas harness for
-    full-profile H.264/H.265 and exotic formats.
-    """
-    raise NotImplementedError(
-        "CZI/compressed-video codecs are not available in this "
-        "environment; use decode_image_features (real PNG + TIFF + "
-        "baseline JPEG + CZI), decode_audio_features (real WAV), "
-        "video_frame_stats (real Y4M), video_mjpeg_frame_stats, or "
-        "video_h264_frame_stats (I_PCM subset)"
-    )
-
-
 def frame_sample_plan(assets: DataFrame, every_n: int = 10) -> DataFrame:
     """Frame-sampling plumbing: explode a frame index per video asset.
 
@@ -418,11 +376,12 @@ def _image_decode_dispatch(b: bytes) -> tuple[int, int, int, int, bytes]:
 
 
 # ---------------------------------------------------------------------------
-# The one Arrow harness every codec stage runs through.  A decoder is a
-# kernel ``fn(media bytes) -> list of feature tuples`` handed to
-# _per_asset; an encoder is a kernel ``fn(id, vector) -> media bytes``
-# handed to _encode_each.  A new codec feature is a new kernel, never a
-# new mapInPandas loop (tests/test_query_corpus_decode_ok.py pins this).
+# The one Arrow harness every per-file Python stage runs through.  A
+# decoder or parser is a kernel ``fn(key, payload bytes) -> list of
+# feature tuples`` handed to _per_asset; an encoder is a kernel
+# ``fn(id, vector) -> media bytes`` handed to _encode_each.  A new codec
+# feature or binaryFile parser is a new kernel, never a new mapInPandas
+# loop (tests/test_query_corpus_decode_ok.py pins this).
 # ---------------------------------------------------------------------------
 
 
@@ -454,37 +413,46 @@ def _spread(df: DataFrame, id_col: str, heavy: bool = False) -> DataFrame:
 
 
 def _per_asset(
-    assets: DataFrame, features: str, fn: Callable[[bytes], list]
+    df: DataFrame,
+    key: str,
+    payload: str,
+    features: str,
+    fn: Callable[[object, bytes], list],
 ) -> DataFrame:
-    """Run a decode kernel over (asset_id, media) in one mapInPandas.
+    """Run a per-file kernel over (key, payload) in one mapInPandas.
 
-    ``features`` is the DDL of the kernel's columns (flat: no comma
-    inside a type); the stage emits ``asset_id long, <features>,
-    decode_ok boolean, error string``.  ``fn(media bytes)`` returns one
-    feature tuple per output row (zero rows is allowed); NULL media
-    decodes as b"".  A kernel ValueError degrades to ONE row
-    (asset_id, NULL per feature, false, message[:200]) instead of
-    failing the job — the corrupt-input-tolerant extractor discipline
-    of operators/extractors.py.  Column names and the error-row width
-    come from ``features`` alone, so they cannot drift apart."""
+    Every Python stage that turns one file's bytes into rows runs
+    here: the codec stages of this module, the binaryFile readers of
+    sources/readers.py, the format-metadata battery and the FASTQ
+    scrub.  ``features`` is the DDL of the kernel's columns (flat: no
+    comma inside a type); the stage emits ``<key>, <features>,
+    decode_ok boolean, error string``, the key typed as in ``df``.
+    ``fn(key, payload bytes)`` returns one feature tuple per output row
+    (zero rows is allowed); a NULL payload reads as b"".  Any kernel
+    exception degrades to ONE row (key, NULL per feature, false,
+    message[:200]) instead of failing the job: a 100 TB scan must
+    survive corrupt files, and this is the only place that row is
+    built.  Column names and the error-row width come from
+    ``features`` alone, so they cannot drift apart."""
     feats = [c.split()[0] for c in features.split(",")]
-    cols = ["asset_id", *feats, "decode_ok", "error"]
+    cols = [key, *feats, "decode_ok", "error"]
     nulls = (None,) * len(feats)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for aid, buf in zip(pdf["asset_id"], pdf["media"]):
+            for k, buf in zip(pdf[key], pdf[payload]):
                 try:
-                    out = fn(bytes(buf) if buf is not None else b"")
-                except ValueError as e:
-                    rows.append((aid, *nulls, False, str(e)[:200]))
+                    out = fn(k, bytes(buf) if buf is not None else b"")
+                except Exception as e:  # noqa: BLE001 — one bad file
+                    rows.append((k, *nulls, False, str(e)[:200]))
                     continue
-                rows.extend((aid, *t, True, None) for t in out)
+                rows.extend((k, *t, True, None) for t in out)
             yield pd.DataFrame(rows, columns=cols)
 
-    return assets.select("asset_id", "media").mapInPandas(
-        extract, f"asset_id long, {features}, decode_ok boolean, error string"
+    key_type = df.schema[key].dataType.simpleString()
+    return df.select(key, payload).mapInPandas(
+        extract, f"{key} {key_type}, {features}, decode_ok boolean, error string"
     )
 
 
@@ -548,12 +516,12 @@ def decode_image_features(assets: DataFrame) -> DataFrame:
     oracles never touch float hazards.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, ch, bd, px = _image_decode_dispatch(b)
         return [(w, h, ch, bd, sum(px), min(px), max(px))]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "width int, height int, channels int, bit_depth int, px_sum long, "
         "px_min int, px_max int",
         kernel,
@@ -678,7 +646,7 @@ def decode_audio_features(assets: DataFrame) -> DataFrame:
     rows — decode_image_features' audio twin.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         ch, rate, bits, sm = wav_decode(b)
         return [(
             ch, rate, bits, len(sm), len(sm) * 1000 // (rate * ch),
@@ -687,7 +655,7 @@ def decode_audio_features(assets: DataFrame) -> DataFrame:
         )]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "channels int, sample_rate int, bit_depth int, n_samples long, "
         "duration_ms long, amp_sum long, amp_sumsq long, amp_min int, "
         "amp_max int",
@@ -699,7 +667,7 @@ def decode_audio_features(assets: DataFrame) -> DataFrame:
 # Pure-stdlib TIFF strip codec — the reference's OWN flagship imaging family
 # (reference md/data_file_types/ome_tiff_metadata_file.py:12-17 and
 # scn_tiff_metadata_file.py:13-17 wrap tifffile; extractors.py already walks
-# the IFD for metadata).  This closes the decode_media gap for TIFF PIXEL
+# the IFD for metadata).  This decodes TIFF PIXEL
 # data: classic TIFF, grayscale 8-bit, strip-organized (StripOffsets /
 # StripByteCounts / RowsPerStrip honored), Compression 1 (none),
 # 5 (LZW, TIFF early-change variant) and 8/32946 (Deflate), Predictor 1
@@ -1344,7 +1312,7 @@ def audio_autocorr_features(
     Same mapInPandas/error-row discipline as decode_audio_features.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         _ch, _rate, _bits, sm = wav_decode(b)
         acs = [
             sum(sm[i] * sm[i + L] for i in range(len(sm) - L)) for L in lags
@@ -1352,7 +1320,7 @@ def audio_autocorr_features(
         return [(len(sm), sum(s * s for s in sm), *acs)]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         ", ".join(["n_samples long", "energy long",
                    *(f"ac{L} long" for L in lags)]),
         kernel,
@@ -1370,7 +1338,7 @@ def audio_zero_crossing_features(assets: DataFrame) -> DataFrame:
     mapInPandas/error-row discipline as decode_audio_features.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         _ch, _rate, _bits, sm = wav_decode(b)
         signs = [s >= 0 for s in sm]
         zc = sum(1 for i in range(len(signs) - 1) if signs[i] != signs[i + 1])
@@ -1381,7 +1349,8 @@ def audio_zero_crossing_features(assets: DataFrame) -> DataFrame:
         return [(len(sm), zc, longest)]
 
     return _per_asset(
-        assets, "n_samples long, n_zero_crossings long, longest_run long",
+        assets, "asset_id", "media",
+        "n_samples long, n_zero_crossings long, longest_run long",
         kernel,
     )
 
@@ -1397,7 +1366,7 @@ def tile_pixel_stats(assets: DataFrame, tile: int = 4) -> DataFrame:
     decode_ok, error); edge tiles are clamped to image bounds.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, ch, _bd, px = _image_decode_dispatch(b)
         if ch != 1:
             raise ValueError(f"tile stats need grayscale, got {ch}ch")
@@ -1413,7 +1382,7 @@ def tile_pixel_stats(assets: DataFrame, tile: int = 4) -> DataFrame:
         return out
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "tile_x int, tile_y int, n_px int, px_sum long, px_min int, "
         "px_max int",
         kernel,
@@ -1432,7 +1401,7 @@ def image_dhash_features(assets: DataFrame) -> DataFrame:
     Emits (asset_id, width, height, n_bits, dhash).
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, ch, _bd, px = _image_decode_dispatch(b)
         if ch != 1:
             raise ValueError(f"dhash needs grayscale, got {ch}ch")
@@ -1451,7 +1420,8 @@ def image_dhash_features(assets: DataFrame) -> DataFrame:
         return [(w, h, (w - 1) * h, hv)]
 
     return _per_asset(
-        assets, "width int, height int, n_bits int, dhash long", kernel
+        assets, "asset_id", "media",
+        "width int, height int, n_bits int, dhash long", kernel,
     )
 
 
@@ -1460,8 +1430,8 @@ def image_dhash_features(assets: DataFrame) -> DataFrame:
 # uncompressed interchange format every video toolchain speaks (mjpegtools,
 # ffmpeg -f yuv4mpeg2): a text stream header + per-frame FRAME markers over
 # raw planar pixel data.  Mono (Cmono) colorspace keeps the plumbing exact
-# and integer; compressed codecs (H.264 etc.) remain behind decode_media's
-# documented stub.  This closes the video modality the way the TIFF codec
+# and integer; compressed video has its own codecs below (MJPEG AVI,
+# H.264 I_PCM).  This closes the video modality the way the TIFF codec
 # closed imaging: frame_sample_plan's geometry can now run against REAL
 # decoded frames.
 # ---------------------------------------------------------------------------
@@ -1552,7 +1522,7 @@ def video_shot_cuts(assets: DataFrame, threshold: int = 1400) -> DataFrame:
     the first cut, -1 when the clip has none).
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         _w, _h, _rate, frames = y4m_decode(b)
         sads = [
             sum(abs(a - c) for a, c in zip(frames[k - 1], frames[k]))
@@ -1563,7 +1533,8 @@ def video_shot_cuts(assets: DataFrame, threshold: int = 1400) -> DataFrame:
                  cuts[0] if cuts else -1)]
 
     return _per_asset(
-        assets, "n_frames int, max_sad long, n_cuts int, first_cut int",
+        assets, "asset_id", "media",
+        "n_frames int, max_sad long, n_cuts int, first_cut int",
         kernel,
     )
 
@@ -1577,7 +1548,7 @@ def video_frame_stats(assets: DataFrame, every_n: int = 1) -> DataFrame:
     decode_ok, error); corrupt media degrades to error rows.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         _w, _h, _rate, frames = y4m_decode(b)
         out = []
         for k in range(0, len(frames), every_n):
@@ -1586,7 +1557,7 @@ def video_frame_stats(assets: DataFrame, every_n: int = 1) -> DataFrame:
         return out
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "frame_idx int, n_px int, luma_sum long, luma_min int, luma_max int",
         kernel,
     )
@@ -1594,8 +1565,8 @@ def video_frame_stats(assets: DataFrame, every_n: int = 1) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Pure-stdlib baseline JPEG (JFIF) codec — REAL huffman + DCT decode (r9
-# verdict ask #2; closes the last real-world image format behind
-# decode_media: the reference's imaging domain probes OME/SCN TIFF and JFIF
+# verdict ask #2; closes the last real-world image format left
+# undecoded: the reference's imaging domain probes OME/SCN TIFF and JFIF
 # thumbnails, reference md/data_file_types/ome_tiff_metadata_file.py:12-17).
 # Decoder: baseline sequential (SOF0), 8-bit, 1 or 3 components, arbitrary
 # per-component sampling factors (replication upsampling), DRI/RSTn restart
@@ -2219,7 +2190,7 @@ def image_downsample_area(assets: DataFrame, factor: int = 2) -> DataFrame:
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, ch, _bd, px = _image_decode_dispatch(b)
         if ch != 1:
             raise ValueError(f"downsample needs grayscale, got {ch}ch")
@@ -2236,7 +2207,10 @@ def image_downsample_area(assets: DataFrame, factor: int = 2) -> DataFrame:
                 out.append((sum(vals) + len(vals) // 2) // len(vals))
         return [(ow, oh, out)]
 
-    return _per_asset(assets, "out_w int, out_h int, pixels array<int>", kernel)
+    return _per_asset(
+        assets, "asset_id", "media", "out_w int, out_h int, pixels array<int>",
+        kernel,
+    )
 
 
 def audio_silence_features(
@@ -2256,7 +2230,7 @@ def audio_silence_features(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
 
-    def kernel(b):
+    def kernel(_key, b):
         _rate, _ch, _bits, samples = wav_decode(b)
         if not samples:
             raise ValueError("empty clip")
@@ -2274,7 +2248,7 @@ def audio_silence_features(
         return [(n_w, n_silent, longest, total)]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "n_windows int, n_silent int, longest_silent_run int, "
         "energy_sum long",
         kernel,
@@ -2295,7 +2269,7 @@ def image_sobel_features(assets: DataFrame, edge_threshold: int = 0) -> DataFram
     Grayscale only; corrupt media degrades to error rows.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, ch, _bd, px = _image_decode_dispatch(b)
         if ch != 1:
             raise ValueError(f"sobel needs grayscale, got {ch}ch")
@@ -2316,7 +2290,7 @@ def image_sobel_features(assets: DataFrame, edge_threshold: int = 0) -> DataFram
         return [(n_int, energy, mx, n_edge)]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "n_interior int, grad_energy long, max_grad2 long, n_edge_px int",
         kernel,
     )
@@ -2337,7 +2311,7 @@ def image_otsu_features(assets: DataFrame) -> DataFrame:
     decode_ok, error) — mapInPandas row-local, one pass.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, ch, _bd, px = _image_decode_dispatch(b)
         if ch != 1:
             raise ValueError(f"otsu needs grayscale, got {ch}ch")
@@ -2367,7 +2341,7 @@ def image_otsu_features(assets: DataFrame) -> DataFrame:
         return [best[1:]]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "otsu_t int, bg_count int, fg_count int, num2 long, den long",
         kernel,
     )
@@ -2386,7 +2360,7 @@ def video_keyframes(assets: DataFrame, threshold: int = 1400) -> DataFrame:
     key_vnum, decode_ok, error) — mapInPandas row-local, one pass.
     """
 
-    def kernel(b):
+    def kernel(_key, b):
         _w, _h, _rate, frames = y4m_decode(b)
         if not frames:
             raise ValueError("empty clip")
@@ -2411,7 +2385,7 @@ def video_keyframes(assets: DataFrame, threshold: int = 1400) -> DataFrame:
         return [(sid, *shots[sid]) for sid in sorted(shots)]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "shot_id int, start_frame int, n_frames int, keyframe_idx int, "
         "key_vnum long",
         kernel,
@@ -2565,13 +2539,13 @@ def _frame_stats(assets: DataFrame, decode: Callable) -> DataFrame:
     """(frame_idx, width, height, px_sum, px_min, px_max) per frame of a
     ``decode(bytes) -> (width, height, frames)`` video codec."""
 
-    def kernel(b):
+    def kernel(_key, b):
         w, h, frames = decode(b)
         return [(i, w, h, sum(px), min(px), max(px))
                 for i, px in enumerate(frames)]
 
     return _per_asset(
-        assets,
+        assets, "asset_id", "media",
         "frame_idx int, width int, height int, px_sum long, px_min int, "
         "px_max int",
         kernel,

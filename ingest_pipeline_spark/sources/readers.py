@@ -18,11 +18,14 @@ Mirrors the reference's source surface (SURVEY §2.1 S1-S13):
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.multimodal import _per_asset
 
 
 def read_tsv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -44,8 +47,6 @@ def read_yaml_docs(spark: SparkSession, paths: list[str]) -> DataFrame:
     (rslt.yml, test.yml); never bulk data — driver-side parse + Spark
     JSON inference is the right scale tradeoff.
     """
-    import json
-
     try:
         import yaml  # type: ignore
     except ImportError as exc:  # pragma: no cover
@@ -60,57 +61,30 @@ def read_yaml_docs(spark: SparkSession, paths: list[str]) -> DataFrame:
 
 def read_yaml_sidecars(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed YAML ingest: many small sidecar files → one DataFrame
-    of ``(path, doc_json)`` rows.
+    of ``(path, doc_json, decode_ok, error)`` rows.
 
     The reference carries one ``rslt.yml`` per dataset
     (dags/scan_and_begin_processing.py:77-81); at 100× scale that is
     millions of sidecars, which must be read where they live: a
     ``binaryFile`` scan distributes both the listing and the reads
-    across executors (driver never loops over files), and
-    ``mapInPandas`` parses each Arrow batch of (path, bytes) with
+    across executors (driver never loops over files), and the per-file
+    harness (``multimodal._per_asset``) parses each file with
     ``yaml.safe_load``.  Docs come back as canonical JSON strings
     (sorted keys) so downstream schema inference / ``from_json`` stays
-    engine-portable.  Import-gated on pyyaml like read_yaml_docs.
+    engine-portable.  A corrupt sidecar (YAMLError, UnicodeDecodeError,
+    unserializable anchors) becomes the harness's error row.
+    Import-gated on pyyaml like read_yaml_docs.
     """
     try:
-        import yaml  # noqa: F401
+        import yaml
     except ImportError as exc:  # pragma: no cover
         raise NotImplementedError("pyyaml not installed in this environment") from exc
 
-    bin_df = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
-    )
+    def kernel(_path, data):
+        return [(json.dumps(yaml.safe_load(data.decode("utf-8")), sort_keys=True),)]
 
-    def parse(batches):
-        import json
-
-        import pandas as pd
-        import yaml as _yaml
-
-        for pdf in batches:
-            docs, errs = [], []
-            for content in pdf["content"]:
-                try:
-                    docs.append(
-                        json.dumps(
-                            _yaml.safe_load(bytes(content).decode("utf-8")),
-                            sort_keys=True,
-                        )
-                    )
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — one bad sidecar
-                    # (YAMLError, UnicodeDecodeError, unserializable
-                    # anchors) must degrade to an error row, never fail
-                    # the million-file scan (the xlsx-reader ADVICE class)
-                    docs.append(None)
-                    errs.append(f"{type(e).__name__}: {e}"[:200])
-            yield pd.DataFrame(
-                {"path": pdf["path"], "doc_json": docs, "error": errs}
-            )
-
-    return bin_df.mapInPandas(
-        parse, "path string, doc_json string, error string"
-    )
+    bin_df = spark.read.format("binaryFile").load(path_glob)
+    return _per_asset(bin_df, "path", "content", "doc_json string", kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -248,67 +222,43 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
 
 def read_excel_sidecars(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed Excel ingest: many small .xlsx workbooks → one
-    DataFrame of ``(path, sheet, row_idx, row_json, error)`` rows.
+    DataFrame of ``(path, sheet, row_idx, row_json, decode_ok, error)``
+    rows.
 
     Same shape as read_yaml_sidecars: a ``binaryFile`` scan
     distributes listing + reads across executors (no driver loop), and
-    ``mapInPandas`` parses each Arrow batch with the pure-stdlib xlsx
+    the per-file harness parses each workbook with the pure-stdlib xlsx
     codec above — no Excel engine needed.  Each workbook's first sheet
     is read; its row 0 is the header; every data row comes back as
     canonical JSON (sorted keys, header→string-value) so downstream
-    ``from_json``/get_json_object stays JVM-side.  Corrupt/non-xlsx
-    files degrade to one (error, row_idx=-1) row each instead of
-    failing the job — the extractor discipline of
-    operators/extractors.py.
+    ``from_json``/get_json_object stays JVM-side.  A corrupt workbook
+    raises beyond ValueError (ET.ParseError, KeyError, IndexError,
+    zlib.error) and becomes the harness's error row (row_idx NULL).
     """
-    bin_df = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
-    )
 
-    def parse(batches):
-        import json
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    sheet_name, cells = xlsx_parse(bytes(content))
-                except Exception as e:  # noqa: BLE001 — see below
-                    # realistic corrupt workbooks raise beyond ValueError:
-                    # malformed XML inside a valid zip → ET.ParseError,
-                    # missing workbook rel Id → KeyError, out-of-range
-                    # sharedStrings index → IndexError, truncated zip →
-                    # zlib.error/struct.error.  One bad file must degrade
-                    # to an error row, never fail the distributed job.
-                    rows.append(
-                        (path, None, -1, None,
-                         f"{type(e).__name__}: {e}"[:200])
-                    )
-                    continue
-                if not cells:
-                    continue
-                header = [
-                    str(h) if h is not None else f"c{i}"
-                    for i, h in enumerate(cells[0])
-                ]
-                for i, r in enumerate(cells[1:]):
-                    doc = {
-                        header[j]: (r[j] if j < len(r) else None)
-                        for j in range(len(header))
-                    }
-                    rows.append(
-                        (path, sheet_name, i, json.dumps(doc, sort_keys=True), None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "sheet", "row_idx", "row_json", "error"],
+    def kernel(_path, data):
+        sheet_name, cells = xlsx_parse(data)
+        if not cells:
+            return []
+        header = [
+            str(h) if h is not None else f"c{i}" for i, h in enumerate(cells[0])
+        ]
+        return [
+            (
+                sheet_name,
+                i,
+                json.dumps(
+                    {h: (r[j] if j < len(r) else None) for j, h in enumerate(header)},
+                    sort_keys=True,
+                ),
             )
+            for i, r in enumerate(cells[1:])
+        ]
 
-    return bin_df.mapInPandas(
-        parse,
-        "path string, sheet string, row_idx int, row_json string, error string",
+    bin_df = spark.read.format("binaryFile").load(path_glob)
+    return _per_asset(
+        bin_df, "path", "content", "sheet string, row_idx int, row_json string",
+        kernel,
     )
 
 
@@ -385,21 +335,22 @@ def listing(spark: SparkSession, root: str) -> DataFrame:
                 st.st_mtime, tz=datetime.timezone.utc
             )
 
-        for p in paths:
+        def files(p):
             if os.path.isfile(p):
-                st = os.stat(p)
-                yield (os.path.relpath(p, root), p, st.st_size, mtime_utc(st))
-            else:
-                for dirpath, _dirnames, filenames in os.walk(p):
-                    for fn in sorted(filenames):
-                        fp = os.path.join(dirpath, fn)
-                        st = os.stat(fp)
-                        yield (
-                            os.path.relpath(fp, root),
-                            fp,
-                            st.st_size,
-                            mtime_utc(st),
-                        )
+                yield p
+            for dirpath, _dirnames, filenames in os.walk(p):
+                for fn in sorted(filenames):
+                    yield os.path.join(dirpath, fn)
+
+        for p in paths:
+            for fp in files(p):
+                # a file can vanish, or be a dangling symlink, between
+                # the walk and the stat: skip it, never fail the task
+                try:
+                    st = os.stat(fp)
+                except OSError:
+                    continue
+                yield (os.path.relpath(fp, root), fp, st.st_size, mtime_utc(st))
 
     rdd = spark.sparkContext.parallelize(seeds, max(1, min(32, len(seeds))))
     return spark.createDataFrame(rdd.mapPartitions(walk), schema)
@@ -610,69 +561,47 @@ def read_parquet_footer_stats(spark: SparkSession, path_glob: str) -> DataFrame:
     row-group stats actually written, and at 100 TB you audit that
     from the footers, never by reading data pages.
 
-    Shape: binaryFile scan -> mapInPandas; each task parses its files'
-    footers with pyarrow (Thrift metadata only — data pages are never
-    decoded; the binaryFile source does ship whole files locally, so a
-    production variant would range-request the footer tail, same
-    per-task output).  Verified against DuckDB's independent
+    Shape: binaryFile scan -> the per-file harness; each task parses
+    its files' footers with pyarrow (Thrift metadata only — data pages
+    are never decoded; the binaryFile source does ship whole files
+    locally, so a production variant would range-request the footer
+    tail, same per-task output).  A file pyarrow cannot read becomes
+    the harness's error row.  Verified against DuckDB's independent
     parquet_metadata() reader in tests/test_parquet_footer.py.
     """
-    from typing import Iterator
+    import io
 
-    import pandas as pd
+    import pyarrow.parquet as pq
 
-    out_schema = (
-        "file string, row_group int, column_name string, "
-        "n_rows bigint, num_values bigint, null_count bigint, "
-        "compressed_bytes bigint, uncompressed_bytes bigint, "
-        "has_minmax_stats boolean"
+    def kernel(_file, data):
+        md = pq.ParquetFile(io.BytesIO(data)).metadata
+        rows = []
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for ci in range(g.num_columns):
+                c = g.column(ci)
+                st = c.statistics
+                rows.append((
+                    rg,
+                    c.path_in_schema,
+                    g.num_rows,
+                    c.num_values,
+                    int(st.null_count)
+                    if st is not None and st.has_null_count
+                    else -1,
+                    c.total_compressed_size,
+                    c.total_uncompressed_size,
+                    bool(st is not None and st.has_min_max),
+                ))
+        return rows
+
+    files = spark.read.format("binaryFile").load(path_glob).select(
+        F.col("path").alias("file"), "content"
     )
-
-    def parse(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import io
-
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    md = pq.ParquetFile(io.BytesIO(content)).metadata
-                    for rg in range(md.num_row_groups):
-                        g = md.row_group(rg)
-                        for ci in range(g.num_columns):
-                            c = g.column(ci)
-                            st = c.statistics
-                            rows.append(
-                                (
-                                    path,
-                                    rg,
-                                    c.path_in_schema,
-                                    g.num_rows,
-                                    c.num_values,
-                                    int(st.null_count)
-                                    if st is not None and st.has_null_count
-                                    else -1,
-                                    c.total_compressed_size,
-                                    c.total_uncompressed_size,
-                                    bool(st is not None and st.has_min_max),
-                                )
-                            )
-                except Exception as e:  # degrade per file, never fail the scan
-                    rows.append((path, -1, f"__error: {e}"[:200], -1, -1,
-                                 -1, -1, -1, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file", "row_group", "column_name", "n_rows",
-                    "num_values", "null_count", "compressed_bytes",
-                    "uncompressed_bytes", "has_minmax_stats",
-                ],
-            )
-
-    return (
-        spark.read.format("binaryFile")
-        .load(path_glob)
-        .select("path", "content")
-        .mapInPandas(parse, out_schema)
+    return _per_asset(
+        files, "file", "content",
+        "row_group int, column_name string, n_rows bigint, "
+        "num_values bigint, null_count bigint, compressed_bytes bigint, "
+        "uncompressed_bytes bigint, has_minmax_stats boolean",
+        kernel,
     )

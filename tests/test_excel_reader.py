@@ -197,7 +197,7 @@ def test_read_excel_sidecars_distributed(spark, tmp_path):
     docs = {json.loads(r.row_json)["dataset"]: json.loads(r.row_json) for r in good}
     assert docs["ds4"] == {"dataset": "ds4", "n_files": "40"}
     assert all(r.sheet == "Sheet1" and r.row_idx == 0 for r in good)
-    assert bad[0].row_idx == -1 and "zip" in bad[0].error
+    assert bad[0].row_idx is None and "zip" in bad[0].error
 
     # the scan is the distributed binaryFile source, parse is Arrow-batched
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001

@@ -131,7 +131,7 @@ def test_scrub_fastq_files_roundtrip(spark, tmp_path, gz):
     }
     good, bad = out[name], out["broken.fastq.gz"]
     assert bad.error is not None and bad.clean is None
-    assert good.error is None and good.idempotent
+    assert good.error is None and good.decode_ok
     assert good.n_records == 2 and good.n_retained == 2
     payload = bytes(good.clean)
     text = (gzip.decompress(payload) if gz else payload).decode()
@@ -152,4 +152,4 @@ def test_scrub_retention_counts(spark, tmp_path):
     ).collect()[0]
     assert r.n_records == 100
     assert 0 < r.n_retained < 100
-    assert r.idempotent
+    assert r.decode_ok

@@ -44,8 +44,9 @@ def test_footer_stats_match_duckdb_metadata(spark):
 def test_footer_stats_corrupt_file_degrades(spark, tmp_path):
     (tmp_path / "bad.parquet").write_bytes(b"PAR1 this is not parquet")
     rows = read_parquet_footer_stats(spark, str(tmp_path / "*.parquet")).collect()
-    assert len(rows) == 1 and rows[0].row_group == -1
-    assert rows[0].column_name.startswith("__error")
+    assert len(rows) == 1 and rows[0].row_group is None
+    assert rows[0].column_name is None and not rows[0].decode_ok
+    assert rows[0].error
 
 
 def test_footer_row_counts_match_data(spark):

@@ -10,21 +10,25 @@ so a codec break fails here with the per-asset error message instead
 of an oracle diff (r10 ADVICE #4).
 
 It also pins the error-row contract of every public extractor (one
-valid asset, one garbage blob, one NULL media each), and that the
-module keeps ONE Arrow harness: every codec stage is a kernel passed to
+valid asset, one garbage blob, one NULL media each) and of every
+binaryFile reader (one corrupt file each), and that the package keeps
+ONE Arrow harness: every per-file stage is a kernel passed to
 ``_per_asset`` / ``_encode_each``, never another mapInPandas loop.
 """
 
 from __future__ import annotations
 
 import ast
-import inspect
+import json
+import pathlib
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from ingest_pipeline_spark.operators import multimodal
+import ingest_pipeline_spark
+from ingest_pipeline_spark.operators.extractors import extract_format_metadata
+from ingest_pipeline_spark.operators.fastq_scrub import scrub_fastq_files
 from ingest_pipeline_spark.operators.multimodal import (
     audio_autocorr_features,
     audio_silence_features,
@@ -51,6 +55,11 @@ from ingest_pipeline_spark.operators.multimodal import (
     video_shot_cuts,
     wav_encode,
     y4m_encode,
+)
+from ingest_pipeline_spark.sources.readers import (
+    read_excel_sidecars,
+    read_parquet_footer_stats,
+    read_yaml_sidecars,
 )
 from ingest_pipeline_spark.tables import load_table
 
@@ -190,18 +199,82 @@ def test_extractor_error_row_contract(spark, extract, media, features):
         assert all(r[c] is None for c in features), r
 
 
+def _binary_files(spark, d):
+    return spark.read.format("binaryFile").load(d)
+
+
+# (reader over a directory, corrupt file, its bytes, key column,
+# feature columns): each migrated binaryFile parser
+CORRUPT_FILES = [
+    (lambda s, d: read_yaml_sidecars(s, f"{d}/*"), "rslt.yml",
+     b"\xff\xfe{{ not yaml ][", "path", ["doc_json"]),
+    (lambda s, d: read_excel_sidecars(s, f"{d}/*"), "survey.xlsx",
+     b"corrupt bytes", "path", ["sheet", "row_idx", "row_json"]),
+    (lambda s, d: read_parquet_footer_stats(s, f"{d}/*"), "bad.parquet",
+     b"PAR1 this is not parquet", "file",
+     ["row_group", "column_name", "n_rows", "num_values", "null_count",
+      "compressed_bytes", "uncompressed_bytes", "has_minmax_stats"]),
+    (lambda s, d: scrub_fastq_files(_binary_files(s, d)), "bad.fastq.gz",
+     b"\x1f\x8b\x00junk", "path",
+     ["n_records", "n_retained", "sha_clean", "clean"]),
+]
+
+
+@pytest.mark.parametrize(
+    "read,name,blob,key,features", CORRUPT_FILES,
+    ids=["yaml", "excel", "parquet_footer", "fastq"],
+)
+def test_reader_corrupt_file_is_one_error_row(
+    spark, tmp_path, read, name, blob, key, features
+):
+    (tmp_path / name).write_bytes(blob)
+    df = read(spark, str(tmp_path))
+    assert df.columns == [key, *features, "decode_ok", "error"]
+    (r,) = df.collect()
+    assert r[key].endswith(name) and r["decode_ok"] is False
+    assert r["error"] is not None and 0 < len(r["error"]) <= 200
+    assert all(r[c] is None for c in features), r
+
+
+def test_extract_format_metadata_keeps_errors_in_meta_json(spark, tmp_path):
+    # the fifth migrated parser: extract_one already turns a parse error
+    # into metadata, so the harness columns are projected away
+    (tmp_path / "scan.czi").write_bytes(b"ZISRAWFILE" + b"\x00" * 8)
+    df = extract_format_metadata(_binary_files(spark, str(tmp_path)))
+    assert df.columns == ["file_name", "category", "width", "height",
+                          "n_items", "meta_json"]
+    (r,) = df.collect()
+    assert (r.file_name, r.category) == ("scan.czi", "CZI")
+    assert (r.width, r.height, r.n_items) == (None, None, None)
+    assert "truncated" in json.loads(r.meta_json)["error"]
+
+
+# every mapInPandas owner: the two harnesses, and two per-batch
+# aggregations that emit partial counts rather than rows per input
+_HARNESSES = {
+    "operators/multimodal.py": {"_per_asset", "_encode_each"},
+    "operators/similarity.py": {"gram_partials"},
+    "validate/jsonschema.py": {"json_docs_violation_counts"},
+}
+
+
 def test_multimodal_has_one_arrow_harness():
-    # a new codec feature is a kernel passed to _per_asset (decode) or
-    # _encode_each (encode) — never a new hand-copied mapInPandas loop
-    src = inspect.getsource(multimodal)
-    owners = [
-        node.name
-        for node in ast.parse(src).body
-        if isinstance(node, ast.FunctionDef)
-        for call in ast.walk(node)
-        if isinstance(call, ast.Call)
-        and isinstance(call.func, ast.Attribute)
-        and call.func.attr == "mapInPandas"
-    ]
-    assert sorted(owners) == ["_encode_each", "_per_asset"]
-    assert src.count("mapInPandas(") == 2
+    # a new codec feature or binaryFile parser is a kernel passed to
+    # _per_asset (decode) or _encode_each (encode) — never a new
+    # hand-copied mapInPandas loop, anywhere in the package
+    root = pathlib.Path(ingest_pipeline_spark.__file__).parent
+    owners, n_calls = {}, 0
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        n_calls += src.count("mapInPandas(")
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef) and any(
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "mapInPandas"
+                for call in ast.walk(node)
+            ):
+                rel = path.relative_to(root).as_posix()
+                owners.setdefault(rel, set()).add(node.name)
+    assert owners == _HARNESSES
+    assert n_calls == 4

@@ -5,12 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from ingest_pipeline_spark.operators.multimodal import (
-    decode_media,
-    documents_as_assets,
-    frame_sample_plan,
-    sniff_mime,
-)
+from ingest_pipeline_spark.operators.multimodal import frame_sample_plan, sniff_mime
 from ingest_pipeline_spark.sources.readers import listing, read_json_docs, read_tsv
 from ingest_pipeline_spark.sources.sinks import write_tsv
 from ingest_pipeline_spark.streaming.events import (
@@ -18,8 +13,6 @@ from ingest_pipeline_spark.streaming.events import (
     run_stream_once,
     windowed_event_counts,
 )
-
-import pytest
 
 
 def test_tsv_roundtrip(spark, tmp_path):
@@ -114,46 +107,6 @@ def test_json_docs(spark, tmp_path):
     assert row.files[0].rel_path == "x"
 
 
-def test_filelisting_datasource(spark, tmp_path):
-    """Custom Python Data Source: partition-per-subtree distributed walk."""
-    from ingest_pipeline_spark.sources.listing_datasource import register
-
-    register(spark)
-    (tmp_path / "ds1" / "sub").mkdir(parents=True)
-    (tmp_path / "ds2").mkdir()
-    (tmp_path / "ds1" / "a.tiff").write_bytes(b"xx")
-    (tmp_path / "ds1" / "sub" / "b.txt").write_bytes(b"yyy")
-    (tmp_path / "ds2" / "c.tiff").write_bytes(b"zzzz")
-
-    df = spark.read.format("filelisting").option("path", str(tmp_path)).load()
-    got = {r.rel_path: r.size for r in df.collect()}
-    assert got == {"ds1/a.tiff": 2, "ds1/sub/b.txt": 3, "ds2/c.tiff": 4}
-    # planning: two-level seeding — ds1's files, ds1/sub subtree, ds2's
-    # files each get a partition (a flat 100k-file root is batched, a
-    # giant subtree fans out one level deeper)
-    assert df.rdd.getNumPartitions() == 3
-
-    # a broken symlink must be skipped, not fail the task
-    os.symlink(str(tmp_path / "gone"), str(tmp_path / "ds2" / "dangling"))
-    again = spark.read.format("filelisting").option("path", str(tmp_path)).load()
-    assert sorted(r.rel_path for r in again.collect()) == [
-        "ds1/a.tiff", "ds1/sub/b.txt", "ds2/c.tiff",
-    ]
-
-    flt = (
-        spark.read.format("filelisting")
-        .option("path", str(tmp_path))
-        .option("pattern", r"\.tiff$")
-        .load()
-    )
-    assert sorted(r.rel_path for r in flt.collect()) == ["ds1/a.tiff", "ds2/c.tiff"]
-
-    missing = (
-        spark.read.format("filelisting").option("path", str(tmp_path / "no")).load()
-    )
-    assert missing.count() == 0
-
-
 def test_listing_walk(spark, tmp_path):
     (tmp_path / "ds1").mkdir()
     (tmp_path / "ds1" / "a.txt").write_text("aaa")
@@ -161,6 +114,10 @@ def test_listing_walk(spark, tmp_path):
     (tmp_path / "ds1" / "sub" / "b.bin").write_bytes(b"\x00" * 10)
     files = listing(spark, str(tmp_path))
     got = {r.rel_path: r.size for r in files.collect()}
+    assert got == {"ds1/a.txt": 3, os.path.join("ds1", "sub", "b.bin"): 10}
+    # a dangling symlink inside a subtree is skipped, not a failed task
+    os.symlink(str(tmp_path / "gone"), str(tmp_path / "ds1" / "sub" / "dangling"))
+    got = {r.rel_path: r.size for r in listing(spark, str(tmp_path)).collect()}
     assert got == {"ds1/a.txt": 3, os.path.join("ds1", "sub", "b.bin"): 10}
 
 
@@ -237,21 +194,12 @@ def test_dedup_stream_batch_mode(spark):
 
 
 def test_multimodal_assets_and_sniff(spark):
-    docs = spark.createDataFrame([(1, "hello world", "en", "s", 11)],
-                                 "doc_id long, text string, lang string, source string, n_chars long")
-    assets = documents_as_assets(docs)
-    a = assets.first()
-    assert bytes(a.media) == b"hello world" and a.modality == "text"
-
     magic = spark.createDataFrame(
         [(bytearray(b"\x89PNG\r\n"),), (bytearray(b"RIFF1234"),), (bytearray(b"zzzz"),)],
         "media binary",
     )
     mimes = [r.m for r in magic.select(sniff_mime(F.col("media")).alias("m")).collect()]
     assert mimes == ["image/png", "audio/wav", "application/octet-stream"]
-
-    with pytest.raises(NotImplementedError):
-        decode_media(assets)
 
 
 def test_frame_sample_plan(spark):
